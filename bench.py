@@ -420,6 +420,8 @@ def main() -> None:
             "sf1": sf1_block,
             "calib_sec": calib,
             "calib_parallel_sec": calib_par,
+            # The perf protocol's quiet-host rule (ROADMAP standing rules).
+            "host_quiet": calib_par <= 0.30,
             "sf": sf,
             # r12 VERDICT "what's wrong" #2: the driver invokes this
             # once, right after the gate suite, so this single sample

@@ -13,6 +13,11 @@ The wave loop disappears: Spark task retry + key-idempotent writes give
 the same convergence without driver-managed ranges (control.run_waves
 remains available for range-granular resume against reference-era
 checkpoint tables).
+
+The sink write is the job's only Spark action over the pipeline: its
+returned row count and the progress Observation both come from the
+execution that wrote the rows. Control DDL runs first, so a bad
+connection fails before any corpus pass.
 """
 
 from __future__ import annotations
@@ -26,6 +31,7 @@ from migrate_cassandra_to_mysql_spark.operators.snapshot import snapshot_pipelin
 from migrate_cassandra_to_mysql_spark.sinks import control
 from migrate_cassandra_to_mysql_spark.sinks.idempotent import (
     MYSQL,
+    WAL_DDL,
     Dialect,
     write_idempotent,
 )
@@ -78,9 +84,9 @@ def run_snapshot(
     if cfg.drop_bucket_col:
         df = df.drop("token_bucket")
 
-    # Progress counters ride the job itself via observe() — the reference's
-    # lock-guarded progress_counter (A7, snapshot_only_python.py:247-249)
-    # without a second pass over the data.
+    # Progress counters ride the sink's write action via observe() — the
+    # reference's lock-guarded progress_counter (A7,
+    # snapshot_only_python.py:247-249) without a second pass over the data.
     obs = Observation("snapshot_metrics")
     df = df.observe(
         obs,
@@ -88,38 +94,32 @@ def run_snapshot(
         F.min(cfg.key_col).alias("min_key"),
         F.max(cfg.key_col).alias("max_key"),
     )
-    source_count = df.count()
-    if cfg.wal:
-        # WAL rows are written per-batch DURING the distributed write, so
-        # the WAL table must exist before the first executor batch lands
-        # (reference creates it in init.sql up front, mysql-init/init.sql).
-        from migrate_cassandra_to_mysql_spark.sinks.idempotent import WAL_DDL
-
-        conn = connection_factory()
-        cur = conn.cursor()
-        cur.execute(WAL_DDL)
-        conn.commit()
-        conn.close()
-    write_idempotent(
-        df,
-        connection_factory,
-        cfg.table,
-        dialect=cfg.dialect,
-        key_cols=cfg.upsert_keys,
-        batch_size=cfg.batch_size,
-        wal=cfg.wal,
-    )
-
     conn = connection_factory()
-    control.bootstrap(conn)
-    if count_target is None:
-        cur = conn.cursor()
-        cur.execute(f"SELECT count(*) FROM {cfg.table}")  # noqa: S608
-        target_count = cur.fetchone()[0]
-    else:
-        target_count = count_target()
-    status = control.record_validation(conn, cfg.table, source_count, target_count)
-    conn.close()
+    try:
+        control.bootstrap(conn)
+        if cfg.wal:
+            # Executors write WAL rows per batch, so the table must exist
+            # before the write (the reference's mysql-init/init.sql).
+            conn.cursor().execute(WAL_DDL)
+            conn.commit()
+        source_count = write_idempotent(
+            df,
+            connection_factory,
+            cfg.table,
+            dialect=cfg.dialect,
+            key_cols=cfg.upsert_keys,
+            batch_size=cfg.batch_size,
+            wal=cfg.wal,
+        )
+        if count_target is None:
+            cur = conn.cursor()
+            cur.execute(f"SELECT count(*) FROM {cfg.table}")  # noqa: S608
+            target_count = cur.fetchone()[0]
+        else:
+            target_count = count_target()
+        status = control.record_validation(conn, cfg.table, source_count, target_count)
+    finally:
+        conn.close()
     return {
         "table": cfg.table,
         "source_count": source_count,

@@ -1,7 +1,7 @@
 """End-to-end pipeline queries: streaming snapshot + idempotent sink.
 
 These execute a real side-effecting pipeline (Structured Streaming drain /
-foreachPartition sink write) and return its verification result as a
+mapInArrow sink write) and return its verification result as a
 DataFrame, oracle-checked against the source count — i.e. the reference's
 own correctness criterion (`snapshot_use_pyspark.py:372-404`: migrated
 count must equal source count, diff=0).

@@ -11,9 +11,15 @@ Re-expresses the reference's write path as a reusable Spark sink:
 
 Design: Spark's JDBC writer is at-least-once under task retry; exactly-once-
 per-key comes from key-idempotent SQL (INSERT IGNORE / upsert) so retries
-are harmless. The sink runs in `foreachPartition` — one connection per
-partition, batches of `batch_size`, mirroring the reference's connection
-amortization (`snapshot_use_pyspark.py:194-208`).
+are harmless. The sink is one DataFrame action, `mapInArrow(...).collect()`:
+each partition opens at most one connection (on its first row), writes
+batches of `batch_size`, mirroring the reference's connection amortization
+(`snapshot_use_pyspark.py:194-208`), and yields its written count. Rows
+reach `executemany` as tuples built column by column from Spark's Arrow
+record batches, so no per-row `Row` object is ever made. Being a
+DataFrame action, the write also fills any `Observation` attached to its
+input, and `collect` keeps only successful task attempts, so the summed
+count is exact under task retry.
 
 The DB driver is injected (`connection_factory`) because neither MySQL nor
 a JDBC driver jar ships in this environment; tests drive the full sink
@@ -23,8 +29,9 @@ at the SQL-text level.
 
 from __future__ import annotations
 
+import itertools
 import time
-from collections.abc import Callable, Iterator
+from collections.abc import Callable, Iterable, Iterator, Mapping
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
@@ -103,7 +110,7 @@ def retry_with_backoff(
 
 
 def write_partition(
-    rows: Iterator,
+    rows: Iterable,
     connection_factory: Callable[[], object],
     table: str,
     cols: list[str],
@@ -116,56 +123,54 @@ def write_partition(
 ) -> int:
     """Write one partition's rows in idempotent batches. Returns rows written.
 
+    rows are value tuples in `cols` order, or mappings keyed by column
+    name. The connection opens on the first row, so an empty partition
+    opens none.
+
     Per batch: optional WAL STARTED row -> executemany insert -> WAL
     COMMITTED -> commit, all on one connection, with deadlock retry around
     the whole batch (rollback before each retry, as the reference does at
     snapshot_use_pyspark.py:323-329).
     """
-    conn = connection_factory()
-    cur = conn.cursor()
+    it = iter(rows)
+    first = next(it, None)
+    if first is None:
+        return 0
+    it = itertools.chain([first], it)
+    if isinstance(first, Mapping):
+        it = (tuple(row[c] for c in cols) for row in it)
     sql = (
         Dialect.insert_ignore(dialect, table, cols)
         if not key_cols
         else Dialect.upsert(dialect, table, cols, key_cols)
     )
+    conn = connection_factory()
+    cur = conn.cursor()
     written = 0
-    batch: list[tuple] = []
-    batch_seq = 0
+    try:
+        for batch_seq in itertools.count():
+            batch = list(itertools.islice(it, batch_size))
+            if not batch:
+                break
+            wal_args = (table, batch_seq, len(batch))
 
-    def flush() -> None:
-        def attempt() -> None:
-            if wal:
-                cur.execute(
-                    _wal_sql(dialect, "STARTED"), (table, batch_seq, len(batch))
-                )
-            cur.executemany(sql, batch)
-            if wal:
-                cur.execute(
-                    _wal_sql(dialect, "COMMITTED"), (table, batch_seq, len(batch))
-                )
-            conn.commit()
+            def attempt() -> None:
+                try:
+                    if wal:
+                        cur.execute(_wal_sql(dialect, "STARTED"), wal_args)
+                    cur.executemany(sql, batch)
+                    if wal:
+                        cur.execute(_wal_sql(dialect, "COMMITTED"), wal_args)
+                    conn.commit()
+                except Exception:
+                    conn.rollback()
+                    raise
 
-        def guarded() -> None:
-            try:
-                attempt()
-            except Exception:
-                conn.rollback()
-                raise
-
-        retry_with_backoff(guarded, max_retries=max_retries, sleep=sleep)
-
-    for row in rows:
-        batch.append(tuple(row[c] for c in cols))
-        if len(batch) >= batch_size:
-            flush()
+            retry_with_backoff(attempt, max_retries=max_retries, sleep=sleep)
             written += len(batch)
-            batch_seq += 1
-            batch = []
-    if batch:
-        flush()
-        written += len(batch)
-    cur.close()
-    conn.close()
+    finally:
+        cur.close()
+        conn.close()
     return written
 
 
@@ -194,6 +199,23 @@ CREATE TABLE IF NOT EXISTS snapshot_wal (
 """
 
 
+def _arrow_rows(batch) -> Iterator[tuple]:
+    """One record batch as row tuples, built column by column.
+
+    mapInArrow hands timestamps over tz-aware in the session time zone;
+    `local_timestamp` turns them back into the naive wall-clock values a
+    `Row` carries, so the database stores the same text either way."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    columns = []
+    for col in batch.columns:
+        if pa.types.is_timestamp(col.type) and col.type.tz is not None:
+            col = pc.local_timestamp(col)
+        columns.append(col.to_pylist())
+    return zip(*columns)
+
+
 def write_idempotent(
     df: DataFrame,
     connection_factory: Callable[[], object],
@@ -202,8 +224,11 @@ def write_idempotent(
     key_cols: list[str] | None = None,
     batch_size: int = 5000,
     wal: bool = False,
-) -> None:
-    """Distributed idempotent write: foreachPartition over the DataFrame.
+) -> int:
+    """Distributed idempotent write as one `mapInArrow` action over the
+    DataFrame. Returns the number of rows sent: the sum of the per-partition
+    counts from successful task attempts. Sent rows include those that
+    INSERT IGNORE skips on a rerun.
 
     connection_factory must be picklable (top-level function / partial) —
     it is shipped to executors. At 100 TB, ensure the DataFrame is
@@ -213,9 +238,11 @@ def write_idempotent(
     """
     cols = df.columns
 
-    def handle(it: Iterator) -> None:
-        write_partition(
-            it,
+    def handle(batches: Iterator) -> Iterator:
+        import pyarrow as pa
+
+        written = write_partition(
+            itertools.chain.from_iterable(map(_arrow_rows, batches)),
             connection_factory,
             table,
             cols,
@@ -224,5 +251,6 @@ def write_idempotent(
             batch_size=batch_size,
             wal=wal,
         )
+        yield pa.record_batch([pa.array([written], pa.int64())], names=["written"])
 
-    df.foreachPartition(handle)
+    return sum(r.written for r in df.mapInArrow(handle, "written long").collect())

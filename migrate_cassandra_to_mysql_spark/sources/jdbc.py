@@ -11,7 +11,7 @@ replace the reference's manual range fan-out for the MySQL side).
 
 NOTE: Spark's built-in JDBC writer is append/overwrite only — for the
 INSERT IGNORE / upsert semantics the reference depends on, use
-sinks/idempotent.py (foreachPartition with key-idempotent SQL). These
+sinks/idempotent.py (mapInArrow with key-idempotent SQL). These
 builders are for plain reads and bulk loads into keyless staging tables.
 """
 

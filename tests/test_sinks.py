@@ -86,6 +86,13 @@ def test_upsert_updates_in_place():
     c.close()
 
 
+def test_write_partition_empty_opens_no_connection():
+    def no_connection():
+        raise AssertionError("an empty partition must not connect")
+
+    assert sink.write_partition(iter([]), no_connection, "files", ["file_id"]) == 0
+
+
 class _Deadlock(Exception):
     errno = 1213
 
@@ -128,7 +135,7 @@ def test_mysql_sql_text():
 
 
 def test_write_idempotent_distributed(spark, sf_dir):
-    """Full foreachPartition path: write orders keys through the sink from
+    """Full mapInArrow path: write orders keys through the sink from
     executors, rerun, count once."""
     from migrate_cassandra_to_mysql_spark.sources.parquet import table as T
 
@@ -154,3 +161,40 @@ def test_write_idempotent_distributed(spark, sf_dir):
     n = c.execute("SELECT count(*) FROM dst").fetchone()[0]
     c.close()
     assert n == df.count()
+
+
+def test_write_idempotent_type_fidelity(spark):
+    """Each Spark type lands in sqlite as the same value a Row would give:
+    a naive 'YYYY-MM-DD HH:MM:SS' timestamp, ISO date, NULL as NULL and
+    binary as a BLOB. The returned count is the rows sent, on a rerun
+    too (INSERT OR IGNORE skips them but still sends them)."""
+    import functools
+
+    db = tempfile.mkdtemp() + "/types.db"
+    c = sqlite3.connect(db)
+    c.execute(
+        "CREATE TABLE typed (id INTEGER PRIMARY KEY, ts TEXT, d TEXT,"
+        " n INTEGER, x REAL, s TEXT, b BLOB)"
+    )
+    c.commit()
+    c.close()
+    df = spark.sql(
+        "SELECT * FROM VALUES"
+        " (1, TIMESTAMP '2024-03-05 06:07:08', DATE '2024-03-05', 7, 1.5D,"
+        "  'a', X'00FF'),"
+        " (2, TIMESTAMP '1999-12-31 23:59:59', DATE '1999-12-31',"
+        "  CAST(NULL AS INT), -0.25D, CAST(NULL AS STRING), X'')"
+        " AS t(id, ts, d, n, x, s, b)"
+    ).repartition(4)  # more partitions than rows: some are empty
+    factory = functools.partial(sink.sqlite_connection_factory, db)
+    for _ in range(2):
+        assert sink.write_idempotent(df, factory, "typed", dialect=sink.SQLITE) == 2
+    c = sqlite3.connect(db)
+    rows = c.execute(
+        "SELECT id, ts, d, n, x, s, b, typeof(b) FROM typed ORDER BY id"
+    ).fetchall()
+    c.close()
+    assert rows == [
+        (1, "2024-03-05 06:07:08", "2024-03-05", 7, 1.5, "a", b"\x00\xff", "blob"),
+        (2, "1999-12-31 23:59:59", "1999-12-31", None, -0.25, None, b"", "blob"),
+    ]

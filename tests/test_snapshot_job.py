@@ -4,9 +4,11 @@ against real sqlite, including rerun idempotency and NULL sanitize."""
 from __future__ import annotations
 
 import functools
+import random
 import sqlite3
 import tempfile
 
+import pytest
 from pyspark.sql import functions as F
 
 from migrate_cassandra_to_mysql_spark.jobs import SnapshotJobConfig, run_snapshot
@@ -87,3 +89,32 @@ def test_snapshot_job_detects_mismatch(spark, sf_dir):
     )
     assert summary["status"] == "MISMATCH"
     assert summary["diff"] > 0
+
+
+def test_snapshot_job_validates_the_rows_it_wrote(spark, sf_dir):
+    """A nondeterministic source keeps a different half of the rows on
+    every execution, so the verdict holds only if the count, the observed
+    metrics and the written rows all come from one execution. (Spark's
+    unseeded rand() fixes its seed when the plan is built, so it repeats
+    across actions; a Python coin flip does not.)"""
+    _, factory = _setup("job3")
+    coin = F.udf(lambda: random.random() < 0.5, "boolean").asNondeterministic()
+    summary = run_snapshot(_source(spark, sf_dir).where(coin()), factory, CFG)
+    assert summary["status"] == "OK"
+    assert summary["source_count"] == summary["target_count"] > 0
+    assert summary["metrics"]["rows_processed"] == summary["source_count"]
+
+
+def test_snapshot_job_fails_fast_on_a_bad_connection(spark, sf_dir):
+    """The control DDL runs before the write, so an unreachable target
+    raises before any Spark job reads the source."""
+
+    def unreachable():
+        raise ConnectionRefusedError("target down")
+
+    def never(_):
+        raise AssertionError("the source was read")
+
+    poisoned = _source(spark, sf_dir).where(F.udf(never, "boolean")("file_id"))
+    with pytest.raises(ConnectionRefusedError):
+        run_snapshot(poisoned, unreachable, CFG)
