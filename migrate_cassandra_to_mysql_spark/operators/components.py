@@ -238,6 +238,11 @@ def pagerank(
         sum(|rank' - rank|) drops below `tol`; `n_iter` becomes the cap.
         The delta is a 1-row aggregate action per round — it doubles as
         the in-loop materialization point, never a data collect.
+      - `outdeg_col`: name of a column of `edges` that already holds each
+        src's out-degree, used instead of aggregating it here.
+        PRECONDITION (unchecked): n_out equals the per-src row count on
+        every row — the count of `edges` rows with that src. A stale or
+        partial degree silently mis-weights every contribution.
 
     Determinism contract (shared with the DuckDB oracle): each
     contribution rank/outdeg is rounded to 12 dp and summed as
@@ -408,6 +413,12 @@ def personalized_pagerank(
     A seed id absent from the edge list's node set is dropped (it still
     counts in |S|, so its 1/|S| restart mass leaves the system — the
     caller contract is seeds drawn from the graph).
+
+    `outdeg_col` names a column of `edges` holding each src's
+    out-degree, used instead of aggregating it here. PRECONDITION
+    (unchecked): n_out equals the per-src row count on every row — the
+    count of `edges` rows with that src. A stale or partial degree
+    silently mis-weights every contribution.
 
     Determinism contract (identical to `pagerank`, shared with the
     DuckDB oracle twin): contributions round to 12 dp and sum as

@@ -656,9 +656,13 @@ def ivfpq_search(
     literal IN filter that reaches the codes scan as a parquet
     PartitionFilter — unprobed cells' files are never opened, and the
     rows that ARE read carry m code bytes, not d-dim vectors. Scoring is
-    a broadcast equi-join on cell + the ADC expression; the only shuffle
-    is the per-query top-k window. Same conventions as the inline
-    operators, so results equal similarity.ivfpq_topk row-for-row. The
+    a broadcast equi-join on cell + m ADC table lookups per candidate:
+    the query side computes each (query, probed cell)'s m x n_centers
+    distance table once, so the broadcast row is (q_id, q_cell, lut)
+    with m * n_centers doubles instead of the d-dim query vector (1 KB
+    per row at m=8, 16 centers; n_probe rows per query). The only
+    shuffle is the per-query top-k window. Same conventions as the
+    inline operators, so results equal similarity.ivfpq_topk row-for-row. The
     index's persisted encoding mode (meta/) selects raw or residual ADC
     automatically — a query cannot accidentally score residual codes
     with raw query vectors. The codes read retries through a concurrent
@@ -680,8 +684,6 @@ def ivfpq_search(
 
     cell_centroids, centers = load_ivfpq_codebooks(spark, index_dir)
     residual = load_ivfpq_residual_flag(spark, index_dir)
-    n_centers = len(centers[0])
-    sub = len(centers[0][0])
     ranked = sim.ranked_cells_expr("qv", cell_centroids)
     q = queries.select(
         "q_id",
@@ -715,22 +717,18 @@ def ivfpq_search(
         codes = codes.join(
             F.broadcast(allowed.select("vec_id")), "vec_id", "left_semi"
         )
-    qv_sql = (
-        sim._residual_sql("qv", "q_cell", cell_centroids)
-        if residual
-        else "qv"
+    q_lut = sim.adc_query_side(
+        q, centers, cell_centroids if residual else None
     )
     cand = (
-        F.broadcast(q)
+        F.broadcast(q_lut)
         .join(codes, F.col("cell") == F.col("q_cell"))
         .where(F.col("vec_id") != F.col("q_id"))
         .select(
             "q_id",
             F.col("vec_id").alias("n_id"),
             "cell",
-            sim._adc_expr(centers, n_centers, sub, qv_sql=qv_sql).alias(
-                "approx_dist"
-            ),
+            sim.adc_lookup_expr(len(centers)).alias("approx_dist"),
         )
     )
     w = Window.partitionBy("q_id").orderBy(F.asc("approx_dist"), F.asc("n_id"))

@@ -383,10 +383,14 @@ def ivf_topk(
 
 # Literal-codebook expressions are generated as SQL STRINGS (one
 # spark.sql parse) rather than nested Column constructors: a 4x4x16
-# codebook otherwise costs ~2000 py4j round-trips PER PLAN BUILD —
-# measured 0.6-1.3s of pure driver-side construction time per ANN query
-# (the execution plan is identical either way; same trick as
-# hyperplane_buckets above).
+# codebook otherwise costs ~2000 py4j round-trips PER PLAN BUILD (same
+# trick as hyperplane_buckets above). Keep each literal codebook ONCE
+# per plan: ADC distances live in one per-query table (adc_query_side)
+# that candidates index by code, and a residual is one projected column
+# the code folds read. Catalyst re-analyzes every expression on each
+# DataFrame call, so an expression that re-embeds the codebook per
+# center per subspace (~200k characters of SQL per ADC column at m=4,
+# 16 centers, 8 cells) costs ~1 s of planning per ANN request.
 
 
 def _sql_vec(values) -> str:
@@ -473,20 +477,17 @@ def _subvec(col_name: str, mi: int, sub: int) -> F.Column:
     return F.slice(F.col(col_name), mi * sub + 1, sub)
 
 
-def _pq_code_cols(
-    centers: list, n_centers: int, sub: int, vec_sql: str = "v"
-) -> list:
-    """Per-subspace PQ code expressions (argmin squared-L2 against the
-    literal codebook). array_min over (d, j) structs compares d first,
-    then j ascending — so a distance tie picks the LOWEST center id,
-    matching the oracle's ORDER BY d, j. (Pairing negation with
-    array_min, as an earlier draft did, double-inverts the tie-break.)
-    `vec_sql` is the SQL expression for the vector being encoded — "v"
-    for raw encoding, a zip_with residual expression for IVFADC-proper
-    residual encoding."""
+def _pq_code_cols(centers: list, n_centers: int, sub: int) -> list:
+    """Per-subspace PQ code expressions of the array column `v` (argmin
+    squared-L2 against the literal codebook). array_min over (d, j)
+    structs compares d first, then j ascending — so a distance tie picks
+    the LOWEST center id, matching the oracle's ORDER BY d, j. (Pairing
+    negation with array_min, as an earlier draft did, double-inverts the
+    tie-break.) Residual encoding projects the residual as `v` first
+    (ivfpq_encode), so no fold re-derives it."""
     cols = []
     for mi in range(len(centers)):
-        sv = f"slice({vec_sql}, {mi * sub + 1}, {sub})"
+        sv = f"slice(v, {mi * sub + 1}, {sub})"
         structs = ", ".join(
             f"named_struct('d', {_sql_sqdist(sv, centers[mi][j])}, 'j', {j})"
             for j in range(n_centers)
@@ -497,22 +498,48 @@ def _pq_code_cols(
     return cols
 
 
-def _adc_expr(
-    centers: list, n_centers: int, sub: int, qv_sql: str = "qv"
-) -> F.Column:
-    """Asymmetric-distance expression: per subspace, distance from the
-    query's sub-vector (`qv_sql`, default the `qv` column; a residual
-    expression in residual mode) to the candidate's chosen center via
-    element_at over the literal per-center distance array, summed across
-    subspaces and rounded to 6 dp (cross-engine rule)."""
-    terms = []
-    for mi in range(len(centers)):
-        qsv = f"slice({qv_sql}, {mi * sub + 1}, {sub})"
-        dists = ", ".join(
-            _sql_sqdist(qsv, centers[mi][j]) for j in range(n_centers)
+def adc_query_side(
+    q: DataFrame, centers: list, cell_centroids: list | None = None
+) -> DataFrame:
+    """`q` with its `qv` column replaced by `lut`, the query's ADC
+    distance table: lut[mi][j] is the 6-dp squared-L2 from the query's
+    sub-vector mi to PQ center j. Built once per query row — per (query,
+    probed cell) after a probe explode — so each candidate costs m
+    lookups (adc_lookup_expr) instead of m * n_centers sqdist folds
+    (Jégou et al. 2011 §III.A); the broadcast row grows from d to
+    m * n_centers doubles. With `cell_centroids` (residual mode) the
+    table is built from the query's residual against its probed cell
+    `q_cell`, projected once as `qr`."""
+    keys = [c for c in q.columns if c != "qv"]
+    vec = "qv"
+    if cell_centroids is not None:
+        q = q.select(
+            *keys,
+            F.expr(_residual_sql("qv", "q_cell", cell_centroids)).alias("qr"),
         )
-        terms.append(f"element_at(array({dists}), codes[{mi}] + 1)")
-    return F.expr(f"round({' + '.join(terms)}, 6)")
+        vec = "qr"
+    sub = len(centers[0][0])
+    tables = ", ".join(
+        "array("
+        + ", ".join(
+            _sql_sqdist(f"slice({vec}, {mi * sub + 1}, {sub})", c)
+            for c in sub_centers
+        )
+        + ")"
+        for mi, sub_centers in enumerate(centers)
+    )
+    return q.select(*keys, F.expr(f"array({tables})").alias("lut"))
+
+
+def adc_lookup_expr(m: int) -> F.Column:
+    """Asymmetric distance of a candidate's `codes` against the joined
+    query table `lut`: per subspace one element_at lookup, summed in
+    subspace order and rounded to 6 dp (cross-engine rule)."""
+    terms = " + ".join(
+        f"element_at(element_at(lut, {mi + 1}), codes[{mi}] + 1)"
+        for mi in range(m)
+    )
+    return F.expr(f"round({terms}, 6)")
 
 
 def _residual_sql(vec_col: str, cell_col: str, cell_centroids: list) -> str:
@@ -555,8 +582,10 @@ def pq_topk(
     (d/m) floats) and inlined as literals, so BOTH encoding and ADC
     scoring are pure map-side expression trees — the only shuffle is the
     final per-query top-k window, and the corpus is never reshuffled.
-    Encoding ties break toward the lowest center id; distances round to
-    6 dp before ranking (cross-engine rule).
+    Each query's m x n_centers distance table is computed once on the
+    broadcast side (m * n_centers doubles per query row), so a candidate
+    costs m table lookups. Encoding ties break toward the lowest center
+    id; distances round to 6 dp before ranking (cross-engine rule).
     """
     e = _base(embeddings)
     if centers is None:
@@ -569,12 +598,12 @@ def pq_topk(
         F.col("vec_id").alias("q_id"), F.col("v").alias("qv")
     )
     cand = (
-        F.broadcast(q)
+        F.broadcast(adc_query_side(q, centers))
         .join(encoded, F.col("vec_id") != F.col("q_id"))
         .select(
             "q_id",
             F.col("vec_id").alias("n_id"),
-            _adc_expr(centers, n_centers, sub).alias("approx_dist"),
+            adc_lookup_expr(len(centers)).alias("approx_dist"),
         )
     )
     w = Window.partitionBy("q_id").orderBy(
@@ -616,7 +645,9 @@ def ivfpq_encode(
     resolution on exactly the distances that rank neighbors inside a
     probed cell. Raw encoding (the default) stays the SQL-oracle-able
     catalog form. The residual is one map-side zip_with against the
-    literal centroid table — the encode stays shuffle-free."""
+    literal centroid table, projected once per row as its own column
+    that all m * n_centers code folds read — the encode stays
+    shuffle-free."""
     e = _base(embeddings)
     n_centers = len(centers[0])
     sub = len(centers[0][0])
@@ -624,15 +655,16 @@ def ivfpq_encode(
     with_cell = e.select(
         "vec_id", "v", ranked[0]["c"].cast("long").alias("cell")
     )
-    vec_sql = (
-        _residual_sql("v", "cell", cell_centroids) if residual else "v"
-    )
+    if residual:
+        with_cell = with_cell.select(
+            "vec_id",
+            "cell",
+            F.expr(_residual_sql("v", "cell", cell_centroids)).alias("v"),
+        )
     return with_cell.select(
         "vec_id",
         "cell",
-        F.array(
-            *_pq_code_cols(centers, n_centers, sub, vec_sql=vec_sql)
-        ).alias("codes"),
+        F.array(*_pq_code_cols(centers, n_centers, sub)).alias("codes"),
     )
 
 
@@ -680,7 +712,9 @@ def ivfpq_topk(
         lowest c_id (ivf_topk's rule);
       - queries probe their n_probe nearest cells (sim desc, c_id asc);
       - candidate scoring: ADC against the PQ codebook (pq_topk's rule —
-        per-subspace 6-dp-rounded squared-L2, summed, re-rounded);
+        per-subspace 6-dp-rounded squared-L2, summed, re-rounded), read
+        from a distance table built once per (query, probed cell), so a
+        candidate costs m lookups;
       - per-query top-k on (approx_dist asc, n_id asc).
 
     Both codebooks default to the deterministic first-K convention (and
@@ -695,12 +729,13 @@ def ivfpq_topk(
     literal-expression work: encode, assign, and probe all ride the
     corpus/query scans, the scoring join is a broadcast equi-join on
     cell, and the only shuffle is the top-k window (WindowGroupLimit caps
-    it map-side).
+    it map-side). The broadcast side carries one (q_id, q_cell, lut) row
+    per (query, probed cell): m * n_centers doubles, not the d-dim
+    query vector.
     """
     e = _base(embeddings)
     if centers is None:
         centers = _first_k_pq_centers(e, m, n_centers)
-    sub = len(centers[0][0])
     if cell_centroids is None:
         cell_centroids = first_k_cell_centroids(embeddings, n_cells)
 
@@ -717,20 +752,16 @@ def ivfpq_topk(
             )
         ).alias("q_cell"),
     )
-    qv_sql = (
-        _residual_sql("qv", "q_cell", cell_centroids) if residual else "qv"
-    )
+    q_lut = adc_query_side(q, centers, cell_centroids if residual else None)
     cand = (
-        F.broadcast(q)
+        F.broadcast(q_lut)
         .join(encoded, F.col("cell") == F.col("q_cell"))
         .where(F.col("vec_id") != F.col("q_id"))
         .select(
             "q_id",
             F.col("vec_id").alias("n_id"),
             "cell",
-            _adc_expr(centers, n_centers, sub, qv_sql=qv_sql).alias(
-                "approx_dist"
-            ),
+            adc_lookup_expr(len(centers)).alias("approx_dist"),
         )
     )
     w = Window.partitionBy("q_id").orderBy(F.asc("approx_dist"), F.asc("n_id"))

@@ -652,3 +652,208 @@ def test_merge_rejects_codebook_mismatch(spark, sf_dir, tmp_path_factory):
         ivf_index.merge_indexes(
             spark, [a, b], str(tmp_path_factory.mktemp("vmerged"))
         )
+
+
+# ---------------------------------------------------------------------------
+# Frozen reference for ADC scoring and residual encoding: the
+# per-candidate form (every candidate re-folds all m x n_centers
+# sub-distances against the literal codebook, and in residual mode every
+# fold re-derives the residual). Self-contained on purpose — the inline
+# and persisted paths share their expression helpers, so a regression in
+# those helpers moves both sides of the inline == persisted tests alike;
+# it cannot move this copy.
+# ---------------------------------------------------------------------------
+
+
+def _ref_vec(values) -> str:
+    return "array(" + ", ".join(f"{float(x)!r}D" for x in values) + ")"
+
+
+def _ref_sqdist(col_expr: str, center: list) -> str:
+    return (
+        f"round(aggregate(zip_with({col_expr}, {_ref_vec(center)},"
+        f" (a, b) -> (a - b) * (a - b)), 0.0D, (acc, x) -> acc + x), 6)"
+    )
+
+
+def _ref_residual(vec_col: str, cell_col: str, cells: list) -> str:
+    table = "array(" + ", ".join(_ref_vec(cv) for cv in cells) + ")"
+    return (
+        f"zip_with({vec_col}, element_at({table}, cast({cell_col} AS int)"
+        f" + 1), (x, y) -> x - y)"
+    )
+
+
+def _ref_codes(centers: list, vec_sql: str):
+    sub = len(centers[0][0])
+    cols = []
+    for mi, sub_centers in enumerate(centers):
+        sv = f"slice({vec_sql}, {mi * sub + 1}, {sub})"
+        structs = ", ".join(
+            f"named_struct('d', {_ref_sqdist(sv, c)}, 'j', {j})"
+            for j, c in enumerate(sub_centers)
+        )
+        cols.append(F.expr(f"cast(array_min(array({structs})).j AS int)"))
+    return F.array(*cols)
+
+
+def _ref_adc(centers: list, qv_sql: str):
+    sub = len(centers[0][0])
+    terms = []
+    for mi, sub_centers in enumerate(centers):
+        qsv = f"slice({qv_sql}, {mi * sub + 1}, {sub})"
+        dists = ", ".join(_ref_sqdist(qsv, c) for c in sub_centers)
+        terms.append(f"element_at(array({dists}), codes[{mi}] + 1)")
+    return F.expr(f"round({' + '.join(terms)}, 6)")
+
+
+def _ref_topk(q, codes, centers, k, cells=None, residual=False):
+    """(q_id, n_id, approx_dist, rnk) by the frozen per-candidate ADC.
+    `q` is (q_id, qv[, q_cell]); with q_cell the join is on the cell."""
+    from pyspark.sql import Window
+
+    qv_sql = _ref_residual("qv", "q_cell", cells) if residual else "qv"
+    cond = F.col("vec_id") != F.col("q_id")
+    if "q_cell" in q.columns:
+        cond = (F.col("cell") == F.col("q_cell")) & cond
+    cand = F.broadcast(q).join(codes, cond).select(
+        "q_id",
+        F.col("vec_id").alias("n_id"),
+        _ref_adc(centers, qv_sql).alias("approx_dist"),
+    )
+    w = Window.partitionBy("q_id").orderBy("approx_dist", "n_id")
+    return cand.withColumn("rnk", F.row_number().over(w).cast("long")).where(
+        F.col("rnk") <= k
+    )
+
+
+def _rows(df):
+    return sorted(
+        (r["q_id"], r["n_id"], r["approx_dist"], r["rnk"])
+        for r in df.select("q_id", "n_id", "approx_dist", "rnk").collect()
+    )
+
+
+@pytest.fixture(scope="module")
+def frozen_setup(spark, sf_dir):
+    """First-K codebooks (4 cells, m=4 x 4 centers) plus one raw and one
+    residual persisted index built with them."""
+    from migrate_cassandra_to_mysql_spark.operators.similarity import (
+        first_k_cell_centroids,
+        first_k_pq_centers,
+    )
+
+    emb = T(spark, sf_dir, "embeddings")
+    cells = first_k_cell_centroids(emb, 4)
+    centers = first_k_pq_centers(emb, 4, 4)
+    dirs = {}
+    for residual in (False, True):
+        d = tempfile.mkdtemp(prefix=f"ivfpq_frozen_{int(residual)}_")
+        ivf_index.build_ivfpq_index(emb, d, cells, centers, residual=residual)
+        dirs[residual] = d
+    return emb, cells, centers, dirs
+
+
+def test_residual_encode_equals_frozen_reference(spark, frozen_setup):
+    from migrate_cassandra_to_mysql_spark.operators.similarity import (
+        ivfpq_encode,
+        ranked_cells_expr,
+    )
+
+    emb, cells, centers, _ = frozen_setup
+    with_cell = emb.select(
+        "vec_id", F.col("embedding").cast("array<double>").alias("v")
+    ).withColumn("cell", ranked_cells_expr("v", cells)[0]["c"].cast("long"))
+    want = sorted(
+        (r["vec_id"], r["cell"], tuple(r["codes"]))
+        for r in with_cell.select(
+            "vec_id",
+            "cell",
+            _ref_codes(centers, _ref_residual("v", "cell", cells)).alias(
+                "codes"
+            ),
+        ).collect()
+    )
+    got = sorted(
+        (r["vec_id"], r["cell"], tuple(r["codes"]))
+        for r in ivfpq_encode(emb, cells, centers, residual=True).collect()
+    )
+    assert got == want
+    # the comparison is only meaningful if residual codes actually vary
+    assert len({codes for _, _, codes in got}) > 10
+
+
+@pytest.mark.parametrize("residual", [False, True])
+def test_adc_scoring_equals_frozen_reference(
+    spark, sf_dir, frozen_setup, residual
+):
+    """ivfpq_search, ivfpq_topk and pq_topk return exactly the rows the
+    per-candidate ADC form returns over the same codes."""
+    from migrate_cassandra_to_mysql_spark.operators.similarity import (
+        ivfpq_encode,
+        ivfpq_topk,
+        pq_topk,
+        ranked_cells_expr,
+    )
+
+    emb, cells, centers, dirs = frozen_setup
+    q = _queries(spark, sf_dir)
+    q_cells = q.select(
+        "q_id",
+        "qv",
+        F.explode(
+            F.slice(
+                F.transform(
+                    ranked_cells_expr("qv", cells), lambda x: x["c"].cast("long")
+                ),
+                1,
+                2,
+            )
+        ).alias("q_cell"),
+    )
+    codes = ivfpq_encode(emb, cells, centers, residual=residual)
+    want = _rows(_ref_topk(q_cells, codes, centers, 5, cells, residual))
+    assert len(want) == 5 * q.count()
+    served = ivf_index.ivfpq_search(
+        spark, dirs[residual], q, k=5, n_probe=2
+    )
+    assert _rows(served) == want
+    inline = ivfpq_topk(
+        emb, query_mod=100, k=5, n_probe=2, cell_centroids=cells,
+        centers=centers, residual=residual,
+    )
+    assert _rows(inline) == want
+    if not residual:
+        flat_codes = emb.select(
+            "vec_id",
+            _ref_codes(
+                centers, "cast(embedding AS array<double>)"
+            ).alias("codes"),
+        )
+        assert _rows(pq_topk(emb, query_mod=100, k=5, centers=centers)) == (
+            _rows(_ref_topk(q, flat_codes, centers, 5))
+        )
+
+
+def test_adc_plan_scores_by_table_lookup(spark, sf_dir, frozen_setup):
+    """Structural guard. The candidate-side approx_dist is m element_at
+    lookups into the per-query table — no sqdist fold (zip_with /
+    aggregate) runs per candidate. The residual encode projects the
+    residual once: the cell-centroid lookup appears once in the plan,
+    not once per (subspace, center) fold."""
+    from migrate_cassandra_to_mysql_spark.operators.similarity import (
+        ivfpq_encode,
+    )
+
+    emb, cells, centers, dirs = frozen_setup
+    df = ivf_index.ivfpq_search(
+        spark, dirs[True], _queries(spark, sf_dir), k=3, n_probe=2
+    )
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    [scoring] = [l for l in plan.splitlines() if " AS approx_dist#" in l]
+    assert "zip_with" not in scoring and "aggregate(" not in scoring
+    assert scoring.count("element_at(element_at(lut") == len(centers)
+
+    enc = ivfpq_encode(emb, cells, centers, residual=True)
+    plan = enc._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.count("element_at(") == 1

@@ -44,12 +44,12 @@ def main() -> None:
     orig = DataFrame.localCheckpoint
     captured: list[str] = []
 
-    def capturing(self, eager=True):
+    def capturing(self, *args, **kwargs):
         plan = self._sc._jvm.PythonSQLUtils.explainString(
             self._jdf.queryExecution(), "formatted"
         )
         captured.append(plan)
-        return orig(self, eager=eager)
+        return orig(self, *args, **kwargs)
 
     DataFrame.localCheckpoint = capturing
     try:
