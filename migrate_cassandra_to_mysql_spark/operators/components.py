@@ -25,15 +25,14 @@ Scale rationale (100 TB):
     non-convergence instead of silently looping.
   - Per round only (id, label) pairs shuffle — 16 bytes/node — never the
     documents themselves.
-  - Each round's frame is EAGERLY localCheckpoint-ed: that materializes
-    the round AND truncates the logical plan (plain persist leaves the
-    full tree in place — `labels` is referenced twice per round, via the
-    neighbor-min join and the convergence probe, so the analyzed plan
-    would DOUBLE per iteration and Catalyst's own plan stringification
-    OOMs the driver near max_iter on adversarial chain graphs; the same
-    failure pagerank's dangling term exposed, pinned by the long-chain
-    test). The convergence probe is a control-plane-sized action
-    (isEmpty on a changed-labels frame), not a data collect.
+  - Every loop in this module runs on `lineage.checkpointed_rounds`:
+    each round is localCheckpoint-ed (O(1)-deep lineage — a frame
+    referenced twice per round would otherwise double its analyzed plan
+    every iteration, and Catalyst's plan stringification alone OOMs the
+    driver on long-chain graphs) and materialized in one job, and the
+    previous round's blocks are freed. Convergence probes are full-frame
+    1-row aggregates that double as that materializing job, never a
+    data collect.
 
 The reference has no graph step (its dedup is key-level INSERT IGNORE,
 snapshot_use_pyspark.py:456); this is engine-added surface for the
@@ -46,7 +45,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
-from .lineage import free_local_checkpoint
+from .lineage import checkpointed_rounds, free_local_checkpoint
 
 
 def connected_components(
@@ -85,55 +84,29 @@ def connected_components(
         .select("id", F.col("id").alias("component"))
         .localCheckpoint(eager=True)
     )
-    # The frame whose executor blocks the NEXT round may free — always
-    # the underlying checkpointed frame (a projection wrapper on top of
-    # it would not resolve to the LogicalRDD free_local_checkpoint
-    # needs).
-    labels_ckpt = labels
+
+    def step(labels: DataFrame) -> DataFrame:
+        # Each node's new label: min over its own and neighbors'. The
+        # old component is right there in the join, so the row also
+        # flags whether it changed — the round's probe sums the flags.
+        neighbor_min = (
+            sym.join(labels, sym["d"] == labels["id"])
+            .groupBy(F.col("s").alias("id"))
+            .agg(F.min("component").alias("nbr_min"))
+        )
+        new = F.least("component", F.coalesce("nbr_min", "component"))
+        return labels.join(neighbor_min, "id", "left").select(
+            "id",
+            new.alias("component"),
+            (new < F.col("component")).cast("int").alias("chg"),
+        )
+
     try:
-        for _ in range(max_iter):
-            # Each node's new label: min over its own and neighbors'.
-            neighbor_min = (
-                sym.join(labels, sym["d"] == labels["id"])
-                .groupBy(F.col("s").alias("id"))
-                .agg(F.min("component").alias("nbr_min"))
-            )
-            # One job per round (r15): the new-label row can tell
-            # INLINE whether it changed (the old component is right
-            # there in the join), so the round's materialization and
-            # the convergence probe fuse — a lazy localCheckpoint mark
-            # whose first action is a full-frame SUM of the change
-            # flags (an aggregate computes every partition, so the
-            # checkpoint is fully materialized by it; limit-style
-            # probes must NOT be used here — a partial scan would
-            # truncate lineage with partitions never computed). The
-            # previous shape ran an eager checkpoint job PLUS a
-            # new⋈old probe join per round. Lineage truncation is
-            # unchanged (see module docstring).
-            new_labels = labels.join(neighbor_min, "id", "left").select(
-                "id",
-                F.least(
-                    "component", F.coalesce("nbr_min", "component")
-                ).alias("component"),
-                (
-                    F.least("component", F.coalesce("nbr_min", "component"))
-                    < F.col("component")
-                )
-                .cast("int")
-                .alias("chg"),
-            ).localCheckpoint(eager=False)
-            n_changed = new_labels.agg(F.sum("chg")).collect()[0][0] or 0
-            # The aggregate was the materializing action — the previous
-            # round's checkpoint blocks are now dead weight; free them
-            # to keep executor storage O(1) across rounds
-            # (DataFrame.unpersist is a no-op on localCheckpoint
-            # blocks; see operators/lineage).
-            prev_ckpt = labels_ckpt
-            labels_ckpt = new_labels
-            labels = new_labels.select("id", "component")
-            free_local_checkpoint(prev_ckpt)
-            if n_changed == 0:
-                return labels
+        for labels, n_changed in checkpointed_rounds(
+            labels, step, max_iter, F.sum("chg")
+        ):
+            if not n_changed:
+                return labels.select("id", "component")
         raise RuntimeError(
             f"connected_components did not converge in {max_iter} rounds"
         )
@@ -212,6 +185,44 @@ def canonical_keep(
     )
 
 
+def _out_weighted(
+    edges: DataFrame, src: str, dst: str, outdeg_col: str | None
+) -> tuple[DataFrame, DataFrame]:
+    """The persisted (src, dst, n_out) edge frame pagerank and PPR walk,
+    plus the lazy (src, n_out) out-degree frame. An `outdeg_col` already
+    on every edge row (the memoized co-purchase pair parquet) skips the
+    edge-sized aggregation + SortMergeJoin the default path pays."""
+    if outdeg_col is not None:
+        n_out = F.col(outdeg_col).cast("long").alias("n_out")
+        outdeg = edges.select(F.col(src).alias("src"), n_out).dropDuplicates(
+            ["src"]
+        )
+        ed = edges.select(
+            F.col(src).alias("src"), F.col(dst).alias("dst"), n_out
+        )
+    else:
+        e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
+        outdeg = e.groupBy("src").agg(
+            F.count(F.lit(1)).cast("long").alias("n_out")
+        )
+        ed = e.join(outdeg, "src")
+    return ed.persist(StorageLevel.MEMORY_AND_DISK), outdeg
+
+
+def _contrib_sums(ed: DataFrame, ranks: DataFrame) -> DataFrame:
+    """(dst, s): the walked-in mass per node, sum over u->dst of
+    rank(u)/n_out(u), each term rounded to 12 dp and summed as
+    DECIMAL(28,12) — exact and order-independent under any join
+    strategy or partitioning (the oracle twins' contract)."""
+    contrib = ed.join(ranks, ed["src"] == ranks["node"]).select(
+        "dst",
+        F.round(F.col("rank") / F.col("n_out"), 12)
+        .cast("decimal(28,12)")
+        .alias("c"),
+    )
+    return contrib.groupBy("dst").agg(F.sum("c").alias("s"))
+
+
 def pagerank(
     edges: DataFrame,
     src: str = "src",
@@ -236,8 +247,10 @@ def pagerank(
         it, every node has out-edges, so the two variants coincide.
       - `tol`: when set, iteration stops early once the L1 delta
         sum(|rank' - rank|) drops below `tol`; `n_iter` becomes the cap.
-        The delta is a 1-row aggregate action per round — it doubles as
-        the in-loop materialization point, never a data collect.
+        Each round's row carries its own |rank' - rank| (the update's
+        left side is the previous ranks, not the node set), and the
+        delta is the round's probe — the 1-row aggregate that
+        materializes the round, never a data collect or a second join.
       - `outdeg_col`: name of a column of `edges` that already holds each
         src's out-degree, used instead of aggregating it here.
         PRECONDITION (unchecked): n_out equals the per-src row count on
@@ -254,42 +267,16 @@ def pagerank(
 
     Scale shape: the loop shuffles only (node, rank) pairs — 16 bytes per
     node per iteration — against a persisted (src, dst, outdeg) edge
-    frame; each iteration's ranks are EAGERLY localCheckpoint-ed, which
-    both materializes the round and truncates the logical plan, so
-    lineage is O(1) deep in fact, not just intent (plain persist keeps
-    the full logical tree — with the dangling term referencing ranks
-    twice per round the plan doubles per iteration and Catalyst's plan
-    stringification alone OOMs the driver; caught by the dangling
-    tests). N rides as a broadcast 1-row aggregate, never a driver-side
-    count action. localCheckpoint stores blocks on executors — a
-    production run that must survive executor loss should set a reliable
-    `spark.sparkContext.setCheckpointDir` deployment-side and swap in
-    `checkpoint()`; semantics are identical.
+    frame; rounds run on `lineage.checkpointed_rounds`, so lineage is
+    O(1) deep in fact, not just intent (the dangling term references
+    ranks twice per round). N rides as a broadcast 1-row aggregate,
+    never a driver-side count action. localCheckpoint stores blocks on
+    executors — a production run that must survive executor loss should
+    set a reliable `spark.sparkContext.setCheckpointDir` deployment-side
+    and swap in `checkpoint()`; semantics are identical.
     """
     e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-    # outdeg_col (r15, guide §2.4): an edge source that already carries
-    # each src's out-degree on every row (the memoized co-purchase pair
-    # parquet precomputes it once at build) skips the edge-sized
-    # outdeg aggregation + join here — at sf0.1 that join planned as a
-    # SortMergeJoin (two exchanges + two sorts of the edge set) on
-    # every pagerank/ppr call. Values are identical by construction
-    # (pinned by tests/test_pagerank.py); the default path is unchanged
-    # for callers without a precomputed degree.
-    if outdeg_col is not None:
-        outdeg = edges.select(
-            F.col(src).alias("src"),
-            F.col(outdeg_col).cast("long").alias("n_out"),
-        ).dropDuplicates(["src"])
-        ed = edges.select(
-            F.col(src).alias("src"),
-            F.col(dst).alias("dst"),
-            F.col(outdeg_col).cast("long").alias("n_out"),
-        ).persist(StorageLevel.MEMORY_AND_DISK)
-    else:
-        outdeg = e.groupBy("src").agg(
-            F.count(F.lit(1)).cast("long").alias("n_out")
-        )
-        ed = e.join(outdeg, "src").persist(StorageLevel.MEMORY_AND_DISK)
+    ed, outdeg = _out_weighted(edges, src, dst, outdeg_col)
     nodes = (
         e.select(F.col("src").alias("node"))
         .union(e.select(F.col("dst").alias("node")))
@@ -307,80 +294,42 @@ def pagerank(
         .select("node", (F.lit(1.0) / F.col("n_nodes")).alias("rank"))
         .localCheckpoint(eager=True)
     )
+
+    def step(ranks: DataFrame) -> DataFrame:
+        sums = _contrib_sums(ed, ranks)
+        # With `tol` the previous ranks are the left side, so each row
+        # carries its old rank for the L1 probe. The default keeps the
+        # node set there: the plain update needs no old rank.
+        left = ranks if tol is not None else nodes
+        base = left.join(sums, left["node"] == sums["dst"], "left")
+        extra = F.lit(0.0)
+        if redistribute_dangling:
+            # 1-row broadcast scalar: total rank mass on dangling
+            # nodes this round (same order-independent DECIMAL sum).
+            d_mass = dangling.join(ranks, "node").agg(
+                F.coalesce(
+                    F.sum(
+                        F.round(F.col("rank"), 12).cast("decimal(28,12)")
+                    ).cast("double"),
+                    F.lit(0.0),
+                ).alias("d_mass")
+            )
+            base = base.crossJoin(F.broadcast(d_mass))
+            extra = F.col("d_mass") / F.col("n_nodes")
+        rank = teleport / F.col("n_nodes") + F.lit(damping) * (
+            F.coalesce(F.col("s").cast("double"), F.lit(0.0)) + extra
+        )
+        cols = ["node", rank.alias("rank")]
+        if tol is not None:
+            cols.append(F.abs(rank - F.col("rank")).alias("l1"))
+        return base.crossJoin(F.broadcast(n_df)).select(*cols)
+
+    probe = F.sum("l1") if tol is not None else None
     try:
-        for _ in range(n_iter):
-            contrib = ed.join(
-                ranks, ed["src"] == ranks["node"]
-            ).select(
-                "dst",
-                F.round(F.col("rank") / F.col("n_out"), 12)
-                .cast("decimal(28,12)")
-                .alias("c"),
-            )
-            sums = contrib.groupBy("dst").agg(F.sum("c").alias("s"))
-            if redistribute_dangling:
-                # 1-row broadcast scalar: total rank mass on dangling
-                # nodes this round (same order-independent DECIMAL sum).
-                d_mass = dangling.join(ranks, "node").agg(
-                    F.coalesce(
-                        F.sum(
-                            F.round(F.col("rank"), 12).cast("decimal(28,12)")
-                        ).cast("double"),
-                        F.lit(0.0),
-                    ).alias("d_mass")
-                )
-                extra = F.col("d_mass") / F.col("n_nodes")
-            else:
-                d_mass = None
-                extra = F.lit(0.0)
-            base = nodes.join(sums, nodes["node"] == sums["dst"], "left")
-            if d_mass is not None:
-                base = base.crossJoin(F.broadcast(d_mass))
-            # Eager localCheckpoint = materialize this round AND truncate
-            # the logical plan to a scan of the checkpointed blocks.
-            new_ranks = (
-                base.crossJoin(F.broadcast(n_df))
-                .select(
-                    "node",
-                    (
-                        teleport / F.col("n_nodes")
-                        + F.lit(damping)
-                        * (
-                            F.coalesce(
-                                F.col("s").cast("double"), F.lit(0.0)
-                            )
-                            + extra
-                        )
-                    ).alias("rank"),
-                )
-                .localCheckpoint(eager=True)
-            )
-            if tol is not None:
-                # L1 delta: one 1-row aggregate over two checkpointed
-                # frames — the convergence probe, never a data collect.
-                delta = (
-                    new_ranks.alias("n")
-                    .join(ranks.alias("o"), "node")
-                    .agg(
-                        F.sum(
-                            F.abs(F.col("n.rank") - F.col("o.rank"))
-                        ).alias("l1")
-                    )
-                    .collect()[0]["l1"]
-                )
-                prev = ranks
-                ranks = new_ranks
-                free_local_checkpoint(prev)
-                if delta is not None and delta < tol:
-                    break
-            else:
-                # new_ranks is already eagerly materialized, so the
-                # previous round's checkpoint blocks are dead weight —
-                # free them to keep executor storage O(1) per round.
-                prev = ranks
-                ranks = new_ranks
-                free_local_checkpoint(prev)
-        return ranks
+        for ranks, delta in checkpointed_rounds(ranks, step, n_iter, probe):
+            if delta is not None and delta < tol:
+                break
+        return ranks.select("node", "rank")
     finally:
         ed.unpersist()
         nodes.unpersist()
@@ -439,32 +388,19 @@ def personalized_pagerank(
     `broadcast_row_cap` (falls back to the shuffle join once the walk
     has touched more rows than the cap, since a small-world k-hop
     neighborhood can approach the full node set); either join strategy
-    yields bit-identical ranks (pinned by the A/B test).
-    Each round's ranks are EAGERLY localCheckpoint-ed (materialize +
-    truncate lineage, O(1) plan depth) with the previous round's
-    blocks freed. Mass that
-    walks into dangling nodes leaves the system (the simple variant
-    the oracle mirrors; the catalog feeds symmetric co-purchase graphs
-    where every node has out-edges, so no mass is lost there — pinned
-    by the mass-conservation test).
+    yields bit-identical ranks (pinned by the A/B test). Rounds run
+    on `lineage.checkpointed_rounds`; with `broadcast_frontier` the
+    round's probe is its row count, which feeds the row-cap guard.
+    Mass that walks into dangling nodes leaves the system (the simple
+    variant the oracle mirrors; the catalog feeds symmetric co-purchase
+    graphs where every node has out-edges, so no mass is lost there —
+    pinned by the mass-conservation test).
 
     The reference has no graph step (snapshot_use_pyspark.py:216-224
     scans are row-parallel); engine-added training-pipeline surface.
     """
     e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-    # outdeg_col (r15): see pagerank — a precomputed per-row out-degree
-    # skips the edge-sized outdeg aggregation + SortMergeJoin here.
-    if outdeg_col is not None:
-        ed = edges.select(
-            F.col(src).alias("src"),
-            F.col(dst).alias("dst"),
-            F.col(outdeg_col).cast("long").alias("n_out"),
-        ).persist(StorageLevel.MEMORY_AND_DISK)
-    else:
-        outdeg = e.groupBy("src").agg(
-            F.count(F.lit(1)).cast("long").alias("n_out")
-        )
-        ed = e.join(outdeg, "src").persist(StorageLevel.MEMORY_AND_DISK)
+    ed, _ = _out_weighted(edges, src, dst, outdeg_col)
     # Checkpointed, not persisted: the RETURNED frame references the
     # node set (the final sparse-to-dense expansion), so an unpersist
     # in `finally` would force the caller's first action to recompute
@@ -537,78 +473,49 @@ def personalized_pagerank(
     # no checkpoint job needed, and its row count is known exactly.
     ranks = seed_tp.select("node", F.col("tp").alias("rank"))
     ranks_n = n_seeds
+
+    def step(ranks: DataFrame) -> DataFrame:
+        # Frontier filter — the seeded walk's scale edge over the
+        # global loop: rank is EXACTLY 0.0 until the walk reaches a
+        # node ((1-d)*0.0 + d*0.0 stays 0.0; untouched DECIMAL sums
+        # reduce to 0E-12 -> 0.0), and zero ranks contribute
+        # round(0/n_out) = 0 to every sum, identical to absence. So
+        # the contribution join is FRONTIER-sized — |S| nodes in
+        # round 1, growing hop by hop — instead of node-sized, and
+        # results are bit-identical (pinned by the reference tests,
+        # which run nodes the walk never reaches).
+        frontier = ranks.where(F.col("rank") != 0.0)
+        # broadcast_frontier=True additionally ships the frontier
+        # to every executor so the EDGE side is never shuffled or
+        # sorted: each round is then one scan of the persisted edge
+        # frame probing a hash map. Opt-in because it is only safe
+        # under the seeded-locality contract (the frontier is bounded
+        # by the seed-REACHABLE component; all-seeds-style calls would
+        # broadcast a node-sized frame). In small-world graphs the
+        # k-hop neighborhood can approach the FULL node set, so fall
+        # back to the shuffle join once the sparse rank vector
+        # outgrows broadcast_row_cap (`ranks_n` is the previous
+        # round's probe — no extra count job).
+        if broadcast_frontier and ranks_n <= broadcast_row_cap:
+            frontier = F.broadcast(frontier)
+        sums = _contrib_sums(ed, frontier)
+        # Sparse update: full-outer of the seed teleport terms and
+        # the walked-mass sums — both frontier-scale. A node in
+        # neither frame keeps exact 0.0 by absence (same IEEE
+        # value the dense form computed for it: 0.0 + d*0.0).
+        return st.join(sums, st["node"] == sums["dst"], "full").select(
+            F.coalesce(st["node"], sums["dst"]).alias("node"),
+            (
+                F.coalesce(F.col("tp_upd"), F.lit(0.0))
+                + F.lit(damping)
+                * F.coalesce(F.col("s").cast("double"), F.lit(0.0))
+            ).alias("rank"),
+        )
+
+    probe = F.count(F.lit(1)) if broadcast_frontier else None
     try:
-        for _ in range(n_iter):
-            # Frontier filter — the seeded walk's scale edge over the
-            # global loop: rank is EXACTLY 0.0 until the walk reaches a
-            # node ((1-d)*0.0 + d*0.0 stays 0.0; untouched DECIMAL sums
-            # reduce to 0E-12 -> 0.0), and zero ranks contribute
-            # round(0/n_out) = 0 to every sum, identical to absence. So
-            # the contribution join is FRONTIER-sized — |S| nodes in
-            # round 1, growing hop by hop — instead of node-sized, and
-            # results are bit-identical (pinned by the reference tests,
-            # which run nodes the walk never reaches).
-            frontier = ranks.where(F.col("rank") != 0.0)
-            # broadcast_frontier=True additionally ships the frontier
-            # to every executor so the EDGE side is never shuffled or
-            # sorted: each round is then one scan of the persisted edge
-            # frame probing a hash map — the RWR serving shape at
-            # scale, where "personalization changes the teleport
-            # vector, not data movement" holds for the edge list too.
-            # Opt-in because it is only safe under the seeded-locality
-            # contract (the frontier is bounded by the seed-REACHABLE
-            # component; all-seeds-style calls would broadcast a
-            # node-sized frame). Join strategy cannot change values:
-            # contributions are 12-dp DECIMAL sums, order-independent.
-            #
-            # Guard (r12 ADVICE): in small-world graphs the k-hop
-            # neighborhood can approach the FULL node set, so the
-            # "query-sized frontier" assumption is graph-dependent —
-            # fall back to the shuffle join once the sparse rank
-            # vector outgrows broadcast_row_cap. ranks_n was captured
-            # when the frame was checkpointed — no per-iteration
-            # count job.
-            if broadcast_frontier and ranks_n <= broadcast_row_cap:
-                frontier = F.broadcast(frontier)
-            contrib = ed.join(
-                frontier, ed["src"] == frontier["node"]
-            ).select(
-                "dst",
-                F.round(F.col("rank") / F.col("n_out"), 12)
-                .cast("decimal(28,12)")
-                .alias("c"),
-            )
-            sums = contrib.groupBy("dst").agg(F.sum("c").alias("s"))
-            # Sparse update: full-outer of the seed teleport terms and
-            # the walked-mass sums — both frontier-scale. A node in
-            # neither frame keeps exact 0.0 by absence (same IEEE
-            # value the dense form computed for it: 0.0 + d*0.0).
-            new_ranks = (
-                st.join(sums, st["node"] == sums["dst"], "full")
-                .select(
-                    F.coalesce(st["node"], sums["dst"]).alias("node"),
-                    (
-                        F.coalesce(F.col("tp_upd"), F.lit(0.0))
-                        + F.lit(damping)
-                        * F.coalesce(F.col("s").cast("double"), F.lit(0.0))
-                    ).alias("rank"),
-                )
-            )
-            if broadcast_frontier:
-                # The row-cap guard needs this round's cardinality
-                # anyway, so materialize the checkpoint THROUGH the
-                # count (r15): eager=True runs an internal count job
-                # and the explicit count() then ran a second job per
-                # round — lazy mark + one count is the same
-                # materialization in half the control-plane jobs.
-                new_ranks = new_ranks.localCheckpoint(eager=False)
-                ranks_n = new_ranks.count()
-            else:
-                new_ranks = new_ranks.localCheckpoint(eager=True)
-                ranks_n = 0
-            prev = ranks
-            ranks = new_ranks
-            free_local_checkpoint(prev)
+        for ranks, ranks_n in checkpointed_rounds(ranks, step, n_iter, probe):
+            pass
         # Expand the sparse vector over the full node set ONCE: every
         # node the walk never reached holds exact 0.0 (the value the
         # dense loop computed for it each round). Seed ids absent from
@@ -654,17 +561,14 @@ def kcore(
 
     Scale shape: every round is ONE union-groupBy degree count plus one
     semi-join edge filter — all edge-sized, nothing node-quadratic; the
-    edge frame is EAGERLY localCheckpoint-ed per round (the pagerank
-    lineage discipline: each round's frame is referenced by degree
-    count AND filter, so unpersisted lineage would double the plan per
-    round), with the previous round's blocks freed. Peeling only ever
-    SHRINKS the edge set, so per-round cost is monotonically
-    non-increasing — the worst case is the first round on the full
-    (already support-pruned) graph. A round that removes NO edge is
-    the fixed point — peeling stops there (count() on the already-
-    materialized checkpoint is a control-plane probe, not a data
-    collect), so `rounds` is the BOUND and typical cost is the
-    convergence depth (1/4/6 rounds at sf0.001/0.01/0.1, measured).
+    edge frame is referenced by degree count AND filter, so rounds run
+    on `lineage.checkpointed_rounds` with the round's edge count as its
+    probe. Peeling only ever SHRINKS the edge set, so per-round cost is
+    monotonically non-increasing — the worst case is the first round on
+    the full (already support-pruned) graph. A round that removes NO
+    edge is the fixed point — peeling stops there, so `rounds` is the
+    BOUND and typical cost is the convergence depth (1/4/6 rounds at
+    sf0.001/0.01/0.1, measured).
     Identical results to the full unroll: post-fixed-point rounds are
     no-op filters, which is exactly what the differential oracle's
     fixed `rounds` unroll computes."""
@@ -676,7 +580,8 @@ def kcore(
     # scan" would couple this operator to plan internals.
     e = e.localCheckpoint(eager=True)
     n_edges = e.count()
-    for _ in range(rounds):
+
+    def step(e: DataFrame) -> DataFrame:
         deg = (
             e.select(F.col("a").alias("n"))
             .unionAll(e.select(F.col("b").alias("n")))
@@ -684,21 +589,15 @@ def kcore(
             .agg(F.count(F.lit(1)).cast("long").alias("d"))
         )
         keep = deg.where(F.col("d") >= k).select("n")
-        # Lazy checkpoint mark + count as the materializing action (r15):
-        # the fixpoint probe needs the round's cardinality anyway, and
-        # eager=True ran its own internal count job first — one job per
-        # round instead of two. count() is a full-frame aggregate, so
-        # every partition is computed and the truncated lineage is safe.
-        pruned = (
+        return (
             e.join(keep.withColumnRenamed("n", "a"), "a", "left_semi")
             .join(keep.withColumnRenamed("n", "b"), "b", "left_semi")
             .select("a", "b")
-            .localCheckpoint(eager=False)
         )
-        n_pruned = pruned.count()
-        prev = e
-        e = pruned
-        free_local_checkpoint(prev)
+
+    for e, n_pruned in checkpointed_rounds(
+        e, step, rounds, F.count(F.lit(1))
+    ):
         if n_pruned == n_edges:
             break
         n_edges = n_pruned
@@ -730,10 +629,9 @@ def bfs_hops(
     Scale shape: per round one equi-join of the edge list against the
     CURRENT distance frame plus one min-groupBy — both keyed on node
     id; only (node, dist) pairs shuffle, never payloads. The distance
-    frame is referenced twice per round (join + union), so each round
-    is EAGERLY localCheckpoint-ed with the previous round's blocks
-    freed (pagerank discipline). Rounds = max_hops, a fixed bound the
-    oracle twin unrolls identically."""
+    frame is referenced twice per round (join + union), so rounds run
+    on `lineage.checkpointed_rounds`. Rounds = max_hops, a fixed bound
+    the oracle twin unrolls identically."""
     e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
     dist = (
         seeds.toDF("node")
@@ -741,20 +639,20 @@ def bfs_hops(
         .select("node", F.lit(0).cast("long").alias("dist"))
         .localCheckpoint(eager=True)
     )
-    for _ in range(max_hops):
-        step = e.join(dist, e["src"] == dist["node"]).select(
+
+    def step(dist: DataFrame) -> DataFrame:
+        hop = e.join(dist, e["src"] == dist["node"]).select(
             F.col("dst").alias("node"),
             (F.col("dist") + F.lit(1)).cast("long").alias("dist"),
         )
-        new = (
-            dist.unionAll(step)
+        return (
+            dist.unionAll(hop)
             .groupBy("node")
             .agg(F.min("dist").alias("dist"))
-            .localCheckpoint(eager=True)
         )
-        prev = dist
-        dist = new
-        free_local_checkpoint(prev)
+
+    for dist, _ in checkpointed_rounds(dist, step, max_hops):
+        pass
     return dist
 
 
@@ -783,9 +681,9 @@ def label_propagation(
     (node, label) count groupBy + one max_by reduction — all shuffles
     carry (node, label, count) triples only. The label frame is
     referenced twice per round (neighbor join + keep-own coalesce), so
-    rounds are EAGERLY localCheckpoint-ed, previous blocks freed. The
-    deterministic argmax is a single max_by(struct) partial-agg, never
-    a window sort."""
+    rounds run on `lineage.checkpointed_rounds`. The deterministic
+    argmax is a single max_by(struct) partial-agg, never a window
+    sort."""
     from pyspark.sql.types import NumericType
 
     for c in (src, dst):
@@ -808,7 +706,8 @@ def label_propagation(
         .select("node", F.col("node").alias("lbl"))
         .localCheckpoint(eager=True)
     )
-    for _ in range(rounds):
+
+    def step(labels: DataFrame) -> DataFrame:
         counts = (
             e.join(labels, e["src"] == labels["node"])
             .groupBy(F.col("dst").alias("n"), "lbl")
@@ -822,18 +721,16 @@ def label_propagation(
                 "m"
             )
         ).select(F.col("n"), (-F.col("m.neg")).alias("new_lbl"))
-        new_labels = (
-            labels.join(best, labels["node"] == best["n"], "left")
-            .select(
-                "node",
-                F.coalesce(F.col("new_lbl"), F.col("lbl")).alias("lbl"),
-            )
-            .localCheckpoint(eager=True)
+        return labels.join(best, labels["node"] == best["n"], "left").select(
+            "node", F.coalesce(F.col("new_lbl"), F.col("lbl")).alias("lbl")
         )
-        prev = labels
-        labels = new_labels
-        free_local_checkpoint(prev)
-    return labels.select("node", F.col("lbl").alias("community"))
+
+    try:
+        for labels, _ in checkpointed_rounds(labels, step, rounds):
+            pass
+        return labels.select("node", F.col("lbl").alias("community"))
+    finally:
+        free_local_checkpoint(e)
 
 
 def link_prediction_scores(

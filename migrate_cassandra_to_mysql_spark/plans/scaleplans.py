@@ -1268,9 +1268,9 @@ def kcore_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: ONE lineitem scan (checkpointed edge build), then every
     peel round is one union-groupBy degree count + one double semi-join
     filter over the KB-sized signal graph — edge-sized shuffles
-    throughout, each round eagerly checkpointed with the previous
-    round's blocks freed (operators/components.kcore; the pagerank
-    lineage discipline). Peeling only shrinks the edge set, so round
+    throughout, each round checkpointed with the previous round's
+    blocks freed (operators/components.kcore on
+    lineage.checkpointed_rounds). Peeling only shrinks the edge set, so round
     cost is monotonically non-increasing. Exact integer degrees — no
     float anywhere."""
     from migrate_cassandra_to_mysql_spark.operators.components import kcore
