@@ -46,6 +46,8 @@ _WARNED_FALLBACK_DDLS: set[str] = set()
 
 _SCALARS = {
     "boolean": "bool_",
+    "tinyint": "int8",
+    "smallint": "int16",
     "int": "int32",
     "integer": "int32",
     "bigint": "int64",

@@ -23,6 +23,14 @@ Scale rationale (100 TB):
     graphs that dedup workloads don't produce. For adversarial chains,
     `max_iter` bounds the work and the convergence flag reports
     non-convergence instead of silently looping.
+  - A small edge set finishes on the driver. When the candidate graph
+    fits the session's `spark.sql.autoBroadcastJoinThreshold` at 16
+    bytes per edge (655,360 edges at the 10 MB default), one bounded
+    fetch collects it and a BFS from each component's minimum id labels
+    it; the result is a local relation, so downstream joins broadcast
+    it. There the cost of the distributed form is fixed per-job
+    scheduling (a checkpoint, a persist and one job per round), not
+    data. A threshold <= 0 (broadcast off) always runs distributed.
   - Per round only (id, label) pairs shuffle — 16 bytes/node — never the
     documents themselves.
   - Every loop in this module runs on `lineage.checkpointed_rounds`:
@@ -43,9 +51,82 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegralType, StringType
 from pyspark.storagelevel import StorageLevel
 
+from migrate_cassandra_to_mysql_spark.functions.localframe import local_frame
+from migrate_cassandra_to_mysql_spark.sources.parquet import _parse_bytes
+
 from .lineage import checkpointed_rounds, free_local_checkpoint
+
+
+# Bytes per (long, long) edge when sizing the driver-side finish against
+# spark.sql.autoBroadcastJoinThreshold.
+_EDGE_BYTES = 16
+
+
+def _ddl_type(df: DataFrame, col: str) -> str:
+    """The DDL type string of `df[col]` (e.g. 'bigint', 'string'), for
+    building a driver-side frame whose column matches the input's."""
+    return df.schema[col].dataType.simpleString()
+
+
+def _small_edge_list(ek: DataFrame) -> list | None:
+    """The (s, d) rows of the checkpointed edge frame when the driver can
+    finish them: at most spark.sql.autoBroadcastJoinThreshold / 16 edges
+    (none when broadcast is off), with non-null ids of one integral or
+    string type. None otherwise."""
+    threshold = _parse_bytes(
+        ek.sparkSession.conf.get(
+            "spark.sql.autoBroadcastJoinThreshold", "10MB"
+        )
+    )
+    bound = max(threshold or 0, 0) // _EDGE_BYTES
+    id_type = ek.schema["s"].dataType
+    if (
+        bound == 0
+        or id_type != ek.schema["d"].dataType
+        or not isinstance(id_type, (IntegralType, StringType))
+    ):
+        return None
+    # coalesce(1): one task reads at most bound + 1 rows, in one job.
+    rows = ek.coalesce(1).limit(bound + 1).collect()
+    if len(rows) > bound or any(s is None or d is None for s, d in rows):
+        return None
+    return rows
+
+
+def _components_on_driver(pairs: list, max_iter: int) -> list[tuple]:
+    """(id, component) rows for a collected edge list, by BFS from each
+    unvisited node in ascending id order, so each BFS root is its
+    component's minimum id. Raises exactly when min-label propagation
+    would: it needs D + 1 rounds, D the deepest BFS level below a root."""
+    adj: dict = {}
+    for s, d in pairs:
+        adj.setdefault(s, set()).add(d)
+        adj.setdefault(d, set()).add(s)
+    comp: dict = {}
+    # Python orders ints numerically and strs by code point, as Spark
+    # orders longs and UTF-8 bytes, so each root is Spark's min too.
+    for root in sorted(adj):
+        if root in comp:
+            continue
+        comp[root] = root
+        frontier, depth = [root], -1
+        while frontier:
+            depth += 1
+            nxt = []
+            for u in frontier:
+                for v in adj[u]:
+                    if v not in comp:
+                        comp[v] = root
+                        nxt.append(v)
+            frontier = nxt
+        if depth + 1 > max_iter:
+            raise RuntimeError(
+                f"connected_components did not converge in {max_iter} rounds"
+            )
+    return list(comp.items())
 
 
 def connected_components(
@@ -58,21 +139,37 @@ def connected_components(
 
     `component` is the minimum node id reachable from `id` — a canonical,
     deterministic cluster representative (ideal as the dedup survivor
-    key). Runs min-label propagation until a fixpoint or `max_iter`
-    rounds; raises if the graph failed to converge (never observed on
-    dedup graphs; reachable only via max_iter set below the diameter).
+    key). Raises RuntimeError when min-label propagation would not reach
+    its fixpoint within `max_iter` rounds (it needs D + 1, D the largest
+    BFS depth from a component's minimum id; never observed on dedup
+    graphs, reachable via max_iter set below the diameter).
+
+    Two paths, one answer:
+      - at most `spark.sql.autoBroadcastJoinThreshold` / 16 edges
+        (655,360 at the 10 MB default) with non-null integral or string
+        ids: the edges are collected in one bounded fetch and the
+        components computed on the driver; the result is a local
+        relation and nothing stays persisted;
+      - otherwise (and always when the threshold is <= 0): distributed
+        min-label propagation on `lineage.checkpointed_rounds`.
     """
-    # Eagerly checkpoint the edge input BEFORE symmetrizing: the union
-    # references `edges` twice (forward + reversed), so an expensive
-    # caller pipeline — dedup_clusters feeds the full LSH candidate
-    # chain here — would execute TWICE inside sym's materialization
-    # (measured: dedup_canonical_keep warm 6.4 -> 5.0s, cold 12.4 ->
-    # 4.9s at sf0.1 with the chain materialized once). Same discipline
-    # as kcore/label_propagation's deliberate input checkpoint; the
-    # blocks are freed with sym in `finally`.
+    # Eagerly checkpoint the edge input first: the caller's pipeline
+    # (dedup_clusters feeds the full LSH candidate chain) then runs
+    # exactly once, although the distributed path references it twice
+    # (forward + reversed) and the driver path fetches from it.
     ek = edges.select(
         F.col(src).alias("s"), F.col(dst).alias("d")
     ).localCheckpoint(eager=True)
+    rows = _small_edge_list(ek)
+    if rows is not None:
+        free_local_checkpoint(ek)
+        t = _ddl_type(ek, "s")
+        return local_frame(
+            ek.sparkSession,
+            _components_on_driver(rows, max_iter),
+            f"id {t}, component {t}",
+        )
+
     sym = (
         ek.union(ek.select(F.col("d").alias("s"), F.col("s").alias("d")))
         .distinct()
@@ -420,12 +517,10 @@ def personalized_pagerank(
     # Seed sets are QUERY-SIZED by contract (docstring) — collect them
     # once (r15; the previous shape ran three control-plane jobs here:
     # an emptiness probe, a count aggregate, and a 3-row checkpoint)
-    # and build the teleport frame as a pure-JVM local relation.
-    seed_rows = (
-        seeds.select(F.col(seeds.columns[0]).alias("node"))
-        .distinct()
-        .collect()
-    )
+    # and build the teleport frame as a pure-JVM local relation whose
+    # node column keeps the seed column's type.
+    seed_nodes = seeds.select(F.col(seeds.columns[0]).alias("node"))
+    seed_rows = seed_nodes.distinct().collect()
     # Loud contract check: an EMPTY seed set would otherwise yield
     # tp = 0 everywhere, an empty frontier every round, and an
     # all-zero rank vector that downstream top-k consumers would
@@ -457,16 +552,12 @@ def personalized_pagerank(
     # dominated the loop at 24M edges). Rounds now touch |frontier| +
     # |out-neighborhood| rows only; the full node set is expanded ONCE
     # at the end with an exact-0.0 coalesce, bit-identical output.
-    from migrate_cassandra_to_mysql_spark.functions.localframe import (
-        local_frame,
-    )
-
     tp = 1.0 / n_seeds
     tp_upd = (1.0 - damping) / n_seeds
     seed_tp = local_frame(
         edges.sparkSession,
-        [(int(r["node"]), tp, tp_upd) for r in seed_rows],
-        "node long, tp double, tp_upd double",
+        [(r["node"], tp, tp_upd) for r in seed_rows],
+        f"node {_ddl_type(seed_nodes, 'node')}, tp double, tp_upd double",
     )
     st = seed_tp.select("node", "tp_upd")
     # rank_0 is a |S|-row LOCAL relation — flat lineage by construction,

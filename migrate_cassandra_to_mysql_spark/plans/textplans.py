@@ -2401,9 +2401,10 @@ FROM base b LEFT JOIN comp c ON b.doc_id = c.id
 def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pair->cluster resolution for corpus dedup: MinHash+LSH candidate
     pairs (the same plan minhash_lsh_candidates verifies) become duplicate
-    CLUSTERS via distributed connected components (min-label propagation,
-    operators/components.py), with the minimum doc_id as each cluster's
-    deterministic survivor. This is the step the pairwise dedup operators
+    CLUSTERS via connected components (operators/components.py: BFS on
+    the driver for a candidate graph within the broadcast threshold,
+    min-label propagation above it), with the minimum doc_id as each
+    cluster's deterministic survivor. This is the step the pairwise dedup operators
     stop short of — transitive groups (A~B, B~C => {A,B,C} share one
     survivor) — and the last piece of an end-to-end near-dedup pass:
     candidates -> clusters -> keep is_survivor."""
@@ -2660,7 +2661,8 @@ def corpus_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
     This is the query a 100-TB pretraining pipeline actually runs before
     writing shards: all signals joined on doc_id (co-partitioned
     shuffles), each component retaining its own scale shape (broadcast
-    benchmark set / thresholds, bucketed LSH, label-propagation rounds).
+    benchmark set / thresholds, bucketed LSH, driver-finished or
+    label-propagation components).
     Returning the full decision table rather than the filtered corpus
     keeps every branch auditable — the production filter is
     `.where("curated")` on this frame."""

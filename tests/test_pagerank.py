@@ -176,6 +176,26 @@ def test_ppr_matches_python_reference(spark, ring_edges):
         assert abs(got[v] - ref[v]) < 1e-9, v
 
 
+def test_ppr_string_node_ids(spark, ring_edges):
+    # the teleport frame takes the seed column's type, so string ids
+    # walk the same graph to the same ranks
+    from migrate_cassandra_to_mysql_spark.operators.components import (
+        personalized_pagerank,
+    )
+
+    named = [(f"n{a}", f"n{b}") for a, b in ring_edges]
+    df = spark.createDataFrame(named, "src string, dst string")
+    seeds = spark.createDataFrame([("n0",), ("n3",)], "node string")
+    got = {
+        r["node"]: r["rank"]
+        for r in personalized_pagerank(df, seeds, n_iter=5).collect()
+    }
+    ref = _ref_ppr(named, {"n0", "n3"})
+    assert set(got) == set(ref)
+    for v in ref:
+        assert abs(got[v] - ref[v]) < 1e-9, v
+
+
 def test_ppr_all_seeds_equals_global_pagerank(spark, ring_edges):
     # teleporting to ALL nodes uniformly IS global pagerank — the
     # recursion coincides term by term, so ranks must be bit-identical
