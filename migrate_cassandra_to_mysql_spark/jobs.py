@@ -117,7 +117,9 @@ def run_snapshot(
             target_count = cur.fetchone()[0]
         else:
             target_count = count_target()
-        status = control.record_validation(conn, cfg.table, source_count, target_count)
+        status = control.record_validation(
+            conn, cfg.table, source_count, target_count, dialect=cfg.dialect
+        )
     finally:
         conn.close()
     return {

@@ -113,7 +113,6 @@ def jaccard_pairs(
     text_col: str = "text",
     k: int = 3,
     threshold: float = 0.5,
-    cache: bool = False,
     max_df: int | None = None,
 ) -> DataFrame:
     """Near-duplicate pairs by exact n-gram Jaccard >= threshold.
@@ -121,11 +120,6 @@ def jaccard_pairs(
     Exact (no sketching): inverted-index join on shingle -> candidate pair
     counts -> |A ∩ B| / (|A| + |B| - |A ∩ B|). The threshold comparison is
     on an exact integer ratio, so it is engine-portable with no rounding.
-
-    cache=True persists the exploded-shingle index (MEMORY_AND_DISK).
-    A/B measurement: no cold-run win (the index is consumed in one pass
-    per side and Spark already pipelines it), but ~8x on WARM reuse —
-    enable when the same corpus index feeds several dedup queries.
 
     max_df: DOCUMENTED APPROXIMATION. Shingles appearing in more than
     max_df documents ("stop-shingles") are removed from the universe, and
@@ -141,10 +135,6 @@ def jaccard_pairs(
     # Carry |set| on every exploded row so no join back to a sizes table is
     # needed — one equi-join on `shingle`, one groupBy, done.
     ex = exploded_shingles(docs, text_col, k)
-    if cache:
-        from pyspark.storagelevel import StorageLevel
-
-        ex = ex.persist(StorageLevel.MEMORY_AND_DISK)
     a = ex.select(
         F.col("doc_id").alias("doc_a"), F.col("n_sh").alias("n_sh_a"), "shingle"
     )

@@ -50,10 +50,9 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from migrate_cassandra_to_mysql_spark.functions.localframe import local_frame
-
 from migrate_cassandra_to_mysql_spark.functions import text as textfns
 from migrate_cassandra_to_mysql_spark.functions.hashing import md5_token_bucket
+from migrate_cassandra_to_mysql_spark.operators import tombstones
 
 DEFAULT_BUCKETS = 32
 
@@ -138,35 +137,28 @@ def build_inverted_index(
     build 4.1s rebuilt-per-shard vs 15.6s encode-once-persisted; the
     same row-block-materialization wall the r14 PPR probe hit)."""
     from migrate_cassandra_to_mysql_spark.operators.layout import (
+        run_concurrently,
         swap_live_dir,
     )
-
-    import concurrent.futures as _cf
 
     toks = _tokenized(docs, text_col)
     # The two layer writes are independent sinks over independent
     # staging dirs — submit them concurrently so the small doclens job
-    # back-fills executors the postings job's tail frees (guide §2.6;
-    # threads drive submission only, Spark's scheduler multiplexes —
-    # the same pattern merge_sharded_layer/compact_partitioned use).
+    # back-fills executors the postings job's tail frees (guide §2.6).
     # BOTH swaps still happen only after BOTH writes committed.
-    with _cf.ThreadPoolExecutor(max_workers=2) as _ex:
-        fp = _ex.submit(
-            lambda: _postings_from_tokenized(toks, n_buckets)
-            .withColumn("ingest_batch", F.lit(0))
-            .write.mode("overwrite")
-            .partitionBy("bucket", "ingest_batch")
-            .parquet(f"{index_dir}/postings.new")
-        )
-        fd = _ex.submit(
-            lambda: toks.select("doc_id", "dl")
-            .withColumn("ingest_batch", F.lit(0))
-            .write.mode("overwrite")
-            .partitionBy("ingest_batch")
-            .parquet(f"{index_dir}/doclens.new")
-        )
-        fp.result()
-        fd.result()
+    run_concurrently(
+        docs.sparkSession,
+        lambda: _postings_from_tokenized(toks, n_buckets)
+        .withColumn("ingest_batch", F.lit(0))
+        .write.mode("overwrite")
+        .partitionBy("bucket", "ingest_batch")
+        .parquet(f"{index_dir}/postings.new"),
+        lambda: toks.select("doc_id", "dl")
+        .withColumn("ingest_batch", F.lit(0))
+        .write.mode("overwrite")
+        .partitionBy("ingest_batch")
+        .parquet(f"{index_dir}/doclens.new"),
+    )
     for part in ("postings", "doclens"):
         swap_live_dir(index_dir, part)
     # lexicon (per-term df) derives from postings; stats (n_docs/sum_dl)
@@ -210,7 +202,7 @@ def append_to_inverted_index(
     # FIRST (the compaction that was scheduled to collect these
     # tombstones anyway — O(index) rewrite, paid only when a re-add
     # actually hits, which resets the layer), then append cleanly.
-    if _tombstone_hits(spark, index_dir, docs_new.select("doc_id")):
+    if tombstones.hits(spark, index_dir, docs_new, "doc_id"):
         compact_postings(spark, index_dir)
     # Two tokenize passes, deliberately unpersisted — see
     # build_inverted_index (the cache A/B loss).
@@ -232,65 +224,16 @@ def append_to_inverted_index(
     _refresh_derived(spark, index_dir)
 
 
-def _manifest_layers(index_dir: str) -> tuple[str, ...]:
-    """The snapshot-manifest layer set: the four core layers, plus the
-    optional tombstone layer once the index has seen its first
-    delete_docs (a manifest that omits `deletes` on a store that HAS the
-    layer would make readers fall back to per-layer pinning — still
-    safe, just not cross-layer-atomic)."""
-    import os as _os
-
-    d = f"{index_dir}/deletes"
-    if _os.path.islink(d) or _os.path.isdir(d):
-        return LAYERS + ("deletes",)
-    return LAYERS
-
-
-def _load_deletes(spark: SparkSession, index_dir: str):
-    """The tombstone frame (doc_id) if the deletes layer exists and holds
-    any rows, else None. Deletion-sized — always broadcast-joined."""
-    import os as _os
-
-    d = f"{index_dir}/deletes"
-    if not (_os.path.islink(d) or _os.path.isdir(d)):
-        return None
-    deletes = spark.read.parquet(d).select("doc_id")
-    if deletes.isEmpty():
-        return None
-    return deletes
-
-
-def _tombstone_hits(
-    spark: SparkSession, index_dir: str, ids_df, id_col: str = "doc_id"
-) -> list[int]:
-    """Which of `ids_df`'s ids are currently tombstoned. Scale shape:
-    the tombstone set broadcasts against the batch ids (map-side
-    semi-join probe — the batch never shuffles); only the matched ids
-    (bounded by the tombstone count, control-plane sized) collect. No
-    tombstones -> no jobs at all. Shared by both indexes (the vector
-    side passes id_col='vec_id' via its own loader)."""
-    deletes = _load_deletes(spark, index_dir)
-    if deletes is None:
-        return []
-    return [
-        r[id_col]
-        for r in ids_df.select(id_col)
-        .join(F.broadcast(deletes), id_col, "left_semi")
-        .distinct()
-        .collect()
-    ]
-
-
 def delete_docs(spark: SparkSession, index_dir: str, doc_ids) -> None:
     """Delete documents from the persisted index — the right-to-be-
     forgotten / takedown path a long-lived training-data index needs.
     Tombstone design (the Iceberg/Delta equality-delete shape, rebuilt
-    on open parquet): the doc_ids append to a tiny versioned `deletes`
-    layer; serving anti-joins it broadcast-side; the derived layers
-    (df / n_docs / sum_dl) are refreshed EXCLUDING tombstoned docs
-    immediately, so served scores equal an index rebuilt without them
-    (pinned by test); the next compact_postings physically purges the
-    posting/doclens rows and resets the tombstone layer. Cost now:
+    on open parquet): the doc_ids append to a tiny versioned tombstone
+    layer (operators/tombstones); serving anti-joins it broadcast-side;
+    the derived layers (df / n_docs / sum_dl) are refreshed EXCLUDING
+    tombstoned docs immediately, so served scores equal an index rebuilt
+    without them (pinned by test); the next compact_postings physically
+    purges the posting/doclens rows and resets the tombstone layer. Cost now:
     O(tombstones) + the derived refresh — never a corpus rewrite; the
     physical rewrite rides the compaction that was due anyway.
 
@@ -302,44 +245,14 @@ def delete_docs(spark: SparkSession, index_dir: str, doc_ids) -> None:
     is the only one — streaming ingest instead rejects re-adds loudly
     with that same recipe (stream_docs_into_inverted_index).
 
-    Atomicity (r10 ADVICE): the ENLARGED tombstone set is written to
-    `deletes.new` and promoted via swap_live_dir — a NEW version dir —
-    never appended into the current live version. A concurrent reader
-    whose manifest pins the old deletes version keeps the OLD set until
-    the commit_live_snapshot inside _refresh_derived flips deletes,
-    lexicon, and stats TOGETHER; appending in place instead made the new
-    tombstones visible immediately, so that reader anti-joined the new
-    set while scoring with tombstone-inclusive df/n_docs/sum_dl —
-    matching neither rebuilt-with nor rebuilt-without.
-
-    Concurrency (r11 ADVICE): the whole read-enlarge-stage-swap-refresh
-    sequence runs under its own maintainer lockfile (`deletes.rmw`,
-    distinct from swap_live_dir's per-promotion lock, which guards only
-    the flip): two concurrent deleters would otherwise each read the
-    same base set and the second swap would silently discard the
-    first's tombstones. A second deleter now fails LOUDLY with the
-    single-maintainer error instead of losing rows."""
-    from migrate_cassandra_to_mysql_spark.operators.layout import (
-        _maintainer_lock,
-        swap_live_dir,
+    The derived refresh runs under the deleters' lock and its manifest
+    commit flips the tombstones, lexicon and stats TOGETHER, so no
+    reader anti-joins the new set while scoring with tombstone-inclusive
+    df/n_docs/sum_dl (atomicity and concurrency: operators/tombstones)."""
+    tombstones.add(
+        spark, index_dir, doc_ids, "doc_id",
+        lambda: _refresh_derived(spark, index_dir),
     )
-
-    if not isinstance(doc_ids, DataFrame):
-        doc_ids = local_frame(
-            spark, [(int(i),) for i in doc_ids], "doc_id long"
-        )
-    new = doc_ids.select(F.col("doc_id").cast("long"))
-    with _maintainer_lock(index_dir, "deletes.rmw", 3600.0):
-        existing = _load_deletes(spark, index_dir)
-        enlarged = new if existing is None else existing.unionByName(new)
-        (
-            enlarged.distinct()
-            .coalesce(1)
-            .write.mode("overwrite")
-            .parquet(f"{index_dir}/deletes.new")
-        )
-        swap_live_dir(index_dir, "deletes")
-        _refresh_derived(spark, index_dir)
 
 
 def _refresh_derived(spark: SparkSession, index_dir: str) -> None:
@@ -359,49 +272,39 @@ def _refresh_derived(spark: SparkSession, index_dir: str) -> None:
     layers from one manifest read, so it sees the whole refresh or none
     of it."""
     from migrate_cassandra_to_mysql_spark.operators.layout import (
-        commit_live_snapshot,
+        run_concurrently,
         swap_live_dir,
     )
 
-    import concurrent.futures as _cf
-
-    deletes = _load_deletes(spark, index_dir)
-    written = spark.read.parquet(f"{index_dir}/postings")
-    doclens = spark.read.parquet(f"{index_dir}/doclens")
-    if deletes is not None:
-        # Tombstoned docs are excluded from the derived layers the moment
-        # the deletion's refresh runs — df/n_docs/sum_dl then match an
-        # index rebuilt without those docs, even though their posting
-        # rows remain physically present until the next compaction purges
-        # them. The tombstone set is deletion-sized: broadcast anti-join.
-        written = written.join(F.broadcast(deletes), "doc_id", "left_anti")
-        doclens = doclens.join(F.broadcast(deletes), "doc_id", "left_anti")
+    # Tombstoned docs are excluded from the derived layers the moment
+    # the deletion's refresh runs — df/n_docs/sum_dl then match an index
+    # rebuilt without those docs, even though their posting rows remain
+    # physically present until the next compaction purges them.
+    purge = tombstones.purge(spark, index_dir, "doc_id")
+    written = purge(spark.read.parquet(f"{index_dir}/postings"))
+    doclens = purge(spark.read.parquet(f"{index_dir}/doclens"))
     # The two derived writes read DIFFERENT source layers into DIFFERENT
     # staging dirs — concurrent submission (guide §2.6), swaps + the one
     # manifest commit strictly after both complete, so the cross-layer
     # atomicity contract is untouched.
-    with _cf.ThreadPoolExecutor(max_workers=2) as _ex:
-        fl = _ex.submit(
-            lambda: written.groupBy("bucket", "tok")
-            .agg(F.count(F.lit(1)).cast("long").alias("df"))
-            .write.mode("overwrite")
-            .partitionBy("bucket")
-            .parquet(f"{index_dir}/lexicon.new")
+    run_concurrently(
+        spark,
+        lambda: written.groupBy("bucket", "tok")
+        .agg(F.count(F.lit(1)).cast("long").alias("df"))
+        .write.mode("overwrite")
+        .partitionBy("bucket")
+        .parquet(f"{index_dir}/lexicon.new"),
+        lambda: doclens.agg(
+            F.count(F.lit(1)).alias("n_docs"),
+            F.sum("dl").alias("sum_dl"),
         )
-        fs = _ex.submit(
-            lambda: doclens.agg(
-                F.count(F.lit(1)).alias("n_docs"),
-                F.sum("dl").alias("sum_dl"),
-            )
-            .coalesce(1)
-            .write.mode("overwrite")
-            .parquet(f"{index_dir}/stats.new")
-        )
-        fl.result()
-        fs.result()
+        .coalesce(1)
+        .write.mode("overwrite")
+        .parquet(f"{index_dir}/stats.new"),
+    )
     for part in ("lexicon", "stats"):
         swap_live_dir(index_dir, part)
-    commit_live_snapshot(index_dir, _manifest_layers(index_dir))
+    tombstones.commit(index_dir, LAYERS)
 
 
 def compact_postings(
@@ -432,71 +335,55 @@ def compact_postings(
     import os as _os
 
     from migrate_cassandra_to_mysql_spark.operators.layout import (
-        commit_live_snapshot,
         compact_partitioned,
         swap_live_dir,
     )
 
-    deletes = _load_deletes(spark, index_dir)
-    purge = (
-        None
-        if deletes is None
-        else (
-            lambda df: df.join(F.broadcast(deletes), "doc_id", "left_anti")
+    # the tombstone purge rides the rewrite compaction does anyway; the
+    # emptied tombstone layer joins the same manifest commit
+    with tombstones.compaction(spark, index_dir, "doc_id") as purge:
+        stats = compact_partitioned(
+            spark,
+            f"{index_dir}/postings",
+            f"{index_dir}/postings.new",
+            target_file_bytes=target_file_bytes,
+            sort_within_by=["tok", "doc_id"],
+            merge_sub_partitions_into="ingest_batch=0",
+            transform=purge,
         )
-    )
-    stats = compact_partitioned(
-        spark,
-        f"{index_dir}/postings",
-        f"{index_dir}/postings.new",
-        target_file_bytes=target_file_bytes,
-        sort_within_by=["tok", "doc_id"],
-        merge_sub_partitions_into="ingest_batch=0",
-        # tombstone purge rides the rewrite compaction does anyway
-        transform=purge,
-    )
-    swap_live_dir(index_dir, "postings")
-    dl_files = [
-        p
-        for p in _glob.glob(f"{index_dir}/doclens/ingest_batch=*/part-*")
-        if _os.path.isfile(p)
-    ]
-    dl_bytes = sum(_os.path.getsize(p) for p in dl_files)
-    dl_out_dir = f"{index_dir}/doclens.new/ingest_batch=0"
-    dl = spark.read.parquet(f"{index_dir}/doclens").drop("ingest_batch")
-    if purge is not None:
-        dl = purge(dl)
-    (
-        dl.coalesce(max(1, -(-dl_bytes // target_file_bytes)))
-        .write.mode("overwrite")
-        .parquet(dl_out_dir)
-    )
-    stats["doclens"] = {
-        "files_in": len(dl_files),
-        "files_out": len(
-            [p for p in _glob.glob(f"{dl_out_dir}/part-*") if _os.path.isfile(p)]
-        ),
-        "bytes": dl_bytes,
-    }
-    swap_live_dir(index_dir, "doclens")
-    if deletes is not None:
-        # tombstones are now physically purged from both data layers:
-        # reset the deletes layer to an EMPTY (schema-bearing) version —
-        # within the same manifest commit, so no reader can pair the
-        # purged postings with the stale tombstones or (worse) the
-        # UNpurged postings with the emptied tombstones
+        swap_live_dir(index_dir, "postings")
+        dl_files = [
+            p
+            for p in _glob.glob(f"{index_dir}/doclens/ingest_batch=*/part-*")
+            if _os.path.isfile(p)
+        ]
+        dl_bytes = sum(_os.path.getsize(p) for p in dl_files)
+        dl_out_dir = f"{index_dir}/doclens.new/ingest_batch=0"
+        dl = purge(
+            spark.read.parquet(f"{index_dir}/doclens").drop("ingest_batch")
+        )
         (
-            local_frame(spark, [], "doc_id long")
-            .coalesce(1)
+            dl.coalesce(max(1, -(-dl_bytes // target_file_bytes)))
             .write.mode("overwrite")
-            .parquet(f"{index_dir}/deletes.new")
+            .parquet(dl_out_dir)
         )
-        swap_live_dir(index_dir, "deletes")
+        stats["doclens"] = {
+            "files_in": len(dl_files),
+            "files_out": len(
+                [
+                    p
+                    for p in _glob.glob(f"{dl_out_dir}/part-*")
+                    if _os.path.isfile(p)
+                ]
+            ),
+            "bytes": dl_bytes,
+        }
+        swap_live_dir(index_dir, "doclens")
     # One manifest commit AFTER all swaps: readers flip from the old
     # consistent set to the new one atomically (content-identical for
     # the data layers unless a purge ran; the uniform commit point keeps
     # the reader contract simple either way).
-    commit_live_snapshot(index_dir, _manifest_layers(index_dir))
+    tombstones.commit(index_dir, LAYERS)
     return stats
 
 
@@ -536,31 +423,15 @@ def merge_indexes(
     from migrate_cassandra_to_mysql_spark.operators.layout import (
         merge_sharded_layer,
         read_parquet_retry,
-        resolve_live_snapshot,
+        run_concurrently,
         swap_live_dir,
     )
 
     src_dirs = list(src_dirs)
     if not src_dirs:
         raise ValueError("merge_indexes needs at least one source index")
-    layers = [resolve_live_snapshot(d, _manifest_layers(d)) for d in src_dirs]
-    purges = [
-        (
-            F.broadcast(
-                read_parquet_retry(spark, lay["deletes"]).select("doc_id")
-            )
-            if "deletes" in lay
-            else None
-        )
-        for lay in layers
-    ]
-
-    def _purged(df: DataFrame, i: int) -> DataFrame:
-        return (
-            df
-            if purges[i] is None
-            else df.join(purges[i], "doc_id", "left_anti")
-        )
+    layers = [tombstones.resolve(d, LAYERS) for d in src_dirs]
+    purges = [tombstones.mask(spark, lay, "doc_id") for lay in layers]
 
     # 1) bucket-hash compatibility: every shard must map each token to
     # the SAME bucket (vocabulary-sized check over the lexicons).
@@ -573,10 +444,8 @@ def merge_indexes(
 
     # 2) corpus disjointness (after each shard's own tombstone purge).
     dl_frames = [
-        _purged(read_parquet_retry(spark, lay["doclens"]), i).select(
-            "doc_id"
-        )
-        for i, lay in enumerate(layers)
+        purge(read_parquet_retry(spark, lay["doclens"])).select("doc_id")
+        for purge, lay in zip(purges, layers)
     ]
     dl_all = dl_frames[0]
     for f in dl_frames[1:]:
@@ -586,26 +455,20 @@ def merge_indexes(
     # independent — submit both collects concurrently (guide §2.6) and
     # evaluate the results in the documented order so error precedence
     # is unchanged.
-    import concurrent.futures as _cf
-
-    with _cf.ThreadPoolExecutor(max_workers=2) as _ex:
-        f_split = _ex.submit(
-            lambda: lex_all.distinct()
-            .groupBy("tok")
-            .agg(F.countDistinct("bucket").alias("nb"))
-            .where(F.col("nb") > 1)
-            .limit(5)
-            .collect()
-        )
-        f_dups = _ex.submit(
-            lambda: dl_all.groupBy("doc_id")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .where(F.col("n") > 1)
-            .limit(5)
-            .collect()
-        )
-        split_toks = f_split.result()
-        dups = f_dups.result()
+    split_toks, dups = run_concurrently(
+        spark,
+        lambda: lex_all.distinct()
+        .groupBy("tok")
+        .agg(F.countDistinct("bucket").alias("nb"))
+        .where(F.col("nb") > 1)
+        .limit(5)
+        .collect(),
+        lambda: dl_all.groupBy("doc_id")
+        .agg(F.count(F.lit(1)).alias("n"))
+        .where(F.col("n") > 1)
+        .limit(5)
+        .collect(),
+    )
     if split_toks:
         raise ValueError(
             "shards hash the same token to different buckets (e.g. "
@@ -626,14 +489,11 @@ def merge_indexes(
     # (layout.merge_sharded_layer): per-bucket union purged per shard,
     # bin-packed by listed bytes; doclens is the flat form (one row per
     # doc — billions at the design point; never force a single file).
-    purge_callables = [
-        (lambda df, i=i: _purged(df, i)) for i in range(len(layers))
-    ]
     moved = merge_sharded_layer(
         spark,
         [lay["postings"] for lay in layers],
         f"{dst_dir}/postings.new",
-        purge_callables,
+        purges,
         sort_within_by=("tok", "doc_id"),
         target_file_bytes=target_file_bytes,
     )
@@ -647,7 +507,7 @@ def merge_indexes(
         spark,
         [lay["doclens"] for lay in layers],
         f"{dst_dir}/doclens.new",
-        purge_callables,
+        purges,
         partitioned=False,
         target_file_bytes=target_file_bytes,
     )
@@ -700,7 +560,6 @@ def bm25_search(
     'readers should retry' contract real)."""
     from migrate_cassandra_to_mysql_spark.operators.layout import (
         read_parquet_retry,
-        resolve_live_snapshot,
     )
 
     terms = list(terms)
@@ -711,23 +570,16 @@ def bm25_search(
 
         score_sql = _bm25_score_sql(len(terms))
     buckets = sorted({term_bucket(t, n_buckets) for t in terms})
-    layer = resolve_live_snapshot(index_dir, _manifest_layers(index_dir))
+    layer = tombstones.resolve(index_dir, LAYERS)
+    # tombstoned docs are invisible to serving the moment the delete
+    # commits; the physical purge rides the next compaction
     postings = (
         read_parquet_retry(spark, layer["postings"])
         .where(F.col("bucket").isin(buckets))
         .where(F.col("tok").isin(terms))
         .select("doc_id", "dl", "tok", "tf")
     )
-    if "deletes" in layer:
-        # tombstoned docs are invisible to serving the moment the delete
-        # commits; the physical purge rides the next compaction
-        postings = postings.join(
-            F.broadcast(
-                read_parquet_retry(spark, layer["deletes"]).select("doc_id")
-            ),
-            "doc_id",
-            "left_anti",
-        )
+    postings = tombstones.mask(spark, layer, "doc_id")(postings)
     if allowed is not None:
         postings = postings.join(
             F.broadcast(allowed.select("doc_id")), "doc_id", "left_semi"

@@ -28,6 +28,10 @@ from pyspark.sql import functions as F
 from migrate_cassandra_to_mysql_spark.functions.vectors import cosine
 from migrate_cassandra_to_mysql_spark.functions.localframe import local_frame
 from migrate_cassandra_to_mysql_spark.operators import kmeans as km
+from migrate_cassandra_to_mysql_spark.operators import tombstones
+
+# The index's mutable data layers (cells/pq/meta are frozen at build).
+LAYERS = ("codes",)
 
 
 def _base(embeddings: DataFrame) -> DataFrame:
@@ -65,26 +69,11 @@ def kmeans_codebook(
     """Trained codebook: k-means fit (see operators/kmeans.py). Centroid
     ids are re-numbered 0..k-1 in vec_id order of the init points so cell
     directory names are stable and dense."""
-    spark = embeddings.sparkSession
-    e = _base(embeddings)
-    if init == "farthest-point":
-        rows = km.init_farthest_point(e, k)
-    else:
-        rows = km.init_first_k(e, k)
-    cents = rows
-    for _ in range(n_iter):
-        cent_df = local_frame(
-            spark,
-            [(int(r["c_id"]), list(r["cv"])) for r in cents],
-            "c_id long, cv array<double>",
-        )
-        assigned = km._assign(e, cent_df)
-        cents = km._update(assigned, cents)
-    renumbered = [
-        (i, list(r["cv"]))
-        for i, r in enumerate(sorted(cents, key=lambda r: r["c_id"]))
-    ]
-    return local_frame(spark, renumbered, "c_id long, cv array<double>")
+    return local_frame(
+        embeddings.sparkSession,
+        list(enumerate(km.train_centroid_vectors(embeddings, k, n_iter, init))),
+        "c_id long, cv array<double>",
+    )
 
 
 def build_ivf_index(
@@ -219,7 +208,7 @@ def build_ivfpq_index(
         commit_live_snapshot,
     )
 
-    commit_live_snapshot(index_dir, ("codes",))
+    commit_live_snapshot(index_dir, LAYERS)
 
 
 def append_to_ivfpq_index(
@@ -244,7 +233,7 @@ def append_to_ivfpq_index(
     # code rows must be physically gone before the new copy lands, so
     # run the owed purge (compact_codes — which also resets the layer)
     # first. See append_to_inverted_index for the rationale.
-    if _vec_tombstone_hits(spark, index_dir, embeddings_new.select("vec_id")):
+    if tombstones.hits(spark, index_dir, embeddings_new, "vec_id"):
         compact_codes(spark, index_dir)
     cell_centroids, centers = load_ivfpq_codebooks(spark, index_dir)
     (
@@ -279,48 +268,27 @@ def compact_codes(
     tests/test_ivf_index.py. Quiescent-ingest contract for streamed
     indexes. Returns compaction stats."""
     from migrate_cassandra_to_mysql_spark.operators.layout import (
-        commit_live_snapshot,
         compact_partitioned,
         swap_live_dir,
     )
 
-    deletes = _load_vec_deletes(spark, index_dir)
-    stats = compact_partitioned(
-        spark,
-        f"{index_dir}/codes",
-        f"{index_dir}/codes.new",
-        target_file_bytes=target_file_bytes,
-        sort_within_by=["vec_id"],
-        merge_sub_partitions_into="ingest_batch=0",
-        # tombstone purge rides the rewrite compaction does anyway
-        transform=None
-        if deletes is None
-        else (
-            lambda df: df.join(F.broadcast(deletes), "vec_id", "left_anti")
-        ),
-    )
-    swap_live_dir(index_dir, "codes")
-    if deletes is not None:
-        (
-            local_frame(spark, [], "vec_id long")
-            .coalesce(1)
-            .write.mode("overwrite")
-            .parquet(f"{index_dir}/deletes.new")
+    # the tombstone purge rides the rewrite compaction does anyway
+    with tombstones.compaction(spark, index_dir, "vec_id") as purge:
+        stats = compact_partitioned(
+            spark,
+            f"{index_dir}/codes",
+            f"{index_dir}/codes.new",
+            target_file_bytes=target_file_bytes,
+            sort_within_by=["vec_id"],
+            merge_sub_partitions_into="ingest_batch=0",
+            transform=purge,
         )
-        swap_live_dir(index_dir, "deletes")
+        swap_live_dir(index_dir, "codes")
     # ALWAYS re-commit after the codes swap: a manifest left pointing at
     # the pre-compaction version would pin readers there — harmlessly at
     # first (compaction is content-identical), but LATER APPENDS land in
     # the new live version and manifest-pinned readers would miss them.
-    import os as _os
-
-    d = f"{index_dir}/deletes"
-    commit_live_snapshot(
-        index_dir,
-        ("codes", "deletes")
-        if _os.path.islink(d) or _os.path.isdir(d)
-        else ("codes",),
-    )
+    tombstones.commit(index_dir, LAYERS)
     return stats
 
 
@@ -356,7 +324,6 @@ def merge_indexes(
     from migrate_cassandra_to_mysql_spark.operators.layout import (
         commit_live_snapshot,
         merge_sharded_layer,
-        read_parquet_retry,
         swap_live_dir,
     )
 
@@ -379,32 +346,14 @@ def merge_indexes(
                 "target codebooks (build_ivfpq_index over its vectors, "
                 "passing the target cells/centers) before merging."
             )
-    layers = [_resolve_layers(d) for d in src_dirs]
-    purges = [
-        (
-            F.broadcast(
-                read_parquet_retry(spark, lay["deletes"]).select("vec_id")
-            )
-            if "deletes" in lay
-            else None
-        )
-        for lay in layers
-    ]
-
-    def _purged(df: DataFrame, i: int) -> DataFrame:
-        return (
-            df
-            if purges[i] is None
-            else df.join(purges[i], "vec_id", "left_anti")
-        )
+    layers = [tombstones.resolve(d, LAYERS) for d in src_dirs]
+    purges = [tombstones.mask(spark, lay, "vec_id") for lay in layers]
 
     # vec disjointness (cheap: codes rows carry m ints, and the check
     # shuffles only the id column)
     ids = None
-    for i, lay in enumerate(layers):
-        one = _purged(
-            spark.read.parquet(lay["codes"]).select("vec_id"), i
-        )
+    for purge, lay in zip(purges, layers):
+        one = purge(spark.read.parquet(lay["codes"]).select("vec_id"))
         ids = one if ids is None else ids.unionByName(one)
     dups = (
         ids.groupBy("vec_id")
@@ -438,7 +387,7 @@ def merge_indexes(
         spark,
         [lay["codes"] for lay in layers],
         f"{dst_dir}/codes.new",
-        [(lambda df, i=i: _purged(df, i)) for i in range(len(layers))],
+        purges,
         sort_within_by=("vec_id",),
         target_file_bytes=target_file_bytes,
     )
@@ -449,7 +398,7 @@ def merge_indexes(
         "cells": moved["partitions"],
     }
     swap_live_dir(dst_dir, "codes")
-    commit_live_snapshot(dst_dir, ("codes",))
+    commit_live_snapshot(dst_dir, LAYERS)
     return agg
 
 
@@ -543,103 +492,22 @@ def load_ivfpq_codebooks(
     return cell_centroids, centers
 
 
-def _resolve_layers(index_dir: str) -> dict[str, str]:
-    """Snapshot-consistent layer resolution for the codes index: codes,
-    plus the tombstone layer once delete_vectors has run (two mutable
-    layers must move together — see inverted_index._manifest_layers)."""
-    import os as _os
-
-    from migrate_cassandra_to_mysql_spark.operators.layout import (
-        resolve_live_snapshot,
-    )
-
-    parts = ("codes",)
-    d = f"{index_dir}/deletes"
-    if _os.path.islink(d) or _os.path.isdir(d):
-        parts = ("codes", "deletes")
-    return resolve_live_snapshot(index_dir, parts)
-
-
 def delete_vectors(spark: SparkSession, index_dir: str, vec_ids) -> None:
     """Delete vectors from the persisted IVFADC index — tombstone twin of
-    inverted_index.delete_docs (equality-delete shape): vec_ids append to
-    a tiny versioned `deletes` layer and a manifest commit makes them
-    invisible to every subsequent search atomically; the next
-    compact_codes physically purges the code rows and resets the layer.
-    Cost now: O(tombstones); no codebook retrain, no cell rewrite (the
-    frozen-codebook contract is untouched — deletions only remove
-    candidates). Same single-maintainer / quiescent-ingest contract as
-    compact_codes. A LATER batch append of a tombstoned vec_id
-    supersedes the deletion (append_to_ivfpq_index purges first via
-    compact_codes); streaming ingest rejects re-adds loudly instead
-    (stream_vectors_into_ivfpq_index).
-
-    Atomicity (r10 ADVICE, same fix as delete_docs): the ENLARGED
-    tombstone set is staged in `deletes.new` and promoted via
-    swap_live_dir — a NEW version dir — so a reader whose manifest pins
-    the previous deletes version keeps the old set until THIS deletion's
-    manifest commit; appending into the live version dir instead leaked
-    the new tombstones to manifest-pinned readers before the commit.
-
-    Concurrency (r11 ADVICE, same fix as delete_docs): the
-    read-enlarge-stage-swap sequence runs under its own `deletes.rmw`
-    maintainer lockfile — swap_live_dir's lock guards only the
-    promotion, so without this two concurrent deleters could each read
-    the same base set and the second swap would silently discard the
-    first's tombstones. A second deleter now fails loudly instead."""
-    from migrate_cassandra_to_mysql_spark.operators.layout import (
-        _maintainer_lock,
-        commit_live_snapshot,
-        swap_live_dir,
+    inverted_index.delete_docs: vec_ids join the tombstone layer
+    (operators/tombstones, which holds the atomicity and concurrency
+    contract) and one manifest commit makes them invisible to every
+    later search; the next compact_codes physically purges the code rows
+    and resets the layer. Cost now: O(tombstones); no codebook retrain,
+    no cell rewrite (deletions only remove candidates). Same
+    single-maintainer / quiescent-ingest contract as compact_codes. A
+    LATER batch append of a tombstoned vec_id supersedes the deletion
+    (append_to_ivfpq_index purges first via compact_codes); streaming
+    ingest rejects re-adds loudly instead (stream_vectors_into_ivfpq_index)."""
+    tombstones.add(
+        spark, index_dir, vec_ids, "vec_id",
+        lambda: tombstones.commit(index_dir, LAYERS),
     )
-
-    if not isinstance(vec_ids, DataFrame):
-        vec_ids = local_frame(
-            spark, [(int(i),) for i in vec_ids], "vec_id long"
-        )
-    new = vec_ids.select(F.col("vec_id").cast("long"))
-    with _maintainer_lock(index_dir, "deletes.rmw", 3600.0):
-        existing = _load_vec_deletes(spark, index_dir)
-        enlarged = new if existing is None else existing.unionByName(new)
-        (
-            enlarged.distinct()
-            .coalesce(1)
-            .write.mode("overwrite")
-            .parquet(f"{index_dir}/deletes.new")
-        )
-        swap_live_dir(index_dir, "deletes")
-        commit_live_snapshot(index_dir, ("codes", "deletes"))
-
-
-def _load_vec_deletes(spark: SparkSession, index_dir: str):
-    import os as _os
-
-    d = f"{index_dir}/deletes"
-    if not (_os.path.islink(d) or _os.path.isdir(d)):
-        return None
-    deletes = spark.read.parquet(d).select("vec_id")
-    if deletes.isEmpty():
-        return None
-    return deletes
-
-
-def _vec_tombstone_hits(
-    spark: SparkSession, index_dir: str, ids_df
-) -> list[int]:
-    """Which of `ids_df`'s vec_ids are currently tombstoned — the vector
-    twin of inverted_index._tombstone_hits (broadcast-tombstone
-    semi-join probe over the batch, control-plane-sized collect; no
-    tombstones -> no jobs)."""
-    deletes = _load_vec_deletes(spark, index_dir)
-    if deletes is None:
-        return []
-    return [
-        r["vec_id"]
-        for r in ids_df.select("vec_id")
-        .join(F.broadcast(deletes), "vec_id", "left_semi")
-        .distinct()
-        .collect()
-    ]
 
 
 def ivfpq_search(
@@ -695,24 +563,15 @@ def ivfpq_search(
         ).alias("q_cell"),
     )
     probed = [r["q_cell"] for r in q.select("q_cell").distinct().collect()]
-    layer = _resolve_layers(index_dir)
+    layer = tombstones.resolve(index_dir, LAYERS)
     codes = (
         read_parquet_retry(spark, layer["codes"])
         .where(F.col("cell").isin(probed))
         .select("vec_id", "codes", F.col("cell").cast("long").alias("cell"))
     )
-    if "deletes" in layer:
-        # tombstoned vectors are invisible the moment the delete commits;
-        # the physical purge rides the next compact_codes (same manifest
-        # discipline as the inverted index, so a reader can never pair
-        # purged codes with emptied tombstones or vice versa)
-        codes = codes.join(
-            F.broadcast(
-                read_parquet_retry(spark, layer["deletes"]).select("vec_id")
-            ),
-            "vec_id",
-            "left_anti",
-        )
+    # tombstoned vectors are invisible the moment the delete commits; the
+    # physical purge rides the next compact_codes
+    codes = tombstones.mask(spark, layer, "vec_id")(codes)
     if allowed is not None:
         codes = codes.join(
             F.broadcast(allowed.select("vec_id")), "vec_id", "left_semi"

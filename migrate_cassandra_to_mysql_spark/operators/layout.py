@@ -425,6 +425,46 @@ def merge_sharded_layer(
     return agg
 
 
+def run_concurrently(spark, *thunks: "Callable[[], object]") -> list:
+    """Run independent Spark-action thunks on their own threads (threads
+    drive submission only; Spark's scheduler multiplexes execution) and
+    return their results in submit order.
+
+    The first failure cancels the siblings' Spark jobs — found by a job
+    tag each worker sets, so callers' job groups are untouched — waits
+    for every thread to return, then re-raises that failure: no writer
+    outlives the call, and a failed layer write does not wait out its
+    sibling's full job first."""
+    import concurrent.futures as _cf
+    import uuid as _uuid
+
+    sc = spark.sparkContext
+    tag = f"run_concurrently-{_uuid.uuid4().hex}"
+
+    def tagged(fn):
+        def run():
+            sc.addJobTag(tag)
+            try:
+                return fn()
+            finally:
+                sc.removeJobTag(tag)
+
+        return run
+
+    with _cf.ThreadPoolExecutor(max_workers=len(thunks)) as ex:
+        futs = [ex.submit(tagged(t)) for t in thunks]
+        _cf.wait(futs, return_when=_cf.FIRST_EXCEPTION)
+        failed = [f for f in futs if f.done() and f.exception() is not None]
+        if failed:
+            # a sibling may submit its next job after a cancel: repeat
+            # until every thread has returned
+            while not all(f.done() for f in futs):
+                sc.cancelJobsWithTag(tag)
+                _cf.wait(futs, timeout=0.05)
+            raise failed[0].exception()
+        return [f.result() for f in futs]
+
+
 def read_parquet_retry(
     spark,
     path: str,

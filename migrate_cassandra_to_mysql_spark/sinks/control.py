@@ -25,6 +25,8 @@ from __future__ import annotations
 
 from collections.abc import Callable
 
+from migrate_cassandra_to_mysql_spark.sinks.idempotent import MYSQL, Dialect
+
 CHECKPOINTS_DDL = """
 CREATE TABLE IF NOT EXISTS snapshot_checkpoints (
   range_start BIGINT NOT NULL,
@@ -53,15 +55,7 @@ def bootstrap(conn) -> None:
     conn.commit()
 
 
-def truncate_control(conn) -> None:
-    """Fresh start (S10)."""
-    cur = conn.cursor()
-    for t in ("snapshot_checkpoints", "snapshot_validation"):
-        cur.execute(f"DELETE FROM {t}")
-    conn.commit()
-
-
-def seed_checkpoints(conn, ranges: list[dict], placeholder: str = "?") -> int:
+def seed_checkpoints(conn, ranges: list[dict], dialect: Dialect = MYSQL) -> int:
     """Seed ranges iff the table is empty (reference :143-153). Returns the
     number seeded (0 when resuming an existing run)."""
     cur = conn.cursor()
@@ -69,8 +63,8 @@ def seed_checkpoints(conn, ranges: list[dict], placeholder: str = "?") -> int:
     if cur.fetchone()[0] > 0:
         return 0
     cur.executemany(
-        f"INSERT INTO snapshot_checkpoints (range_start, range_end, checkpoint)"
-        f" VALUES ({placeholder}, {placeholder}, {placeholder})",
+        "INSERT INTO snapshot_checkpoints (range_start, range_end, checkpoint)"
+        f" VALUES ({dialect.params(3)})",
         [(r["range_start"], r["range_end"], r["checkpoint"]) for r in ranges],
     )
     conn.commit()
@@ -91,13 +85,14 @@ def fetch_incomplete(conn) -> list[dict]:
 
 
 def update_checkpoints(
-    conn, updates: list[tuple[int, int, int]], placeholder: str = "?"
+    conn, updates: list[tuple[int, int, int]], dialect: Dialect = MYSQL
 ) -> None:
     """Bulk (checkpoint, range_start, range_end) updates after a wave."""
+    ph = dialect.params(1)
     cur = conn.cursor()
     cur.executemany(
-        f"UPDATE snapshot_checkpoints SET checkpoint = {placeholder}"
-        f" WHERE range_start = {placeholder} AND range_end = {placeholder}",
+        f"UPDATE snapshot_checkpoints SET checkpoint = {ph}"
+        f" WHERE range_start = {ph} AND range_end = {ph}",
         updates,
     )
     conn.commit()
@@ -108,17 +103,16 @@ def record_validation(
     table_name: str,
     source_count: int,
     target_count: int,
-    placeholder: str = "?",
+    dialect: Dialect = MYSQL,
 ) -> str:
     """Persist the reconciliation verdict (reference :392-401)."""
     diff = abs(source_count - target_count)
     status = "OK" if diff == 0 else "MISMATCH"
     cur = conn.cursor()
     cur.execute(
-        f"INSERT INTO snapshot_validation"
-        f" (table_name, source_count, target_count, diff, status)"
-        f" VALUES ({placeholder}, {placeholder}, {placeholder}, {placeholder},"
-        f" {placeholder})",
+        "INSERT INTO snapshot_validation"
+        " (table_name, source_count, target_count, diff, status)"
+        f" VALUES ({dialect.params(5)})",
         (table_name, source_count, target_count, diff, status),
     )
     conn.commit()
@@ -130,16 +124,18 @@ def run_waves(
     process_ranges: Callable[[list[dict]], list[tuple[int, int, int]]],
     ranges: list[dict],
     max_waves: int = 10,
+    dialect: Dialect = MYSQL,
 ) -> int:
     """The wave loop (D5): dispatch incomplete ranges to `process_ranges`
     (which returns (checkpoint, range_start, range_end) results — typically
     by running a range-filtered Spark job), update checkpoints, repeat
     until done. A range whose processing failed simply stays incomplete and
     is re-dispatched next wave — same convergence contract as the
-    reference (:465-478). Returns the number of waves run."""
+    reference (:465-478). `dialect` is the target's (its paramstyle
+    shapes the checkpoint SQL). Returns the number of waves run."""
     conn = connection_factory()
     bootstrap(conn)
-    seed_checkpoints(conn, ranges)
+    seed_checkpoints(conn, ranges, dialect)
     waves = 0
     while waves < max_waves:
         todo = fetch_incomplete(conn)
@@ -149,7 +145,7 @@ def run_waves(
         results = process_ranges(todo)
         if results:
             update_checkpoints(
-                conn, [(c, s, e) for (c, s, e) in results]
+                conn, [(c, s, e) for (c, s, e) in results], dialect
             )
     conn.close()
     return waves

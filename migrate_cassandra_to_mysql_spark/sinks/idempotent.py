@@ -41,19 +41,29 @@ MYSQL_DEADLOCK_ERRNOS = (1213, 1205)
 
 @dataclass(frozen=True)
 class Dialect:
+    """SQL text for one target database, including its driver's
+    paramstyle — the one place every statement the engine sends (sink,
+    WAL and control plane) takes its placeholders from."""
+
     name: str
 
+    def params(self, n: int) -> str:
+        """n comma-separated placeholders: MySQL drivers take `%s`,
+        sqlite3 takes `?`."""
+        ph = {"mysql": "%s", "sqlite": "?"}.get(self.name)
+        if ph is None:
+            raise ValueError(f"unknown dialect {self.name}")
+        return ", ".join([ph] * n)
+
     def insert_ignore(self, table: str, cols: list[str]) -> str:
-        placeholders = ", ".join(["%s"] * len(cols))
+        ph = self.params(len(cols))
         collist = ", ".join(cols)
         if self.name == "mysql":
-            return f"INSERT IGNORE INTO {table} ({collist}) VALUES ({placeholders})"
-        if self.name == "sqlite":
-            qs = ", ".join(["?"] * len(cols))
-            return f"INSERT OR IGNORE INTO {table} ({collist}) VALUES ({qs})"
-        raise ValueError(f"unknown dialect {self.name}")
+            return f"INSERT IGNORE INTO {table} ({collist}) VALUES ({ph})"
+        return f"INSERT OR IGNORE INTO {table} ({collist}) VALUES ({ph})"
 
     def upsert(self, table: str, cols: list[str], key_cols: list[str]) -> str:
+        ph = self.params(len(cols))
         collist = ", ".join(cols)
         updates = ", ".join(
             f"{c}=VALUES({c})" if self.name == "mysql" else f"{c}=excluded.{c}"
@@ -61,19 +71,15 @@ class Dialect:
             if c not in key_cols
         )
         if self.name == "mysql":
-            ph = ", ".join(["%s"] * len(cols))
             return (
                 f"INSERT INTO {table} ({collist}) VALUES ({ph}) "
                 f"ON DUPLICATE KEY UPDATE {updates}"
             )
-        if self.name == "sqlite":
-            ph = ", ".join(["?"] * len(cols))
-            keys = ", ".join(key_cols)
-            return (
-                f"INSERT INTO {table} ({collist}) VALUES ({ph}) "
-                f"ON CONFLICT({keys}) DO UPDATE SET {updates}"
-            )
-        raise ValueError(f"unknown dialect {self.name}")
+        keys = ", ".join(key_cols)
+        return (
+            f"INSERT INTO {table} ({collist}) VALUES ({ph}) "
+            f"ON CONFLICT({keys}) DO UPDATE SET {updates}"
+        )
 
 
 MYSQL = Dialect("mysql")
@@ -175,10 +181,9 @@ def write_partition(
 
 
 def _wal_sql(dialect: Dialect, status: str) -> str:
-    ph = "%s" if dialect.name == "mysql" else "?"
     return (
         f"INSERT INTO snapshot_wal (table_name, batch_id, n_rows, status) "
-        f"VALUES ({ph}, {ph}, {ph}, '{status}')"
+        f"VALUES ({dialect.params(3)}, '{status}')"
     )
 
 

@@ -12,12 +12,11 @@ replace the reference's manual range fan-out for the MySQL side).
 NOTE: Spark's built-in JDBC writer is append/overwrite only — for the
 INSERT IGNORE / upsert semantics the reference depends on, use
 sinks/idempotent.py (mapInArrow with key-idempotent SQL). These
-builders are for plain reads and bulk loads into keyless staging tables.
+builders are for plain reads and bulk loads into keyless staging tables:
+pass them to `spark.read.format("jdbc").options(...)` or the writer's.
 """
 
 from __future__ import annotations
-
-from pyspark.sql import DataFrame, DataFrameReader, SparkSession
 
 
 def mysql_url(host: str, port: int, database: str, **props: str) -> str:
@@ -69,16 +68,3 @@ def write_options(
         "truncate": str(truncate).lower(),
     }
 
-
-def jdbc_read(spark: SparkSession, **kwargs) -> DataFrame:
-    reader: DataFrameReader = spark.read.format("jdbc")
-    for k, v in read_options(**kwargs).items():
-        reader = reader.option(k, v)
-    return reader.load()
-
-
-def jdbc_write(df: DataFrame, mode: str = "append", **kwargs) -> None:
-    writer = df.write.format("jdbc").mode(mode)
-    for k, v in write_options(**kwargs).items():
-        writer = writer.option(k, v)
-    writer.save()

@@ -172,8 +172,6 @@ def _spread(df: DataFrame, path: str) -> DataFrame:
     """
     import os as _os
 
-    if _os.environ.get("SPARK_GRAFT_SPREAD", "1") == "0":
-        return df
     sess = df.sparkSession
     target = sess.sparkContext.defaultParallelism
     max_bytes = _parse_bytes(

@@ -59,6 +59,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from migrate_cassandra_to_mysql_spark.operators import inverted_index as inv
+from migrate_cassandra_to_mysql_spark.operators import tombstones
 from migrate_cassandra_to_mysql_spark.streaming.snapshot_stream import (
     snapshot_stream,
 )
@@ -317,9 +318,7 @@ def stream_docs_into_inverted_index(
         drained = spark.read.parquet(f"{index_dir}/doclens").where(
             F.col("ingest_batch").isin([b + 1 for b in processed])
         )
-        readds = inv._tombstone_hits(
-            spark, index_dir, drained.select("doc_id")
-        )
+        readds = tombstones.hits(spark, index_dir, drained, "doc_id")
         if readds:
             raise ValueError(
                 f"drain ingested {len(readds)} doc_id(s) that are "
@@ -382,9 +381,7 @@ def stream_vectors_into_ivfpq_index(
         drained = spark.read.parquet(f"{index_dir}/codes").where(
             F.col("ingest_batch").isin([b + 1 for b in processed])
         )
-        readds = ivf_index._vec_tombstone_hits(
-            spark, index_dir, drained.select("vec_id")
-        )
+        readds = tombstones.hits(spark, index_dir, drained, "vec_id")
         if readds:
             raise ValueError(
                 f"drain ingested {len(readds)} vec_id(s) that are "

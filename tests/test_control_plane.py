@@ -26,12 +26,14 @@ def test_token_ranges_seed_and_resume():
     conn = factory()
     control.bootstrap(conn)
     ranges = token_ranges(16)
-    assert control.seed_checkpoints(conn, ranges) == 16
-    assert control.seed_checkpoints(conn, ranges) == 0  # resume: no reseed
+    assert control.seed_checkpoints(conn, ranges, sink.SQLITE) == 16
+    assert control.seed_checkpoints(conn, ranges, sink.SQLITE) == 0  # resume: no reseed
     assert len(control.fetch_incomplete(conn)) == 16
     # complete 10 of them
     control.update_checkpoints(
-        conn, [(r["range_end"], r["range_start"], r["range_end"]) for r in ranges[:10]]
+        conn,
+        [(r["range_end"], r["range_start"], r["range_end"]) for r in ranges[:10]],
+        sink.SQLITE,
     )
     assert len(control.fetch_incomplete(conn)) == 6
     conn.close()
@@ -41,8 +43,11 @@ def test_validation_verdicts():
     _, factory = _mkdb()
     conn = factory()
     control.bootstrap(conn)
-    assert control.record_validation(conn, "files", 100, 100) == "OK"
-    assert control.record_validation(conn, "files", 100, 97) == "MISMATCH"
+    assert control.record_validation(conn, "files", 100, 100, sink.SQLITE) == "OK"
+    assert (
+        control.record_validation(conn, "files", 100, 97, sink.SQLITE)
+        == "MISMATCH"
+    )
     rows = conn.execute(
         "SELECT table_name, diff, status FROM snapshot_validation ORDER BY diff"
     ).fetchall()
@@ -85,11 +90,14 @@ def test_full_wave_lifecycle_with_flaky_ranges(spark, sf_dir):
             results.append((r["range_end"], r["range_start"], r["range_end"]))
         return results
 
-    waves = control.run_waves(factory, process, ranges)
+    waves = control.run_waves(factory, process, ranges, dialect=sink.SQLITE)
     assert waves == 2  # converged after re-dispatching the failed range
 
     conn = factory()
     n = conn.execute("SELECT count(*) FROM dst").fetchone()[0]
-    assert control.record_validation(conn, "orders", orders.count(), n) == "OK"
+    assert (
+        control.record_validation(conn, "orders", orders.count(), n, sink.SQLITE)
+        == "OK"
+    )
     assert control.fetch_incomplete(conn) == []
     conn.close()

@@ -7,12 +7,14 @@ the z-order sort than under a 1-D sort.
 from __future__ import annotations
 
 import glob
+import time
 
 import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
 from migrate_cassandra_to_mysql_spark.operators.layout import (
+    run_concurrently,
     write_zordered,
     zvalue,
     zvalue_py,
@@ -634,3 +636,35 @@ def test_doctor_live_store_detects_and_repairs(tmp_path):
     healed = json.loads((tmp_path / "_snapshot.json").read_text())["layers"]
     assert healed == {"postings": "postings.v2", "stats": "stats.v2"}
     assert doctor_live_store(str(tmp_path)) == []
+
+
+def test_run_concurrently_returns_results_in_submit_order(spark):
+    def slow():
+        time.sleep(0.5)
+        return spark.range(3).count()
+
+    assert run_concurrently(spark, slow, lambda: "fast") == [3, "fast"]
+
+
+def test_run_concurrently_cancels_sibling_on_first_failure(spark):
+    """A failing thunk beside a slow Spark job raises its own error well
+    before the slow job could finish: the sibling's jobs are cancelled
+    and its thread has returned by the time the call raises."""
+    slow_s = 30
+    nap = F.udf(lambda x: time.sleep(slow_s) or x, "long")
+    finished = []
+
+    def slow_job():
+        spark.range(0, 4, 1, 4).select(nap("id")).collect()
+        finished.append(True)
+
+    def fail():
+        time.sleep(1.0)
+        raise ValueError("layer write failed")
+
+    t0 = time.monotonic()
+    with pytest.raises(ValueError, match="layer write failed"):
+        run_concurrently(spark, slow_job, fail)
+    assert time.monotonic() - t0 < slow_s / 2
+    assert not finished
+    assert spark.sparkContext.statusTracker().getActiveJobsIds() == []
