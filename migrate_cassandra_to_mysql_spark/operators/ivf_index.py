@@ -22,6 +22,7 @@ iterations, still deterministic).
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -29,9 +30,21 @@ from migrate_cassandra_to_mysql_spark.functions.vectors import cosine
 from migrate_cassandra_to_mysql_spark.functions.localframe import local_frame
 from migrate_cassandra_to_mysql_spark.operators import kmeans as km
 from migrate_cassandra_to_mysql_spark.operators import tombstones
+from migrate_cassandra_to_mysql_spark.operators.layout import read_parquet_retry
 
 # The index's mutable data layers (cells/pq/meta are frozen at build).
 LAYERS = ("codes",)
+
+# The IVFADC layers' schemas, partition columns last. Every read passes
+# its layer's schema: inferring it from parquet footers costs a Spark job
+# per read (tests/test_index_schemas.py pins these against what build,
+# append, ingest, compaction and merge write).
+SCHEMAS = {
+    "codes": "vec_id bigint, codes array<int>, cell int, ingest_batch int",
+    "cells": "c_id bigint, cv array<double>",
+    "pq": "mi int, j int, cv array<double>",
+    "meta": "residual boolean",
+}
 
 
 def _base(embeddings: DataFrame) -> DataFrame:
@@ -282,6 +295,7 @@ def compact_codes(
             sort_within_by=["vec_id"],
             merge_sub_partitions_into="ingest_batch=0",
             transform=purge,
+            schema=SCHEMAS["codes"],
         )
         swap_live_dir(index_dir, "codes")
     # ALWAYS re-commit after the codes swap: a manifest left pointing at
@@ -353,7 +367,9 @@ def merge_indexes(
     # shuffles only the id column)
     ids = None
     for purge, lay in zip(purges, layers):
-        one = purge(spark.read.parquet(lay["codes"]).select("vec_id"))
+        one = purge(
+            read_parquet_retry(spark, lay["codes"], SCHEMAS["codes"])
+        ).select("vec_id")
         ids = one if ids is None else ids.unionByName(one)
     dups = (
         ids.groupBy("vec_id")
@@ -374,7 +390,9 @@ def merge_indexes(
     for part in ("cells", "pq", "meta"):
         if _os.path.isdir(f"{src_dirs[0]}/{part}"):
             (
-                spark.read.parquet(f"{src_dirs[0]}/{part}")
+                read_parquet_retry(
+                    spark, f"{src_dirs[0]}/{part}", SCHEMAS[part]
+                )
                 .coalesce(1)
                 .write.mode("overwrite")
                 .parquet(f"{dst_dir}/{part}")
@@ -390,6 +408,7 @@ def merge_indexes(
         purges,
         sort_within_by=("vec_id",),
         target_file_bytes=target_file_bytes,
+        schema=SCHEMAS["codes"],
     )
     agg = {
         "files_in": moved["files_in"],
@@ -465,7 +484,8 @@ def load_ivfpq_residual_flag(spark: SparkSession, index_dir: str) -> bool:
     if hit is not None:
         return hit
     value = bool(
-        spark.read.parquet(f"{index_dir}/meta").collect()[0]["residual"]
+        read_parquet_retry(spark, f"{index_dir}/meta", SCHEMAS["meta"])
+        .collect()[0]["residual"]
     )
     _cache_put("residual", index_dir, ("meta",), value)
     return value
@@ -480,10 +500,14 @@ def load_ivfpq_codebooks(
     hit = _cache_get("codebooks", index_dir, ("cells", "pq"))
     if hit is not None:
         return hit
-    cell_rows = spark.read.parquet(f"{index_dir}/cells").collect()
+    cell_rows = read_parquet_retry(
+        spark, f"{index_dir}/cells", SCHEMAS["cells"]
+    ).collect()
     cell_rows.sort(key=lambda r: r["c_id"])
     cell_centroids = [list(r["cv"]) for r in cell_rows]
-    pq_rows = spark.read.parquet(f"{index_dir}/pq").collect()
+    pq_rows = read_parquet_retry(
+        spark, f"{index_dir}/pq", SCHEMAS["pq"]
+    ).collect()
     m = 1 + max(r["mi"] for r in pq_rows)
     n = 1 + max(r["j"] for r in pq_rows)
     by_mj = {(r["mi"], r["j"]): list(r["cv"]) for r in pq_rows}
@@ -519,22 +543,27 @@ def ivfpq_search(
     allowed: DataFrame | None = None,
 ) -> DataFrame:
     """ADC top-k per query row (q_id, qv) over the persisted IVFADC
-    index. Probe cells come from a map-side literal-codebook expression
-    on the query side; the probed set (control-plane sized) becomes a
-    literal IN filter that reaches the codes scan as a parquet
-    PartitionFilter — unprobed cells' files are never opened, and the
-    rows that ARE read carry m code bytes, not d-dim vectors. Scoring is
-    a broadcast equi-join on cell + m ADC table lookups per candidate:
-    the query side computes each (query, probed cell)'s m x n_centers
-    distance table once, so the broadcast row is (q_id, q_cell, lut)
-    with m * n_centers doubles instead of the d-dim query vector (1 KB
-    per row at m=8, 16 centers; n_probe rows per query). The only
-    shuffle is the per-query top-k window. Same conventions as the
-    inline operators, so results equal similarity.ivfpq_topk row-for-row. The
-    index's persisted encoding mode (meta/) selects raw or residual ADC
-    automatically — a query cannot accidentally score residual codes
-    with raw query vectors. The codes read retries through a concurrent
-    compact_codes' rename-swap window (layout.read_parquet_retry).
+    index. The query side is computed on the driver: the queries' rows
+    are collected once (no job for a local frame, one for any other
+    frame; qv is read as array<double>), and for each query its probe
+    cells and, per probed cell, its m x n_centers ADC distance table
+    come from operators/similarity's driver twins of ranked_cells_expr
+    and adc_query_side (same fold order, same 6-dp rounding, so
+    bit-identical). The (q_id, q_cell, lut) rows enter the plan as a
+    local frame, so planning runs no Spark job and the plan carries no
+    literal codebook. The probed set becomes a literal IN filter that
+    reaches the codes scan as a parquet PartitionFilter — unprobed
+    cells' files are never opened, and the rows that ARE read carry m
+    code bytes, not d-dim vectors. Scoring is a broadcast equi-join on
+    cell + m table lookups per candidate; the broadcast row carries m *
+    n_centers doubles (1 KB at m=8, 16 centers; n_probe rows per query).
+    The only shuffle is the per-query top-k window. Same conventions as
+    the inline operators, so results equal similarity.ivfpq_topk
+    row-for-row. The index's persisted encoding mode (meta/) selects raw
+    or residual ADC automatically — a query cannot accidentally score
+    residual codes with raw query vectors. The codes read retries
+    through a concurrent compact_codes' rename-swap window
+    (layout.read_parquet_retry) and passes the layer's declared schema.
 
     `allowed` (a vec_id frame) is the FILTERED-search path: a metadata
     predicate evaluated elsewhere (label set, tenant, date range)
@@ -545,27 +574,72 @@ def ivfpq_search(
     broadcasts while it fits; Catalyst flips to a shuffled semi-join
     beyond that — either way the codes scan itself stays probe-pruned
     first, filter second, so cost remains O(probed ∩ allowed)."""
+    rows, q_type = _collect_queries(queries)
+    return _adc_topk(spark, index_dir, rows, q_type, k, n_probe, allowed)
+
+
+def _collect_queries(queries: DataFrame) -> tuple[list, str]:
+    """The queries' (q_id, qv) rows on the driver, qv as doubles, plus
+    q_id's type. One collect: a local frame (a LocalTableScan) answers it
+    with no Spark job, any other frame with one."""
+    rows = queries.select(
+        "q_id", F.col("qv").cast("array<double>").alias("qv")
+    ).collect()
+    q_type = queries.schema["q_id"].dataType.simpleString()
+    return [(r["q_id"], r["qv"]) for r in rows], q_type
+
+
+def _probes_and_tables(
+    rows: list, cell_centroids: list, centers: list, residual: bool,
+    n_probe: int,
+) -> list:
+    """(q_id, q_cell, lut) per (query, probed cell): the probe explode
+    of ranked_cells_expr followed by adc_query_side, computed on the
+    driver by their bit-identical twins in operators/similarity."""
     from migrate_cassandra_to_mysql_spark.operators import similarity as sim
-    from migrate_cassandra_to_mysql_spark.operators.layout import (
-        read_parquet_retry,
-    )
+
+    if not rows:
+        return []
+    qv = np.array([v for _, v in rows], dtype=np.float64)
+    pairs = [
+        (i, c)
+        for i, cells in enumerate(sim.ranked_cells(qv, cell_centroids))
+        for c in cells[:n_probe]
+    ]
+    if residual:
+        cents = np.asarray(cell_centroids, dtype=np.float64)
+        idx, cells = [i for i, _ in pairs], [c for _, c in pairs]
+        luts = sim.adc_tables(qv[idx] - cents[cells], centers)
+    else:
+        per_query = sim.adc_tables(qv, centers)
+        luts = [per_query[i] for i, _ in pairs]
+    return [(rows[i][0], c, lut) for (i, c), lut in zip(pairs, luts)]
+
+
+def _adc_topk(
+    spark: SparkSession,
+    index_dir: str,
+    rows: list,
+    q_type: str,
+    k: int,
+    n_probe: int,
+    allowed: DataFrame | None,
+) -> DataFrame:
+    """ivfpq_search over already-collected query rows."""
+    from migrate_cassandra_to_mysql_spark.operators import similarity as sim
 
     cell_centroids, centers = load_ivfpq_codebooks(spark, index_dir)
     residual = load_ivfpq_residual_flag(spark, index_dir)
-    ranked = sim.ranked_cells_expr("qv", cell_centroids)
-    q = queries.select(
-        "q_id",
-        "qv",
-        F.explode(
-            F.slice(
-                F.transform(ranked, lambda x: x["c"].cast("long")), 1, n_probe
-            )
-        ).alias("q_cell"),
+    probes = _probes_and_tables(
+        rows, cell_centroids, centers, residual, n_probe
     )
-    probed = [r["q_cell"] for r in q.select("q_cell").distinct().collect()]
+    q_lut = local_frame(
+        spark, probes, f"q_id {q_type}, q_cell long, lut array<array<double>>"
+    )
+    probed = sorted({c for _, c, _ in probes})
     layer = tombstones.resolve(index_dir, LAYERS)
     codes = (
-        read_parquet_retry(spark, layer["codes"])
+        read_parquet_retry(spark, layer["codes"], SCHEMAS["codes"])
         .where(F.col("cell").isin(probed))
         .select("vec_id", "codes", F.col("cell").cast("long").alias("cell"))
     )
@@ -576,9 +650,6 @@ def ivfpq_search(
         codes = codes.join(
             F.broadcast(allowed.select("vec_id")), "vec_id", "left_semi"
         )
-    q_lut = sim.adc_query_side(
-        q, centers, cell_centroids if residual else None
-    )
     cand = (
         F.broadcast(q_lut)
         .join(codes, F.col("cell") == F.col("q_cell"))
@@ -675,21 +746,25 @@ def ivfpq_search_rerank(
     `allowed` pre-filters the ADC shortlist (see ivfpq_search): the
     shortlist is drawn from admitted candidates only, so the exact
     re-rank never wastes its corpus fetches on rows a post-filter would
-    discard — and a selective filter still yields k results."""
+    discard — and a selective filter still yields k results.
+
+    The queries are collected once (see ivfpq_search): the same rows
+    feed the driver-side ADC query side and, as a local frame, the
+    exact re-rank's query side, so with a local-frame `queries` the
+    whole plan is built without a Spark job."""
     from migrate_cassandra_to_mysql_spark.functions.vectors import cosine as _cos
 
-    short = ivfpq_search(
-        spark, index_dir, queries, k=shortlist, n_probe=n_probe,
-        allowed=allowed,
+    rows, q_type = _collect_queries(queries)
+    short = _adc_topk(
+        spark, index_dir, rows, q_type, shortlist, n_probe, allowed
     ).select("q_id", "n_id")
     vecs = corpus.select(
         F.col("vec_id").alias("n_id"),
         F.col(embedding_col).cast("array<double>").alias("nv"),
     )
     fetched = F.broadcast(short).join(vecs, "n_id")
-    scored = fetched.join(
-        F.broadcast(queries.select("q_id", "qv")), "q_id"
-    ).select(
+    q = local_frame(spark, rows, f"q_id {q_type}, qv array<double>")
+    scored = fetched.join(F.broadcast(q), "q_id").select(
         "q_id",
         "n_id",
         F.round(_cos(F.col("qv"), F.col("nv")), 6).alias("cos_sim"),

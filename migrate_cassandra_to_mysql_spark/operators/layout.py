@@ -129,6 +129,7 @@ def compact_small_files(
     target_file_bytes: int = 128 * 1024 * 1024,
     sort_within_by: list[str] | None = None,
     transform=None,
+    schema=None,
 ) -> dict:
     """Bin-pack a small-files parquet directory into ~target-size files —
     the maintenance primitive every streaming/append workload needs (a
@@ -146,6 +147,8 @@ def compact_small_files(
 
     Write-then-swap is left to the caller/catalog layer (same contract
     as inverted_index._refresh_derived) — this writes to out_dir.
+    `schema` (the layer's declared schema) spares the read its
+    footer-inference job (see _read_parquet).
 
     The source listing uses a local-FS glob — correct for this engine's
     test/serving layout; an object-store deployment (S3/GCS) swaps in a
@@ -162,7 +165,7 @@ def compact_small_files(
     ]
     total = sum(_os.path.getsize(p) for p in set(parts))
     n_out = max(1, -(-total // target_file_bytes))
-    df = spark.read.parquet(src_dir)
+    df = _read_parquet(spark, src_dir, schema)
     if transform is not None:
         # row-level rewrite hook (tombstone purges ride compaction — the
         # one pass that already rewrites every surviving row); must not
@@ -186,6 +189,7 @@ def compact_partitioned(
     sort_within_by: list[str] | None = None,
     merge_sub_partitions_into: str | None = None,
     transform=None,
+    schema=None,
 ) -> dict:
     """compact_small_files for a hive-partitioned layout (e.g. an index's
     postings/bucket=N or codes/cell=N): each partition directory is
@@ -202,7 +206,10 @@ def compact_partitioned(
     should COLLAPSE rather than be preserved (the indexes' ingest_batch
     layer): pass e.g. "ingest_batch=0" and each bucket=N/ingest_batch=*
     merges into out_dir/bucket=N/ingest_batch=0 (the sub-partition column
-    is a directory-derived constant, so dropping it loses nothing)."""
+    is a directory-derived constant, so dropping it loses nothing).
+    `schema` is the whole layer's declared schema; each partition
+    directory is read with it minus that directory's own column, so no
+    partition pays a footer-inference job."""
     import glob as _glob
     import os as _os
 
@@ -214,6 +221,7 @@ def compact_partitioned(
 
     def _one(d: str) -> dict:
         name = _os.path.basename(d)
+        part_schema = _without(schema, name.split("=", 1)[0])
         if merge_sub_partitions_into is None:
             return compact_small_files(
                 spark,
@@ -222,6 +230,7 @@ def compact_partitioned(
                 target_file_bytes=target_file_bytes,
                 sort_within_by=sort_within_by,
                 transform=transform,
+                schema=part_schema,
             )
         sub_col = merge_sub_partitions_into.split("=", 1)[0]
         files_in = [
@@ -232,7 +241,7 @@ def compact_partitioned(
         total = sum(_os.path.getsize(p) for p in files_in)
         n_out = max(1, -(-total // target_file_bytes))
         out = f"{out_dir}/{name}/{merge_sub_partitions_into}"
-        df = spark.read.parquet(d).drop(sub_col)
+        df = _read_parquet(spark, d, part_schema).drop(sub_col)
         if transform is not None:
             df = transform(df)
         df = df.coalesce(n_out)
@@ -273,6 +282,7 @@ def merge_sharded_layer(
     sort_within_by: "Sequence[str] | None" = None,
     target_file_bytes: int = 128 * 1024 * 1024,
     max_workers: int = 8,
+    schema=None,
 ) -> dict:
     """The generic shard-consolidation move shared by BOTH persisted
     indexes (inverted_index.merge_indexes / ivf_index.merge_indexes —
@@ -298,7 +308,9 @@ def merge_sharded_layer(
     Writes land under `dst_new_dir` (a `.new` staging name) — the
     caller promotes via swap_live_dir and commits its snapshot
     manifest after ALL its layers moved, keeping the cross-layer
-    atomicity contract in one place. Returns aggregate
+    atomicity contract in one place. `schema` is the layer's declared
+    schema (each partition group reads it minus the group's own
+    column), so no group pays a footer-inference job. Returns aggregate
     {files_in, files_out, bytes, partitions}."""
     import concurrent.futures as _cf
     import glob as _glob
@@ -307,10 +319,11 @@ def merge_sharded_layer(
     srcs = list(src_layer_dirs)
     purge_fns = list(purge_fns)
 
-    def _read_purged_union(paths_by_shard: "list[tuple[int, str]]"):
+    def _read_purged_union(paths_by_shard: "list[tuple[int, str]]", name):
         merged = None
+        group_schema = _without(schema, name.split("=", 1)[0])
         for i, path in paths_by_shard:
-            df = spark.read.parquet(path)
+            df = _read_parquet(spark, path, group_schema)
             if "ingest_batch" in df.columns:
                 df = df.drop("ingest_batch")
             df = purge_fns[i](df)
@@ -328,7 +341,7 @@ def merge_sharded_layer(
         total = sum(_os.path.getsize(p) for p in files_in)
         n_out = max(1, -(-total // target_file_bytes))
         merged = _read_purged_union(
-            [(i, f"{srcs[i]}{sub}") for i in shard_ids]
+            [(i, f"{srcs[i]}{sub}") for i in shard_ids], name
         ).coalesce(n_out)
         if sort_within_by:
             merged = merged.sortWithinPartitions(*sort_within_by)
@@ -465,9 +478,30 @@ def run_concurrently(spark, *thunks: "Callable[[], object]") -> list:
         return [f.result() for f in futs]
 
 
+def _without(schema, column: str):
+    """`schema` (DDL string or StructType; None passes through) minus
+    `column` — the schema of one partition directory of a layer."""
+    from pyspark.sql.types import StructType
+
+    if schema is None:
+        return None
+    st = StructType.fromDDL(schema) if isinstance(schema, str) else schema
+    return StructType([f for f in st.fields if f.name != column])
+
+
+def _read_parquet(spark, path: str, schema=None):
+    """spark.read.parquet with the layer's declared schema. Without one,
+    Spark infers the schema from parquet footers, and that inference is
+    a Spark job of its own on every read (schema=None keeps it, for
+    directories whose layout nobody declared)."""
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    return reader.parquet(path)
+
+
 def read_parquet_retry(
     spark,
     path: str,
+    schema=None,
     attempts: int = 8,
     initial_delay: float = 0.05,
 ):
@@ -487,7 +521,14 @@ def read_parquet_retry(
     mid-first-build. Retries ONLY path-not-found (any other analysis
     error re-raises immediately) with exponential backoff; the last
     attempt's error propagates, so a genuinely absent index still fails
-    loudly rather than hanging."""
+    loudly rather than hanging.
+
+    Pass the layer's declared schema (each index module keeps them in
+    its SCHEMAS): a read with it is plan-only, while schema=None infers
+    the schema from parquet footers at the cost of one Spark job per
+    read. The missing-path check and retry hold either way.
+    tests/test_index_schemas.py fails if a package read of an index
+    layer leaves it out."""
     import os as _os
     import time as _time
 
@@ -496,7 +537,7 @@ def read_parquet_retry(
             resolved = (
                 _os.path.realpath(path) if _os.path.islink(path) else path
             )
-            return spark.read.parquet(resolved)
+            return _read_parquet(spark, resolved, schema)
         except Exception as e:  # AnalysisException: PATH_NOT_FOUND
             msg = str(e)
             missing = "PATH_NOT_FOUND" in msg or "does not exist" in msg

@@ -18,6 +18,10 @@ reproducible across engines (ulp-level accumulation differences).
 
 from __future__ import annotations
 
+import math
+from decimal import ROUND_HALF_UP, Context, Decimal
+
+import numpy as np
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -625,6 +629,67 @@ def ranked_cells_expr(col: str, cell_centroids: list) -> F.Column:
         for c, cv in enumerate(cell_centroids)
     )
     return F.expr(f"array_sort(array({cell_structs}))")
+
+
+# Driver twins of ranked_cells_expr and adc_query_side, for query vectors
+# already collected (ivf_index.ivfpq_search): the probe set is then known
+# without a job, and no literal codebook enters the plan. They are
+# bit-identical to the SQL because they run the same IEEE double
+# operations in the same order — every fold a left-to-right sum from 0.0
+# (never np.sum, which sums pairwise), cosine as dot / (sqrt(q.q) *
+# sqrt(c.c)) — and round as Spark's round(x, 6) does.
+# tests/test_adc_driver_side.py pins them against the SQL on random and
+# 6-dp-tie vectors.
+
+_SIX_DP = Decimal("0.000001")
+_EXACT = Context(prec=400)  # every finite double's digits, plus 6 places
+
+
+def round6(x: float) -> float:
+    """Spark's round(x, 6) for a double: HALF_UP on the value's decimal
+    repr (java.math.BigDecimal.valueOf), back to the nearest double;
+    BigDecimal has no -0, hence the + 0.0."""
+    if not math.isfinite(x):
+        return x
+    return float(Decimal(repr(x)).quantize(_SIX_DP, ROUND_HALF_UP, _EXACT)) + 0.0
+
+
+def _fold_dot(a: np.ndarray, b: np.ndarray) -> np.ndarray:
+    """Dot products over the last axis, folded the way _sql_dot and
+    _sql_sqdist fold them: left to right, starting from 0.0."""
+    acc = np.zeros(np.broadcast_shapes(a.shape[:-1], b.shape[:-1]))
+    for i in range(a.shape[-1]):
+        acc = acc + a[..., i] * b[..., i]
+    return acc
+
+
+def ranked_cells(qv: np.ndarray, cell_centroids: list) -> list[list[int]]:
+    """Driver twin of ranked_cells_expr: for each row of `qv` (queries x
+    d), every cell id ordered by 6-dp cosine desc, then c_id asc. A
+    zero-norm vector raises, as the SQL's division by zero does."""
+    cents = np.asarray(cell_centroids, dtype=np.float64)
+    q, c = qv[:, None, :], cents[None, :, :]
+    norms = np.sqrt(_fold_dot(q, q)) * np.sqrt(_fold_dot(c, c))
+    if not norms.all():
+        raise ValueError("cosine of a zero-norm vector: division by zero")
+    ranked = []
+    for row in (_fold_dot(q, c) / norms).tolist():
+        r = [round6(x) for x in row]
+        ranked.append(sorted(range(len(r)), key=lambda j: (-r[j], j)))
+    return ranked
+
+
+def adc_tables(vecs: np.ndarray, centers: list) -> list:
+    """Driver twin of adc_query_side's `lut`: for each row of `vecs`
+    (raw query vectors, or query residuals), table[mi][j] is the 6-dp
+    squared L2 from sub-vector mi to PQ center j."""
+    p = np.asarray(centers, dtype=np.float64)
+    m, _, sub = p.shape
+    diff = vecs[:, : m * sub].reshape(len(vecs), m, 1, sub) - p[None]
+    return [
+        [[round6(x) for x in row] for row in table]
+        for table in _fold_dot(diff, diff).tolist()
+    ]
 
 
 def ivfpq_encode(

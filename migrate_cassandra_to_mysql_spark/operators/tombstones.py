@@ -35,17 +35,22 @@ Lifecycle:
   tombstones or unpurged rows with an emptied set.
 - re-add probes (`hits`): which ids of an incoming batch are tombstoned.
 
-Job shape: an index that never saw a delete runs no tombstone job at
-all. Once the layer exists, loading the live set (`purge`, `compaction`,
-`hits`) costs one `isEmpty` probe; the serve and merge paths skip the
-probe and anti-join whatever the pinned snapshot holds.
+Job shape: the layer is read with its declared schema (`schema`), so no
+read infers one from parquet footers. Whether a version holds any ids is
+read from its parquet footers (metadata, no Spark job), so an index that
+never saw a delete and an index whose compaction emptied the layer both
+run no tombstone work at all, in maintenance and in serving; a layer that
+holds ids is anti-joined with no probe job.
 """
 
 from __future__ import annotations
 
 import contextlib
+import glob
 import os
 from collections.abc import Callable, Iterator, Sequence
+
+import pyarrow.parquet as pq
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -56,6 +61,20 @@ from migrate_cassandra_to_mysql_spark.operators import layout
 LAYER = "deletes"
 
 Purge = Callable[[DataFrame], DataFrame]
+
+
+def schema(id_col: str) -> str:
+    """The layer's declared schema: one id column."""
+    return f"{id_col} bigint"
+
+
+def _holds_ids(version_dir: str) -> bool:
+    """Whether a layer version holds any id, from its parquet footers'
+    row counts (metadata only: no Spark job)."""
+    return any(
+        pq.read_metadata(p).num_rows
+        for p in glob.glob(f"{version_dir}/*.parquet")
+    )
 
 
 def _exists(index_dir: str) -> bool:
@@ -82,13 +101,20 @@ def resolve(index_dir: str, core: Sequence[str]) -> dict[str, str]:
     return layout.resolve_live_snapshot(index_dir, layers(index_dir, core))
 
 
+def _read(spark: SparkSession, path: str, id_col: str):
+    """The tombstone frame of a layer path if it holds ids, else None."""
+    version = os.path.realpath(path)
+    if not _holds_ids(version):
+        return None
+    return layout.read_parquet_retry(spark, version, schema(id_col))
+
+
 def _load(spark: SparkSession, index_dir: str, id_col: str):
-    """The live tombstone frame if the layer exists and holds rows, else
+    """The live tombstone frame if the layer exists and holds ids, else
     None."""
     if not _exists(index_dir):
         return None
-    deletes = spark.read.parquet(f"{index_dir}/{LAYER}").select(id_col)
-    return None if deletes.isEmpty() else deletes
+    return _read(spark, f"{index_dir}/{LAYER}", id_col)
 
 
 def _anti(deletes, id_col: str) -> Purge:
@@ -105,12 +131,11 @@ def purge(spark: SparkSession, index_dir: str, id_col: str) -> Purge:
 
 def mask(spark: SparkSession, snapshot: dict[str, str], id_col: str) -> Purge:
     """df -> df without the ids tombstoned in a resolved snapshot
-    (identity when the snapshot has no tombstone layer). No probe job."""
+    (identity when the snapshot has no tombstone layer or an empty one).
+    No Spark job."""
     if LAYER not in snapshot:
         return lambda df: df
-    return _anti(
-        layout.read_parquet_retry(spark, snapshot[LAYER]).select(id_col), id_col
-    )
+    return _anti(_read(spark, snapshot[LAYER], id_col), id_col)
 
 
 @contextlib.contextmanager
@@ -123,7 +148,7 @@ def compaction(
     deletes = _load(spark, index_dir, id_col)
     yield _anti(deletes, id_col)
     if deletes is not None:
-        _stage(local_frame(spark, [], f"{id_col} long"), index_dir)
+        _stage(local_frame(spark, [], schema(id_col)), index_dir)
 
 
 def hits(
@@ -155,7 +180,7 @@ def add(
     ints): enlarge the set into a new version, then run `commit_fn` —
     the caller's refresh and manifest commit — still under the lock."""
     if not isinstance(ids, DataFrame):
-        ids = local_frame(spark, [(int(i),) for i in ids], f"{id_col} long")
+        ids = local_frame(spark, [(int(i),) for i in ids], schema(id_col))
     new = ids.select(F.col(id_col).cast("long"))
     with layout._maintainer_lock(index_dir, f"{LAYER}.rmw", 3600.0):
         existing = _load(spark, index_dir, id_col)

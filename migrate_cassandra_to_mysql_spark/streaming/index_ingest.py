@@ -60,6 +60,7 @@ from pyspark.sql import functions as F
 
 from migrate_cassandra_to_mysql_spark.operators import inverted_index as inv
 from migrate_cassandra_to_mysql_spark.operators import tombstones
+from migrate_cassandra_to_mysql_spark.operators.layout import read_parquet_retry
 from migrate_cassandra_to_mysql_spark.streaming.snapshot_stream import (
     snapshot_stream,
 )
@@ -315,7 +316,9 @@ def stream_docs_into_inverted_index(
         # unreported — unavoidable without per-row sequence numbers,
         # since tombstoned docs' ORIGINAL rows also sit in doclens, so
         # only the drain's own partitions can identify a re-add.
-        drained = spark.read.parquet(f"{index_dir}/doclens").where(
+        drained = read_parquet_retry(
+            spark, f"{index_dir}/doclens", inv.SCHEMAS["doclens"]
+        ).where(
             F.col("ingest_batch").isin([b + 1 for b in processed])
         )
         readds = tombstones.hits(spark, index_dir, drained, "doc_id")
@@ -378,7 +381,9 @@ def stream_vectors_into_ivfpq_index(
     if processed:
         # re-ingesting a tombstoned vec_id through the append-only
         # stream is rejected loudly — see the document path above.
-        drained = spark.read.parquet(f"{index_dir}/codes").where(
+        drained = read_parquet_retry(
+            spark, f"{index_dir}/codes", ivf_index.SCHEMAS["codes"]
+        ).where(
             F.col("ingest_batch").isin([b + 1 for b in processed])
         )
         readds = tombstones.hits(spark, index_dir, drained, "vec_id")
