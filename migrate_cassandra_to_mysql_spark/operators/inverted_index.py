@@ -12,8 +12,12 @@ only the few bucket partitions its terms hash to:
                        NO doclens join
   doclens/ingest_batch=B/  (doc_id, dl) for EVERY doc — incl. NULL/empty-
                        text docs that produce no postings; the n_docs source
-  lexicon/bucket=N/    (tok, df)              — per-term document frequency
   stats/               1 row (n_docs, sum_dl) — corpus-level BM25 constants
+
+No layer stores df: a query reads every posting of its terms anyway and
+counts df over them, so an append touches only its own documents and df
+cannot drift from the postings. (A `lexicon/` dir left by older writers
+is never read.)
 
 The ingest_batch level is UNIFORM across every writer — batch build and
 incremental append use ingest_batch=0, streaming ingestion
@@ -30,10 +34,10 @@ without touching the JVM; at 100 TB you would raise n_buckets to a few
 thousand so each partition stays file-sized, and the same pruning math
 holds. Query-time plan: the bucket set becomes parquet PartitionFilters
 (unprobed buckets' files never open), the term set is a pushed data
-filter inside each bucket, the query-term lexicon slice broadcast-joins
-onto the postings, and the only data shuffle is the per-doc conditional
-pivot — bounded by documents that contain at least one query term, not by
-corpus size.
+filter inside each bucket, the query terms' dfs are one row of counts over
+those postings, broadcast onto the per-doc conditional pivot — the only
+data shuffle, bounded by documents that contain at least one query term,
+not by corpus size.
 
 The reference (quyetmv/migrate-cassandra-to-mysql) has no retrieval
 surface; this extends the engine's LLM-data-pipeline family (targeted
@@ -45,6 +49,7 @@ path must equal the inline oracle-checked path row for row.
 from __future__ import annotations
 
 import hashlib
+import os
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
@@ -58,7 +63,7 @@ DEFAULT_BUCKETS = 32
 
 # The index's replaceable data layers, in the order maintenance touches
 # them; the set a cross-layer snapshot manifest must pin together.
-LAYERS = ("postings", "doclens", "lexicon", "stats")
+LAYERS = ("postings", "doclens", "stats")
 
 # Their schemas, partition columns last (the order Spark lists them in).
 # Every read passes its layer's schema: inferring it from parquet footers
@@ -68,7 +73,6 @@ SCHEMAS = {
     "postings": "doc_id bigint, dl bigint, tok string, tf bigint,"
     " bucket int, ingest_batch int",
     "doclens": "doc_id bigint, dl bigint, ingest_batch int",
-    "lexicon": "tok string, df bigint, bucket int",
     "stats": "n_docs bigint, sum_dl bigint",
 }
 
@@ -123,6 +127,23 @@ def encode_postings(
     )
 
 
+def _batch_writes(toks, n_buckets, mode, postings_dir, doclens_dir):
+    """The postings and doclens writes of one tokenized batch, as
+    thunks for layout.run_concurrently."""
+    return (
+        lambda: _postings_from_tokenized(toks, n_buckets)
+        .withColumn("ingest_batch", F.lit(0))
+        .write.mode(mode)
+        .partitionBy("bucket", "ingest_batch")
+        .parquet(postings_dir),
+        lambda: toks.select("doc_id", "dl")
+        .withColumn("ingest_batch", F.lit(0))
+        .write.mode(mode)
+        .partitionBy("ingest_batch")
+        .parquet(doclens_dir),
+    )
+
+
 def build_inverted_index(
     docs: DataFrame,
     index_dir: str,
@@ -131,8 +152,8 @@ def build_inverted_index(
 ) -> None:
     """Invert the corpus into the on-disk layout above. One corpus-scan
     job (tokenize → explode → partial-agg tf) plus a doclens pass over
-    the same tokenized frame, then lexicon and stats are cheap
-    aggregations over the already-persisted layers.
+    the same tokenized frame, then stats is a one-row aggregation over
+    the persisted doclens.
 
     Both data layers are written to `.new` and promoted through
     layout.swap_live_dir, so the live names are VERSIONED SYMLINKS from
@@ -160,22 +181,16 @@ def build_inverted_index(
     # BOTH swaps still happen only after BOTH writes committed.
     run_concurrently(
         docs.sparkSession,
-        lambda: _postings_from_tokenized(toks, n_buckets)
-        .withColumn("ingest_batch", F.lit(0))
-        .write.mode("overwrite")
-        .partitionBy("bucket", "ingest_batch")
-        .parquet(f"{index_dir}/postings.new"),
-        lambda: toks.select("doc_id", "dl")
-        .withColumn("ingest_batch", F.lit(0))
-        .write.mode("overwrite")
-        .partitionBy("ingest_batch")
-        .parquet(f"{index_dir}/doclens.new"),
+        *_batch_writes(
+            toks,
+            n_buckets,
+            "overwrite",
+            f"{index_dir}/postings.new",
+            f"{index_dir}/doclens.new",
+        ),
     )
     for part in ("postings", "doclens"):
         swap_live_dir(index_dir, part)
-    # lexicon (per-term df) derives from postings; stats (n_docs/sum_dl)
-    # from doclens — so build and incremental append share one refresh
-    # path and NULL/empty-text docs still count toward n_docs.
     _refresh_derived(docs.sparkSession, index_dir)
 
 
@@ -185,26 +200,27 @@ def append_to_inverted_index(
     n_buckets: int = DEFAULT_BUCKETS,
     text_col: str = "text",
 ) -> None:
-    """Incremental index maintenance — the daily-ingest path: invert ONLY
-    the new documents and append their postings to the existing bucket
-    partitions (no touch of existing posting files), then rebuild lexicon
-    and stats from the postings layer. A posting row is a pure function of
-    its document, so an index built in N appends holds the same posting
-    multiset as a single-pass build (pinned by test); lexicon/stats are
-    aggregations over the already-inverted postings — their refresh cost
-    is O(index), not O(corpus), and at 100 TB both are a tiny fraction of
-    the posting volume (vocabulary-sized and 1 row). Callers must ensure
-    doc_ids in docs_new are not already indexed (same contract as any
-    append-only ingest).
+    """Incremental index maintenance — the daily-ingest path, O(batch):
+    invert ONLY the new documents, append their postings and doclens,
+    and write the stats row as the manifest-resolved one plus the
+    batch's (count, sum(dl)); no existing posting or doclens file is
+    read. Postings are a pure function of their document, and old plus
+    batch stats equal a recompute (appended ids are never tombstoned: a
+    re-add purges first, below), so N appends serve exactly like one
+    build (pinned by test). Callers must ensure doc_ids in docs_new are
+    not already indexed (same contract as any append-only ingest).
 
     Appends write INTO the current live version dir (layout.ensure_live_dir
     resolves the versioned symlink; a legacy real-dir store is adopted as
     v1 on first touch): files only ever APPEAR under a live version, so a
     concurrent reader that pinned the resolved version keeps a stable file
-    listing for its whole query."""
+    listing for its whole query. The stats row is swapped in and
+    published by one manifest commit."""
     from migrate_cassandra_to_mysql_spark.operators.layout import (
         ensure_live_dir,
+        read_parquet_retry,
         run_concurrently,
+        swap_live_dir,
     )
 
     spark = docs_new.sparkSession
@@ -217,26 +233,32 @@ def append_to_inverted_index(
     # actually hits, which resets the layer), then append cleanly.
     if tombstones.hits(spark, index_dir, docs_new, "doc_id"):
         compact_postings(spark, index_dir)
-    # Two tokenize passes, deliberately unpersisted — see
-    # build_inverted_index (the cache A/B loss) — submitted together, as
-    # the build submits its two layer writes.
+    # Three tokenize passes, deliberately unpersisted — see
+    # build_inverted_index (the cache A/B loss) — submitted together.
     toks = _tokenized(docs_new, text_col)
-    postings_dir = ensure_live_dir(index_dir, "postings")
-    doclens_dir = ensure_live_dir(index_dir, "doclens")
+    stats = _stats(toks)
+    old_dir = tombstones.resolve(index_dir, LAYERS)["stats"]
+    if os.path.isdir(old_dir):  # else an index that never held a doc
+        # two one-row inputs: one task sums them, with no exchange
+        stats = (
+            read_parquet_retry(spark, old_dir, SCHEMAS["stats"])
+            .unionByName(stats)
+            .coalesce(1)
+            .agg(*(F.sum(c).cast("long").alias(c) for c in stats.columns))
+        )
     run_concurrently(
         spark,
-        lambda: _postings_from_tokenized(toks, n_buckets)
-        .withColumn("ingest_batch", F.lit(0))
-        .write.mode("append")
-        .partitionBy("bucket", "ingest_batch")
-        .parquet(postings_dir),
-        lambda: toks.select("doc_id", "dl")
-        .withColumn("ingest_batch", F.lit(0))
-        .write.mode("append")
-        .partitionBy("ingest_batch")
-        .parquet(doclens_dir),
+        *_batch_writes(
+            toks,
+            n_buckets,
+            "append",
+            ensure_live_dir(index_dir, "postings"),
+            ensure_live_dir(index_dir, "doclens"),
+        ),
+        lambda: _stage_stats(stats, index_dir),
     )
-    _refresh_derived(spark, index_dir)
+    swap_live_dir(index_dir, "stats")
+    tombstones.commit(index_dir, LAYERS)
 
 
 def delete_docs(spark: SparkSession, index_dir: str, doc_ids) -> None:
@@ -245,12 +267,13 @@ def delete_docs(spark: SparkSession, index_dir: str, doc_ids) -> None:
     Tombstone design (the Iceberg/Delta equality-delete shape, rebuilt
     on open parquet): the doc_ids append to a tiny versioned tombstone
     layer (operators/tombstones); serving anti-joins it broadcast-side;
-    the derived layers (df / n_docs / sum_dl) are refreshed EXCLUDING
-    tombstoned docs immediately, so served scores equal an index rebuilt
-    without them (pinned by test); the next compact_postings physically
-    purges the posting/doclens rows and resets the tombstone layer. Cost now:
-    O(tombstones) + the derived refresh — never a corpus rewrite; the
-    physical rewrite rides the compaction that was due anyway.
+    df (counted at query time over the masked postings) and the stats
+    (n_docs / sum_dl, refreshed at once) EXCLUDE tombstoned docs, so
+    served scores equal an index rebuilt without them (pinned by test);
+    the next compact_postings physically purges the posting/doclens rows
+    and resets the tombstone layer. Cost now: O(tombstones) + the stats
+    refresh — never a corpus rewrite; the physical rewrite rides the
+    compaction that was due anyway.
 
     Maintenance op: same single-maintainer / quiescent-ingest contract
     as _refresh_derived. `doc_ids` is a DataFrame with a doc_id column
@@ -260,68 +283,52 @@ def delete_docs(spark: SparkSession, index_dir: str, doc_ids) -> None:
     is the only one — streaming ingest instead rejects re-adds loudly
     with that same recipe (stream_docs_into_inverted_index).
 
-    The derived refresh runs under the deleters' lock and its manifest
-    commit flips the tombstones, lexicon and stats TOGETHER, so no
-    reader anti-joins the new set while scoring with tombstone-inclusive
-    df/n_docs/sum_dl (atomicity and concurrency: operators/tombstones)."""
+    The stats refresh runs under the deleters' lock and its manifest
+    commit flips the tombstones and stats TOGETHER, so no reader
+    anti-joins the new set while scoring with tombstone-inclusive
+    n_docs/sum_dl (atomicity and concurrency: operators/tombstones).
+    df needs no refresh: bm25_search counts it over the masked
+    postings."""
     tombstones.add(
         spark, index_dir, doc_ids, "doc_id",
         lambda: _refresh_derived(spark, index_dir),
     )
 
 
-def _refresh_derived(spark: SparkSession, index_dir: str) -> None:
-    """Rebuild lexicon/ (from postings/) and stats/ (from doclens/, so
-    NULL/empty-text docs count toward n_docs/sum_dl exactly like the
-    inline path's count(*)). Each is written to a temp name and promoted
-    by layout.swap_live_dir — an ATOMIC versioned-pointer flip (the live
-    name is a symlink; the previous version is retained for one cycle),
-    so a concurrent bm25_search never sees a missing path and an
-    in-flight query keeps its already-resolved version (the
-    read_parquet_retry + realpath discipline on the serving side).
+def _stats(dl: DataFrame) -> DataFrame:
+    """The one stats row over a frame with a `dl` column: count(*) and
+    sum(dl), so NULL/empty-text docs count exactly like the inline
+    path's."""
+    return dl.agg(
+        F.count(F.lit(1)).alias("n_docs"), F.sum("dl").alias("sum_dl")
+    )
 
-    After BOTH swaps, ONE cross-layer snapshot manifest is committed
-    (layout.commit_live_snapshot): each flip is atomic per layer, but a
-    reader landing between the lexicon and stats swaps would otherwise
-    pair a new lexicon with old stats — bm25_search resolves all its
-    layers from one manifest read, so it sees the whole refresh or none
-    of it."""
+
+def _stage_stats(stats: DataFrame, index_dir: str) -> None:
+    stats.coalesce(1).write.mode("overwrite").parquet(
+        f"{index_dir}/stats.new"
+    )
+
+
+def _refresh_derived(spark: SparkSession, index_dir: str) -> None:
+    """Recompute stats/ from the tombstone-purged doclens/ (deleted docs
+    stop counting at once), promote it by layout.swap_live_dir — an
+    ATOMIC versioned-pointer flip, so a concurrent bm25_search never sees
+    a missing path and an in-flight query keeps its resolved version —
+    then commit ONE cross-layer snapshot manifest: a delete flips its
+    tombstone set and these stats together, and bm25_search resolves
+    all its layers from one manifest read."""
     from migrate_cassandra_to_mysql_spark.operators.layout import (
         read_parquet_retry,
-        run_concurrently,
         swap_live_dir,
     )
 
-    # Tombstoned docs are excluded from the derived layers the moment
-    # the deletion's refresh runs — df/n_docs/sum_dl then match an index
-    # rebuilt without those docs, even though their posting rows remain
-    # physically present until the next compaction purges them.
     purge = tombstones.purge(spark, index_dir, "doc_id")
-    written, doclens = (
-        purge(read_parquet_retry(spark, f"{index_dir}/{p}", SCHEMAS[p]))
-        for p in ("postings", "doclens")
+    doclens = purge(
+        read_parquet_retry(spark, f"{index_dir}/doclens", SCHEMAS["doclens"])
     )
-    # The two derived writes read DIFFERENT source layers into DIFFERENT
-    # staging dirs — concurrent submission (guide §2.6), swaps + the one
-    # manifest commit strictly after both complete, so the cross-layer
-    # atomicity contract is untouched.
-    run_concurrently(
-        spark,
-        lambda: written.groupBy("bucket", "tok")
-        .agg(F.count(F.lit(1)).cast("long").alias("df"))
-        .write.mode("overwrite")
-        .partitionBy("bucket")
-        .parquet(f"{index_dir}/lexicon.new"),
-        lambda: doclens.agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sum("dl").alias("sum_dl"),
-        )
-        .coalesce(1)
-        .write.mode("overwrite")
-        .parquet(f"{index_dir}/stats.new"),
-    )
-    for part in ("lexicon", "stats"):
-        swap_live_dir(index_dir, part)
+    _stage_stats(_stats(doclens), index_dir)
+    swap_live_dir(index_dir, "stats")
     tombstones.commit(index_dir, LAYERS)
 
 
@@ -337,9 +344,10 @@ def compact_postings(
     partition per micro-batch; query cost then grows with file count,
     not posting volume). Per-partition coalesce — zero shuffle, bucket
     pruning untouched — then rename-swap into place. Content is
-    identical by construction, so lexicon/ and stats/ need no refresh;
-    the append+compact == single-pass-build equivalence is pinned at the
-    QUERY level in tests/test_inverted_index.py. Quiescent-ingest
+    identical by construction (tombstoned docs left stats when they were
+    deleted), so stats/ needs no refresh; the append+compact ==
+    single-pass-build equivalence is pinned at the QUERY level in
+    tests/test_inverted_index.py. Quiescent-ingest
     contract for streamed indexes: run while no drain is in flight.
     Returns the compaction stats dict for the caller's audit log:
     top-level files_in/files_out/bytes/partitions cover the postings
@@ -347,14 +355,12 @@ def compact_postings(
 
     The doclens layer (one row per document — billions of rows at the
     100 TB design point) bin-packs by listed bytes exactly like the
-    partitioned layers do: forcing it into one file would serialize a
+    partitioned layers do (the flat form of layout.merge_sharded_layer
+    over one shard): forcing it into one file would serialize a
     multi-GB write through a single task."""
-    import glob as _glob
-    import os as _os
-
     from migrate_cassandra_to_mysql_spark.operators.layout import (
         compact_partitioned,
-        read_parquet_retry,
+        merge_sharded_layer,
         swap_live_dir,
     )
 
@@ -372,34 +378,15 @@ def compact_postings(
             schema=SCHEMAS["postings"],
         )
         swap_live_dir(index_dir, "postings")
-        dl_files = [
-            p
-            for p in _glob.glob(f"{index_dir}/doclens/ingest_batch=*/part-*")
-            if _os.path.isfile(p)
-        ]
-        dl_bytes = sum(_os.path.getsize(p) for p in dl_files)
-        dl_out_dir = f"{index_dir}/doclens.new/ingest_batch=0"
-        dl = purge(
-            read_parquet_retry(
-                spark, f"{index_dir}/doclens", SCHEMAS["doclens"]
-            ).drop("ingest_batch")
+        stats["doclens"] = merge_sharded_layer(
+            spark,
+            [os.path.realpath(f"{index_dir}/doclens")],
+            f"{index_dir}/doclens.new",
+            [purge],
+            partitioned=False,
+            target_file_bytes=target_file_bytes,
+            schema=SCHEMAS["doclens"],
         )
-        (
-            dl.coalesce(max(1, -(-dl_bytes // target_file_bytes)))
-            .write.mode("overwrite")
-            .parquet(dl_out_dir)
-        )
-        stats["doclens"] = {
-            "files_in": len(dl_files),
-            "files_out": len(
-                [
-                    p
-                    for p in _glob.glob(f"{dl_out_dir}/part-*")
-                    if _os.path.isfile(p)
-                ]
-            ),
-            "bytes": dl_bytes,
-        }
         swap_live_dir(index_dir, "doclens")
     # One manifest commit AFTER all swaps: readers flip from the old
     # consistent set to the new one atomically (content-identical for
@@ -423,17 +410,16 @@ def merge_indexes(
     bucket (the md5 term hash is shard-independent, so bucket=N rows
     from every shard belong together), bin-packed per bucket with a
     coalesce of input splits — ZERO shuffle, like compact_partitioned.
-    Derived lexicon/stats rebuild once over the merged layers (df is
-    NOT summable from shard lexicons once tombstones purge rows, and
-    the refresh is O(index), vocabulary-sized output). Each shard's
+    Stats recompute once over the merged doclens. Each shard's
     own tombstones are purged during the rewrite (the merge performs
     the owed compaction), so the merged index equals
     build_inverted_index over the union of the shards' LIVE corpora —
     pinned at the query level in tests and by the sharded-merge
     catalog row's plain-BM25 oracle.
 
-    Loud rejections (both checks are vocabulary/doc-count sized, a
-    rounding error next to the posting move):
+    Loud rejections (each reads one or two narrow columns into
+    vocabulary- or doc-count-sized output, cheap next to the posting
+    move):
     - a token living in DIFFERENT buckets across shards (shards built
       with different n_buckets — merged probes would miss rows);
     - a doc_id present in more than one shard after purges (shards
@@ -456,13 +442,13 @@ def merge_indexes(
     purges = [tombstones.mask(spark, lay, "doc_id") for lay in layers]
 
     # 1) bucket-hash compatibility: every shard must map each token to
-    # the SAME bucket (vocabulary-sized check over the lexicons).
-    lex_all = None
+    # the SAME bucket (a check over the shards' distinct (bucket, tok)).
+    toks_all = None
     for lay in layers:
         one = read_parquet_retry(
-            spark, lay["lexicon"], SCHEMAS["lexicon"]
+            spark, lay["postings"], SCHEMAS["postings"]
         ).select("bucket", "tok")
-        lex_all = one if lex_all is None else lex_all.unionByName(one)
+        toks_all = one if toks_all is None else toks_all.unionByName(one)
 
     # 2) corpus disjointness (after each shard's own tombstone purge).
     dl_frames = [
@@ -481,7 +467,7 @@ def merge_indexes(
     # is unchanged.
     split_toks, dups = run_concurrently(
         spark,
-        lambda: lex_all.distinct()
+        lambda: toks_all.distinct()
         .groupBy("tok")
         .agg(F.countDistinct("bucket").alias("nb"))
         .where(F.col("nb") > 1)
@@ -539,8 +525,8 @@ def merge_indexes(
     )
     for part in ("postings", "doclens"):
         swap_live_dir(dst_dir, part)
-    # lexicon/stats rebuild over the merged layers + ONE manifest commit
-    # (the same refresh path build/append use).
+    # stats recompute over the merged doclens + ONE manifest commit
+    # (the same refresh path build and delete use).
     _refresh_derived(spark, dst_dir)
     return agg
 
@@ -572,13 +558,17 @@ def bm25_search(
 
     Plan: probe-bucket PartitionFilters + term-IN pushed filter on the
     postings scan; vocabulary never loads beyond the probed buckets'
-    query-term rows; lexicon slice broadcasts; the per-doc pivot groupBy
-    (the sole data shuffle) is sized by matching docs; TakeOrdered ends
-    the plan.
+    query-term rows. The terms' dfs are one row of conditional counts
+    over those masked postings, taken BEFORE the `allowed` semi-join (so
+    they stay corpus-global) and broadcast onto the pivot; the counts
+    aggregate partially per task (a Window by tok would pull a whole
+    posting list into one task), and since the pivot does not wait for
+    them, both aggregations run as concurrent stages. The per-doc pivot
+    groupBy is sized by matching docs; TakeOrdered ends the plan.
 
     Reads resolve ALL layers from ONE cross-layer snapshot manifest
     (layout.resolve_live_snapshot — committed by maintenance after all
-    its layer swaps), so a query can never pair a new lexicon with old
+    its layer swaps), so a query can never pair new tombstones with old
     stats however unluckily it lands inside a refresh; pre-manifest
     stores fall back to per-layer live-symlink pinning. Each resolved
     path then retries through the rename-swap window
@@ -606,46 +596,35 @@ def bm25_search(
         .select("doc_id", "dl", "tok", "tf")
     )
     postings = tombstones.mask(spark, layer, "doc_id")(postings)
+    # df placeholder 1 for a term with no postings: its tf is 0 in every
+    # doc, so the idf value only needs to be non-null and finite.
+    dfs = postings.agg(
+        *[
+            F.greatest(F.count(F.when(F.col("tok") == t, 1)), F.lit(1))
+            .alias(f"df{i}")
+            for i, t in enumerate(terms)
+        ]
+    )
     if allowed is not None:
         postings = postings.join(
             F.broadcast(allowed.select("doc_id")), "doc_id", "left_semi"
         )
-    lexicon = (
-        read_parquet_retry(spark, layer["lexicon"], SCHEMAS["lexicon"])
-        .where(F.col("bucket").isin(buckets))
-        .where(F.col("tok").isin(terms))
-        .select("tok", "df")
-    )
     stats = read_parquet_retry(spark, layer["stats"], SCHEMAS["stats"])
-    pivoted = (
-        postings.join(F.broadcast(lexicon), "tok")
-        .groupBy("doc_id")
-        .agg(
-            F.max("dl").alias("dl"),
-            *[
-                F.coalesce(
-                    F.max(F.when(F.col("tok") == t, F.col("tf"))), F.lit(0)
-                )
-                .cast("long")
-                .alias(f"tf{i}")
-                for i, t in enumerate(terms)
-            ],
-            # df placeholder 1 for terms absent from this doc: their
-            # contribution is multiplied by tf=0, so the idf value is
-            # irrelevant — it only needs to be non-null and finite.
-            *[
-                F.coalesce(
-                    F.max(F.when(F.col("tok") == t, F.col("df"))), F.lit(1)
-                )
-                .cast("long")
-                .alias(f"df{i}")
-                for i, t in enumerate(terms)
-            ],
-        )
+    pivoted = postings.groupBy("doc_id").agg(
+        F.max("dl").alias("dl"),
+        *[
+            F.coalesce(
+                F.max(F.when(F.col("tok") == t, F.col("tf"))), F.lit(0)
+            )
+            .cast("long")
+            .alias(f"tf{i}")
+            for i, t in enumerate(terms)
+        ],
     )
     hits = " + ".join(f"tf{i}" for i in range(len(terms)))
     return (
-        pivoted.join(F.broadcast(stats))
+        pivoted.join(F.broadcast(dfs))
+        .join(F.broadcast(stats))
         .select(
             "doc_id",
             F.expr(f"CAST({hits} AS BIGINT)").alias("n_hits"),

@@ -213,8 +213,6 @@ def compact_partitioned(
     import glob as _glob
     import os as _os
 
-    import concurrent.futures as _cf
-
     part_dirs = sorted(
         d for d in _glob.glob(f"{src_dir}/*=*") if _os.path.isdir(d)
     )
@@ -260,15 +258,22 @@ def compact_partitioned(
     # Submit per-partition jobs CONCURRENTLY (Spark's scheduler multiplexes
     # them across executors): each job is tiny, so sequential submission —
     # not execution — would dominate wall clock at thousands of partitions.
-    # Threads only drive job submission; no shared state beyond the
-    # SparkSession, which is thread-safe for action submission.
-    agg = {"files_in": 0, "files_out": 0, "bytes": 0, "partitions": 0}
-    with _cf.ThreadPoolExecutor(max_workers=8) as ex:
-        for res in ex.map(_one, part_dirs):
-            agg["files_in"] += res["files_in"]
-            agg["files_out"] += res["files_out"]
-            agg["bytes"] += res["bytes"]
-            agg["partitions"] += 1
+    # A failed partition cancels the queued ones and its siblings' jobs.
+    return _sum_moves(
+        run_concurrently(
+            spark, *(lambda d=d: _one(d) for d in part_dirs), max_workers=8
+        )
+    )
+
+
+def _sum_moves(results: "Sequence[dict]") -> dict:
+    """Aggregate {files_in, files_out, bytes, partitions} of per-partition
+    compaction or merge results."""
+    agg = {
+        k: sum(r[k] for r in results)
+        for k in ("files_in", "files_out", "bytes")
+    }
+    agg["partitions"] = len(results)
     return agg
 
 
@@ -281,13 +286,10 @@ def merge_sharded_layer(
     partitioned: bool = True,
     sort_within_by: "Sequence[str] | None" = None,
     target_file_bytes: int = 128 * 1024 * 1024,
-    max_workers: int = 8,
     schema=None,
 ) -> dict:
     """The generic shard-consolidation move shared by BOTH persisted
-    indexes (inverted_index.merge_indexes / ivf_index.merge_indexes —
-    VERDICT r10 #5 hoisted their duplicated walk → purge → bin-pack
-    machinery here, next to the compaction/swap machinery it mirrors;
+    indexes (inverted_index.merge_indexes / ivf_index.merge_indexes;
     the index-SPECIFIC integrity guards stay with their callers):
 
     rows move VERBATIM — union of the shards' same hive partition,
@@ -298,8 +300,8 @@ def merge_sharded_layer(
     size, exactly like compact_partitioned. The `ingest_batch` sub-
     level collapses into ingest_batch=0 (the directory-derived column
     is dropped before write). Partition jobs submit concurrently
-    (threads drive submission only; Spark's scheduler multiplexes
-    execution), same rationale as compact_partitioned.
+    through run_concurrently (a failed group cancels the rest), same
+    rationale as compact_partitioned.
 
     `partitioned=False` is the flat-layer form (an index's doclens):
     one group, still byte-bin-packed — one row per doc is billions at
@@ -312,7 +314,6 @@ def merge_sharded_layer(
     schema (each partition group reads it minus the group's own
     column), so no group pays a footer-inference job. Returns aggregate
     {files_in, files_out, bytes, partitions}."""
-    import concurrent.futures as _cf
     import glob as _glob
     import os as _os
 
@@ -330,14 +331,17 @@ def merge_sharded_layer(
             merged = df if merged is None else merged.unionByName(df)
         return merged
 
-    def _move(name: str, shard_ids: "list[int]") -> dict:
+    def _listed(name: str, shard_ids: "list[int]") -> "list[str]":
         sub = f"/{name}" if name else ""
-        files_in = [
+        return [
             p
             for i in shard_ids
             for p in _glob.glob(f"{srcs[i]}{sub}/ingest_batch=*/part-*")
             if _os.path.isfile(p)
         ]
+
+    def _move(name: str, shard_ids: "list[int]", files_in) -> dict:
+        sub = f"/{name}" if name else ""
         total = sum(_os.path.getsize(p) for p in files_in)
         n_out = max(1, -(-total // target_file_bytes))
         merged = _read_purged_union(
@@ -359,12 +363,9 @@ def merge_sharded_layer(
     # A shard with bare part-* files directly under the layer dir is
     # the legacy pre-ingest_batch layout index_ingest.py refuses at
     # stream start. BOTH grouping forms below would otherwise SILENTLY
-    # DROP its rows from the merged index — the flat form's file-less
-    # skip sees no ingest_batch dirs (r12 ADVICE), and the partitioned
-    # form's key=value glob sees no partition dirs and yields zero
-    # groups for it (r13 ADVICE: the r12 fix ran only in the flat
-    # branch). Check BEFORE the branch split so every layout fails
-    # loudly with the same migration hint.
+    # DROP its rows from the merged index (the flat form's file-less
+    # skip sees no ingest_batch dirs; the partitioned form's key=value
+    # glob sees no partition dirs), so check before the branch split.
     for i in range(len(srcs)):
         if any(
             _os.path.isfile(p) for p in _glob.glob(f"{srcs[i]}/part-*")
@@ -391,10 +392,7 @@ def merge_sharded_layer(
         # 0-row dynamic-partition write emits no ingest_batch dirs at
         # all) must not reach spark.read.parquet — an empty dir fails
         # schema inference. Skip file-less shards; if EVERY shard is
-        # empty, fall through to the same empty-but-valid guard the
-        # partitioned form uses (late-r12: the r11 ADVICE fix covered
-        # only the partitioned path, so merging empty indexes still
-        # crashed on the flat doclens layer).
+        # empty, fall through to the empty-but-valid guard below.
         with_files = [
             i
             for i in range(len(srcs))
@@ -402,73 +400,75 @@ def merge_sharded_layer(
         ]
         groups = [("", with_files)] if with_files else []
 
-    agg = {"files_in": 0, "files_out": 0, "bytes": 0, "partitions": 0}
     if not groups:
-        # Empty-but-valid shard set (r11 ADVICE): zero partition dirs
-        # across every shard. Still materialize dst_new_dir so the
+        # Empty-but-valid shard set: zero partition dirs across every
+        # shard. Still materialize dst_new_dir so the
         # caller's swap_live_dir promotes an empty version instead of
         # raising FileNotFoundError on the missing `.new` staging name —
         # merging empty indexes succeeds with a zeroed aggregate.
         _os.makedirs(dst_new_dir, exist_ok=True)
-        return agg
-    # Submission concurrency adapts to group WEIGHT (r15, guide §2.6):
-    # the default 8 in-flight jobs is right when each group is a
-    # fact-sized coalesce+write that fills the cluster, but a merge of
-    # file-sized groups (every group under ~64 MB of listed bytes —
-    # driver-side metadata, already computed below per _move) is pure
-    # per-job overhead, and capping those at 8 leaves the scheduler
-    # idle; tiny jobs don't fight for executors, so submit them all.
-    def _group_bytes(name: str, shard_ids: "list[int]") -> int:
-        sub = f"/{name}" if name else ""
-        return sum(
-            _os.path.getsize(p)
-            for i in shard_ids
-            for p in _glob.glob(f"{srcs[i]}{sub}/ingest_batch=*/part-*")
-            if _os.path.isfile(p)
+        return _sum_moves([])
+    # Submission concurrency adapts to group WEIGHT: 8 in-flight jobs
+    # is right when each group is a fact-sized coalesce+write that fills
+    # the cluster, but a merge of file-sized groups (every group under
+    # ~64 MB of listed bytes) is pure per-job overhead, and capping
+    # those at 8 leaves the scheduler idle; tiny jobs don't fight for
+    # executors, so submit them all.
+    groups = [(name, ids, _listed(name, ids)) for name, ids in groups]
+    small = all(
+        sum(_os.path.getsize(p) for p in files) <= 64 * 1024 * 1024
+        for _, _, files in groups
+    )
+    return _sum_moves(
+        run_concurrently(
+            spark,
+            *(lambda g=g: _move(*g) for g in groups),
+            max_workers=min(len(groups), 32) if small else 8,
         )
-
-    if all(_group_bytes(*g) <= 64 * 1024 * 1024 for g in groups):
-        max_workers = min(len(groups), 32)
-    with _cf.ThreadPoolExecutor(max_workers=max_workers) as ex:
-        for res in ex.map(lambda g: _move(*g), groups):
-            agg["files_in"] += res["files_in"]
-            agg["files_out"] += res["files_out"]
-            agg["bytes"] += res["bytes"]
-            agg["partitions"] += 1
-    return agg
+    )
 
 
-def run_concurrently(spark, *thunks: "Callable[[], object]") -> list:
-    """Run independent Spark-action thunks on their own threads (threads
-    drive submission only; Spark's scheduler multiplexes execution) and
-    return their results in submit order.
+def run_concurrently(
+    spark, *thunks: "Callable[[], object]", max_workers: int | None = None
+) -> list:
+    """Run independent Spark-action thunks on at most `max_workers`
+    threads (default: one per thunk; threads drive submission only,
+    Spark's scheduler multiplexes execution) and return their results in
+    submit order. Each worker inherits the caller's local properties, so
+    its jobs carry the caller's job group and tags.
 
-    The first failure cancels the siblings' Spark jobs — found by a job
-    tag each worker sets, so callers' job groups are untouched — waits
+    The first failure cancels the thunks still queued and the running
+    siblings' Spark jobs — found by a job tag each worker adds — waits
     for every thread to return, then re-raises that failure: no writer
     outlives the call, and a failed layer write does not wait out its
-    sibling's full job first."""
+    siblings' full jobs first."""
     import concurrent.futures as _cf
     import uuid as _uuid
 
     sc = spark.sparkContext
+    jsc = sc._jsc.sc()
     tag = f"run_concurrently-{_uuid.uuid4().hex}"
+    inherited = jsc.getLocalProperties()
 
     def tagged(fn):
         def run():
+            own = jsc.getLocalProperties()
+            jsc.setLocalProperties(inherited.clone())
             sc.addJobTag(tag)
             try:
                 return fn()
             finally:
-                sc.removeJobTag(tag)
+                jsc.setLocalProperties(own)
 
         return run
 
-    with _cf.ThreadPoolExecutor(max_workers=len(thunks)) as ex:
+    with _cf.ThreadPoolExecutor(max_workers=max_workers or len(thunks)) as ex:
         futs = [ex.submit(tagged(t)) for t in thunks]
         _cf.wait(futs, return_when=_cf.FIRST_EXCEPTION)
         failed = [f for f in futs if f.done() and f.exception() is not None]
         if failed:
+            for f in futs:
+                f.cancel()  # only the not-yet-started ones
             # a sibling may submit its next job after a cancel: repeat
             # until every thread has returned
             while not all(f.done() for f in futs):
@@ -706,12 +706,13 @@ def commit_live_snapshot(parent_dir: str, parts: "Sequence[str]") -> None:
     `{parent_dir}/_snapshot.json` (write-temp + os.replace). This is the
     cross-layer consistency half of the versioned-layout contract: each
     swap_live_dir flip is atomic PER LAYER, but a store whose layers must
-    agree (an inverted index's postings/lexicon/stats) needs readers to
+    agree (an inverted index's tombstones and stats) needs readers to
     see them move TOGETHER — a maintainer therefore performs all its
     layer swaps first and commits ONE manifest at the end, and readers
     resolve every layer from one manifest read
-    (resolve_live_snapshot). A reader can then never pair a new lexicon
-    with old stats, however unluckily it lands between two swaps;
+    (resolve_live_snapshot). A reader can then never pair a new
+    tombstone set with old stats, however unluckily it lands between two
+    swaps;
     until the commit, readers keep the previous consistent set (whose
     version dirs the swaps retain — prev + GC grace)."""
     import json as _json

@@ -71,6 +71,9 @@ def snapshot_pipeline(
     df = dedup_by_key(df, [key_col], dedup_order_cols or [key_col])
     if keep_buckets_below is not None:
         # Token-range predicate (P3): server-side in the reference
-        # (snapshot_use_pyspark.py:219-220); here Catalyst pushes it down.
+        # (snapshot_use_pyspark.py:219-220). Here it is NOT pushed below
+        # the dedup Window: Catalyst pushes a filter through a Window
+        # only on its partition columns, and the Window partitions by the
+        # key alone, so this filter applies after the whole shuffle.
         df = df.where(F.col("token_bucket") < keep_buckets_below)
     return df

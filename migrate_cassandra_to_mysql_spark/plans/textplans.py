@@ -961,9 +961,9 @@ def lm_dirichlet_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     count, per-term collection frequency cf) partial-aggregate to ONE
     row and ride back as a broadcast join, so the corpus never
     shuffles; the only ordered exchange is the TakeOrdered top-20. At
-    100 TB: two corpus scans with nothing wide between them, and cf
-    (unlike df) is exactly the statistic a persisted index's lexicon
-    already stores, so the persisted path serves this for free.
+    100 TB: two corpus scans with nothing wide between them. On a
+    persisted index cf would be sum(tf) over the probed postings, the
+    same kind of aggregate inverted_index.bm25_search takes for df.
     """
     d = T(spark, sf_dir, "documents").select(
         "doc_id", textfns.tokens(F.col("text")).alias("toks")
@@ -1413,11 +1413,12 @@ def bigram_lm_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
 def bm25_persisted_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The persisted-index form of bm25_topk_search (same oracle: the
     served path must be semantics-preserving): invert the corpus ONCE into
-    md5-bucketed posting lists with denormalized doc lengths + a lexicon +
-    a 1-row stats table (operators/inverted_index.build_inverted_index),
+    md5-bucketed posting lists with denormalized doc lengths + a 1-row
+    stats table (operators/inverted_index.build_inverted_index),
     then answer the same keyword query touching ONLY the buckets its terms
     hash to (parquet PartitionFilters) with the term set pushed into each
-    bucket's scan. This is the production 100 TB retrieval layout: query
+    bucket's scan; each term's df is counted over the postings the query
+    reads. This is the production 100 TB retrieval layout: query
     cost scales with posting-list sizes, not corpus size — the inline form
     re-scans every document per query."""
     from migrate_cassandra_to_mysql_spark.operators import inverted_index
@@ -1556,14 +1557,15 @@ def bm25_sharded_merge_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus-wide BM25 SQL — i.e. the driver verifies that merging moves
     postings (no re-tokenization, zero shuffle: per-bucket coalesce of
     the shards' same-bucket files, since the md5 term hash is
-    shard-independent) and re-derives lexicon/stats with NOTHING lost
-    or double-counted vs a single-pass build.
+    shard-independent) and recomputes stats with NOTHING lost or
+    double-counted vs a single-pass build.
 
     Scale shape: the merge is the index-maintenance workflow at 100 TB
     (build shards where the data lands, consolidate for serving); its
     cost is one posting-volume rewrite with driver-side file listing —
-    no corpus scan, no wide exchange — plus the vocabulary-sized
-    bucket-consistency and doc-count-sized disjointness guards. Serving
+    no corpus scan, no wide exchange — plus the bucket-consistency guard
+    over the postings' (bucket, tok) and the doc-count-sized
+    disjointness guard. Serving
     on the merged index is byte-identical to bm25_persisted_topk's
     plan: term-bucket PartitionFilters + pushed term set. Build+merge
     memoized per sf_dir (consolidate-once/serve-many)."""

@@ -19,8 +19,8 @@ bytes (the same idempotent-replay trick the reference gets from uk_file_id
 + INSERT IGNORE, re-derived for file layouts; Delta/Iceberg get it from
 txn logs). Query semantics are unchanged: readers select named columns,
 so the extra ingest_batch partition column is invisible to bm25_search,
-and the derived lexicon/stats layers refresh once per drain, not per
-micro-batch.
+and the stats row is recomputed once per drain, not per micro-batch (df
+needs no refresh: bm25_search counts it over the postings it reads).
 
 The ingest_batch level is shared with the BATCH writers
 (build_inverted_index / append_to_inverted_index / build_ivfpq_index /
@@ -265,8 +265,10 @@ def stream_docs_into_inverted_index(
     batch paths use, so rows are bit-identical), one dynamic-overwrite
     partitioned write per layer. Batch id B writes ingest_batch=B+1 —
     0 is the batch build/append/compaction layer, which micro-batch 0's
-    dynamic overwrite must never clobber. Derived lexicon/stats rebuild
-    ONCE after the drain — O(index), not O(batches)."""
+    dynamic overwrite must never clobber. The stats row is recomputed
+    ONCE after the drain, from the doclens layer (a replayed batch
+    rewrites its own partitions, so a recompute stays exact where an
+    additive update could double-count)."""
     for layer in ("postings", "doclens"):
         _validate_ingest_layout(f"{index_dir}/{layer}")
     _check_batch_id_offset_upgrade(checkpoint_dir, index_dir)

@@ -199,19 +199,10 @@ def test_incremental_append_equals_full_build(spark, sf_dir, tmp_path):
     b = inverted_index.bm25_search(spark, inc_dir, _BM25_TERMS, k=20).toPandas()
     assert list(a["doc_id"]) == list(b["doc_id"])
     assert (a["bm25"].to_numpy() == b["bm25"].to_numpy()).all()
-    # derived layers agree exactly too
+    # the stats layer agrees exactly too
     sa = spark.read.parquet(f"{full_dir}/stats").collect()[0]
     sb = spark.read.parquet(f"{inc_dir}/stats").collect()[0]
     assert (sa["n_docs"], sa["sum_dl"]) == (sb["n_docs"], sb["sum_dl"])
-    la = {
-        (r["tok"], r["df"])
-        for r in spark.read.parquet(f"{full_dir}/lexicon").collect()
-    }
-    lb = {
-        (r["tok"], r["df"])
-        for r in spark.read.parquet(f"{inc_dir}/lexicon").collect()
-    }
-    assert la == lb
 
 
 def test_search_races_refresh_without_errors(spark, sf_dir, tmp_path):
@@ -307,7 +298,7 @@ def test_data_layers_are_versioned_from_first_build(spark, index_dir):
     sf1 serving soak caught in round 10)."""
     import os
 
-    for layer in ("postings", "doclens", "lexicon", "stats"):
+    for layer in inverted_index.LAYERS:
         assert os.path.islink(f"{index_dir}/{layer}"), layer
         assert os.path.isdir(os.path.realpath(f"{index_dir}/{layer}")), layer
 
@@ -318,8 +309,8 @@ def test_bm25_reads_are_snapshot_consistent_across_layer_swaps(
     """Cross-layer atomicity: a maintainer that has swapped ONE derived
     layer but not yet committed the snapshot manifest must be invisible —
     bm25_search resolves all layers from the manifest, so it keeps the
-    previous consistent set instead of pairing the new lexicon with old
-    stats. After the commit, reads flip to the new set atomically."""
+    previous consistent set instead of reading the newly swapped stats.
+    After the commit, reads flip to the new set atomically."""
     from migrate_cassandra_to_mysql_spark.operators.layout import (
         commit_live_snapshot,
         read_parquet_retry,
@@ -336,21 +327,21 @@ def test_bm25_reads_are_snapshot_consistent_across_layer_swaps(
 
     before = serve()
 
-    # mid-refresh state: a lexicon whose dfs would visibly change every
-    # idf is swapped in, but the manifest is NOT yet committed
+    # mid-refresh state: stats whose sum_dl would visibly change every
+    # length normalization are swapped in, but the manifest is NOT yet
+    # committed
     (
-        read_parquet_retry(spark, f"{d}/lexicon")
-        .withColumn("df", (F.col("df") * 1000).cast("long"))
+        read_parquet_retry(spark, f"{d}/stats")
+        .withColumn("sum_dl", (F.col("sum_dl") * 1000).cast("long"))
         .write.mode("overwrite")
-        .partitionBy("bucket")
-        .parquet(f"{d}/lexicon.new")
+        .parquet(f"{d}/stats.new")
     )
-    swap_live_dir(d, "lexicon")
+    swap_live_dir(d, "stats")
     mid = serve()
     assert list(mid["doc_id"]) == list(before["doc_id"])
     assert (mid["bm25"].to_numpy() == before["bm25"].to_numpy()).all()
 
-    # commit: readers flip to the new (distorted) lexicon — proving the
+    # commit: readers flip to the new (distorted) stats — proving the
     # manifest, not the live symlink, is what bm25_search resolves
     commit_live_snapshot(d, inverted_index.LAYERS)
     after = serve()
@@ -777,3 +768,132 @@ def test_delete_docs_rmw_lock_rejects_concurrent_deleter(
         for r in spark.read.parquet(f"{d}/deletes").collect()
     }
     assert got == set(ids)
+
+
+def _served(spark, d, terms, k=50):
+    return [
+        (r["doc_id"], r["n_hits"], r["bm25"])
+        for r in inverted_index.bm25_search(spark, d, terms, k=k).collect()
+    ]
+
+
+def _stats_row(spark, d):
+    r = spark.read.parquet(f"{d}/stats").collect()
+    assert len(r) == 1
+    return (r[0]["n_docs"], r[0]["sum_dl"])
+
+
+def test_appends_around_a_delete_equal_one_build_over_live_docs(
+    spark, sf_dir, tmp_path
+):
+    """Appends add the batch to the stats row instead of re-deriving it,
+    and df is counted at query time: several appends with a delete_docs
+    between two of them serve bit-identical scores, and hold the same
+    stats row, as one build over the docs still live."""
+    docs = T(spark, sf_dir, "documents")
+    part = F.col("doc_id") % 5
+    inc, ref = str(tmp_path / "inc"), str(tmp_path / "ref")
+    inverted_index.build_inverted_index(docs.where(part == 0), inc)
+    inverted_index.append_to_inverted_index(docs.where(part == 1), inc)
+    inverted_index.append_to_inverted_index(docs.where(part == 2), inc)
+    victims = [
+        int(r["doc_id"])
+        for r in docs.where(part <= 2).orderBy("doc_id").limit(6).collect()
+    ]
+    inverted_index.delete_docs(spark, inc, victims)
+    inverted_index.append_to_inverted_index(docs.where(part == 3), inc)
+    inverted_index.append_to_inverted_index(docs.where(part == 4), inc)
+    inverted_index.build_inverted_index(
+        docs.where(~F.col("doc_id").isin(victims)), ref
+    )
+    assert _stats_row(spark, inc) == _stats_row(spark, ref)
+    for terms in (_BM25_TERMS, ["spark", "join"], ["window"]):
+        got, want = _served(spark, inc, terms), _served(spark, ref, terms)
+        assert got and got == want, terms
+
+
+def test_append_job_budget(spark, sf_dir, tmp_path):
+    """An append to an index without tombstones runs only its own
+    writes: the postings append, the doclens append and the one-row
+    stats write (no scan of the existing index). Counted by job group;
+    the writes' worker threads inherit it."""
+    docs = T(spark, sf_dir, "documents")
+    d = str(tmp_path / "idx")
+    inverted_index.build_inverted_index(docs.where(F.col("doc_id") % 2 == 0), d)
+    batch = docs.where(F.col("doc_id") % 2 == 1)
+    sc = spark.sparkContext
+    group = "test_inverted_index.append_jobs"
+    sc.setJobGroup(group, "append job budget")
+    try:
+        inverted_index.append_to_inverted_index(batch, d)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert 0 < n_jobs <= 5, n_jobs
+
+
+def test_no_package_module_names_a_lexicon_layer():
+    """df is counted from the postings; no package module spells a path
+    under `lexicon` in code (docstrings may mention the retired layer)."""
+    import ast
+    import pathlib
+
+    import migrate_cassandra_to_mysql_spark
+
+    root = pathlib.Path(migrate_cassandra_to_mysql_spark.__file__).parent
+    hits = []
+    for path in sorted(root.rglob("*.py")):
+        tree = ast.parse(path.read_text())
+        docstrings = {
+            id(node.body[0].value)
+            for node in ast.walk(tree)
+            if isinstance(
+                node,
+                (ast.Module, ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef),
+            )
+            and node.body
+            and isinstance(node.body[0], ast.Expr)
+            and isinstance(node.body[0].value, ast.Constant)
+        }
+        hits += [
+            f"{path.relative_to(root)}:{node.lineno}"
+            for node in ast.walk(tree)
+            if isinstance(node, ast.Constant)
+            and isinstance(node.value, str)
+            and id(node) not in docstrings
+            and "lexicon" in node.value
+        ]
+    assert hits == []
+
+
+def test_index_with_a_leftover_lexicon_layer_still_serves(
+    spark, sf_dir, tmp_path
+):
+    """An index written when a per-term df layer still existed carries a
+    `lexicon` version and a manifest entry for it. Nothing reads it:
+    serving is unchanged, and an append over it serves like a build."""
+    import json
+
+    docs = T(spark, sf_dir, "documents")
+    d, ref = str(tmp_path / "old"), str(tmp_path / "ref")
+    inverted_index.build_inverted_index(docs.where(F.col("doc_id") % 2 == 0), d)
+    before = _served(spark, d, _BM25_TERMS)
+    # a distorted lexicon: serving would change if anything read it
+    spark.createDataFrame(
+        [(t, 10**6, inverted_index.term_bucket(t)) for t in _BM25_TERMS],
+        "tok string, df bigint, bucket int",
+    ).write.partitionBy("bucket").parquet(f"{d}/lexicon.v1")
+    os.symlink("lexicon.v1", f"{d}/lexicon")
+    with open(f"{d}/_snapshot.json") as f:
+        manifest = json.load(f)
+    manifest["layers"]["lexicon"] = "lexicon.v1"
+    with open(f"{d}/_snapshot.json", "w") as f:
+        json.dump(manifest, f)
+    assert _served(spark, d, _BM25_TERMS) == before
+
+    inverted_index.append_to_inverted_index(
+        docs.where(F.col("doc_id") % 2 == 1), d
+    )
+    inverted_index.build_inverted_index(docs, ref)
+    assert _served(spark, d, _BM25_TERMS) == _served(spark, ref, _BM25_TERMS)
+    assert _stats_row(spark, d) == _stats_row(spark, ref)

@@ -7,6 +7,8 @@ the z-order sort than under a 1-D sort.
 from __future__ import annotations
 
 import glob
+import itertools
+import threading
 import time
 
 import pyarrow.parquet as pq
@@ -14,6 +16,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from migrate_cassandra_to_mysql_spark.operators.layout import (
+    compact_partitioned,
     run_concurrently,
     write_zordered,
     zvalue,
@@ -667,4 +670,43 @@ def test_run_concurrently_cancels_sibling_on_first_failure(spark):
         run_concurrently(spark, slow_job, fail)
     assert time.monotonic() - t0 < slow_s / 2
     assert not finished
+    assert spark.sparkContext.statusTracker().getActiveJobsIds() == []
+
+
+def test_compaction_partition_failure_cancels_queued_and_running(
+    spark, tmp_path
+):
+    """compact_partitioned runs its partitions through run_concurrently:
+    one partition whose transform raises, beside slow partitions, fails
+    the call well before the slow jobs could finish, the queued
+    partitions never start, and no job outlives the call."""
+    src = str(tmp_path / "src")
+    spark.range(0, 20, 1, 1).withColumn(
+        "p", F.col("id").cast("int")
+    ).write.partitionBy("p").parquet(src)
+    slow_s = 30
+    nap = F.udf(lambda x: time.sleep(slow_s) or x, "long")
+    calls, lock = itertools.count(), threading.Lock()
+
+    def transform(df):
+        with lock:
+            n = next(calls)
+        if n == 2:
+            time.sleep(1.0)
+            raise ValueError("partition transform failed")
+        return df.select(nap("id").alias("id"))
+
+    t0 = time.monotonic()
+    with pytest.raises(ValueError, match="partition transform failed"):
+        compact_partitioned(
+            spark,
+            src,
+            str(tmp_path / "out"),
+            transform=transform,
+            schema="id bigint, p int",
+        )
+    assert time.monotonic() - t0 < slow_s / 2
+    # 8 partitions started, plus at most the one the failed worker took
+    # up before the cancel; the other 11 never ran
+    assert next(calls) <= 9
     assert spark.sparkContext.statusTracker().getActiveJobsIds() == []
