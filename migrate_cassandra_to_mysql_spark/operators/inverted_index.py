@@ -342,24 +342,23 @@ def compact_postings(
     partitions merge back into a bin-packed bucket=N/ingest_batch=0
     (append adds a file per batch per bucket and streaming adds a
     partition per micro-batch; query cost then grows with file count,
-    not posting volume). Per-partition coalesce — zero shuffle, bucket
-    pruning untouched — then rename-swap into place. Content is
-    identical by construction (tombstoned docs left stats when they were
-    deleted), so stats/ needs no refresh; the append+compact ==
-    single-pass-build equivalence is pinned at the QUERY level in
-    tests/test_inverted_index.py. Quiescent-ingest
-    contract for streamed indexes: run while no drain is in flight.
-    Returns the compaction stats dict for the caller's audit log:
-    top-level files_in/files_out/bytes/partitions cover the postings
-    layer; the doclens rewrite's own counts ride under "doclens".
-
-    The doclens layer (one row per document — billions of rows at the
-    100 TB design point) bin-packs by listed bytes exactly like the
-    partitioned layers do (the flat form of layout.merge_sharded_layer
-    over one shard): forcing it into one file would serialize a
-    multi-GB write through a single task."""
+    not posting volume). Both layers go through
+    layout.merge_sharded_layer over one shard, the live version: a
+    per-partition coalesce — zero shuffle, bucket pruning untouched —
+    then rename-swap into place. The doclens layer (one row per
+    document — billions of rows at the 100 TB design point) takes the
+    flat form, bin-packed by listed bytes like the postings: forcing it
+    into one file would serialize a multi-GB write through a single
+    task. Content is identical by construction (tombstoned docs left
+    stats when they were deleted), so stats/ needs no refresh; the
+    append+compact == single-pass-build equivalence is pinned at the
+    QUERY level in tests/test_inverted_index.py. An index built from
+    zero documents compacts to empty layers. Quiescent-ingest contract
+    for streamed indexes: run while no drain is in flight. Returns the
+    compaction stats dict for the caller's audit log: top-level
+    files_in/files_out/bytes/partitions cover the postings layer; the
+    doclens rewrite's own counts ride under "doclens"."""
     from migrate_cassandra_to_mysql_spark.operators.layout import (
-        compact_partitioned,
         merge_sharded_layer,
         swap_live_dir,
     )
@@ -367,14 +366,13 @@ def compact_postings(
     # the tombstone purge rides the rewrite compaction does anyway; the
     # emptied tombstone layer joins the same manifest commit
     with tombstones.compaction(spark, index_dir, "doc_id") as purge:
-        stats = compact_partitioned(
+        stats = merge_sharded_layer(
             spark,
-            f"{index_dir}/postings",
+            [os.path.realpath(f"{index_dir}/postings")],
             f"{index_dir}/postings.new",
+            [purge],
+            sort_within_by=("tok", "doc_id"),
             target_file_bytes=target_file_bytes,
-            sort_within_by=["tok", "doc_id"],
-            merge_sub_partitions_into="ingest_batch=0",
-            transform=purge,
             schema=SCHEMAS["postings"],
         )
         swap_live_dir(index_dir, "postings")
@@ -409,7 +407,8 @@ def merge_indexes(
     corpus scan — each merged bucket is a union of the shards' same
     bucket (the md5 term hash is shard-independent, so bucket=N rows
     from every shard belong together), bin-packed per bucket with a
-    coalesce of input splits — ZERO shuffle, like compact_partitioned.
+    coalesce of input splits — ZERO shuffle, through the same
+    layout.merge_sharded_layer move compact_postings makes.
     Stats recompute once over the merged doclens. Each shard's
     own tombstones are purged during the rewrite (the merge performs
     the owed compaction), so the merged index equals

@@ -274,27 +274,29 @@ def compact_codes(
     batches: each codes/cell=N's ingest_batch=* partitions merge into a
     bin-packed cell=N/ingest_batch=0 (append adds one file per batch per
     cell and streaming one partition per micro-batch; probe cost then
-    grows with file count). Per-partition coalesce — zero shuffle, cell
-    pruning untouched — then rename-swap into place; codebooks are
-    frozen so nothing else needs refresh. The append+compact ==
-    single-pass-build equivalence is pinned at the QUERY level in
-    tests/test_ivf_index.py. Quiescent-ingest contract for streamed
-    indexes. Returns compaction stats."""
+    grows with file count). The move is layout.merge_sharded_layer over
+    one shard, the live version: a per-partition coalesce — zero
+    shuffle, cell pruning untouched — then rename-swap into place;
+    codebooks are frozen so nothing else needs refresh. The
+    append+compact == single-pass-build equivalence is pinned at the
+    QUERY level in tests/test_ivf_index.py. Quiescent-ingest contract
+    for streamed indexes. Returns compaction stats."""
+    import os as _os
+
     from migrate_cassandra_to_mysql_spark.operators.layout import (
-        compact_partitioned,
+        merge_sharded_layer,
         swap_live_dir,
     )
 
     # the tombstone purge rides the rewrite compaction does anyway
     with tombstones.compaction(spark, index_dir, "vec_id") as purge:
-        stats = compact_partitioned(
+        stats = merge_sharded_layer(
             spark,
-            f"{index_dir}/codes",
+            [_os.path.realpath(f"{index_dir}/codes")],
             f"{index_dir}/codes.new",
+            [purge],
+            sort_within_by=("vec_id",),
             target_file_bytes=target_file_bytes,
-            sort_within_by=["vec_id"],
-            merge_sub_partitions_into="ingest_batch=0",
-            transform=purge,
             schema=SCHEMAS["codes"],
         )
         swap_live_dir(index_dir, "codes")

@@ -122,153 +122,9 @@ def write_zordered(
     )
 
 
-def compact_small_files(
-    spark,
-    src_dir: str,
-    out_dir: str,
-    target_file_bytes: int = 128 * 1024 * 1024,
-    sort_within_by: list[str] | None = None,
-    transform=None,
-    schema=None,
-) -> dict:
-    """Bin-pack a small-files parquet directory into ~target-size files —
-    the maintenance primitive every streaming/append workload needs (a
-    100 TB table fed by micro-batches accretes thousands of KB-sized
-    files; scan cost then scales with FILE COUNT, not data volume:
-    footer reads, task scheduling, and open/close overhead per file).
-
-    File count = ceil(total_bytes / target): computed from the source
-    listing (driver-side metadata only, no data pass), then ONE coalesce
-    write — coalesce, not repartition, so compaction does NOT shuffle:
-    it only glues input splits together (narrow dependency). Pass
-    sort_within_by to additionally restore a within-file sort order
-    (adds a local sort, still no exchange). Returns {files_in,
-    files_out, bytes} for the caller's audit log.
-
-    Write-then-swap is left to the caller/catalog layer (same contract
-    as inverted_index._refresh_derived) — this writes to out_dir.
-    `schema` (the layer's declared schema) spares the read its
-    footer-inference job (see _read_parquet).
-
-    The source listing uses a local-FS glob — correct for this engine's
-    test/serving layout; an object-store deployment (S3/GCS) swaps in a
-    FileSystem/object listing for the same sizes (still metadata-only,
-    no data pass either way).
-    """
-    import glob as _glob
-    import os as _os
-
-    parts = [
-        p
-        for p in _glob.glob(f"{src_dir}/*.parquet") + _glob.glob(f"{src_dir}/part-*")
-        if _os.path.isfile(p)
-    ]
-    total = sum(_os.path.getsize(p) for p in set(parts))
-    n_out = max(1, -(-total // target_file_bytes))
-    df = _read_parquet(spark, src_dir, schema)
-    if transform is not None:
-        # row-level rewrite hook (tombstone purges ride compaction — the
-        # one pass that already rewrites every surviving row); must not
-        # touch partition-path columns
-        df = transform(df)
-    df = df.coalesce(n_out)
-    if sort_within_by:
-        df = df.sortWithinPartitions(*sort_within_by)
-    df.write.mode("overwrite").parquet(out_dir)
-    files_out = len(
-        [p for p in _glob.glob(f"{out_dir}/part-*") if _os.path.isfile(p)]
-    )
-    return {"files_in": len(set(parts)), "files_out": files_out, "bytes": total}
-
-
-def compact_partitioned(
-    spark,
-    src_dir: str,
-    out_dir: str,
-    target_file_bytes: int = 128 * 1024 * 1024,
-    sort_within_by: list[str] | None = None,
-    merge_sub_partitions_into: str | None = None,
-    transform=None,
-    schema=None,
-) -> dict:
-    """compact_small_files for a hive-partitioned layout (e.g. an index's
-    postings/bucket=N or codes/cell=N): each partition directory is
-    bin-packed INDEPENDENTLY into ~target-size files, preserving the
-    partition scheme — partition-filter pruning works identically on the
-    compacted copy. Still zero shuffle (per-partition coalesce of input
-    splits); partitions compact as independent jobs, which is exactly how
-    a 100 TB deployment staggers maintenance (compact the partitions a
-    day's appends touched, leave the rest untouched — the file listing
-    that decides is driver-side metadata only). Returns aggregate
-    {files_in, files_out, bytes, partitions}.
-
-    merge_sub_partitions_into handles a second partition level that
-    should COLLAPSE rather than be preserved (the indexes' ingest_batch
-    layer): pass e.g. "ingest_batch=0" and each bucket=N/ingest_batch=*
-    merges into out_dir/bucket=N/ingest_batch=0 (the sub-partition column
-    is a directory-derived constant, so dropping it loses nothing).
-    `schema` is the whole layer's declared schema; each partition
-    directory is read with it minus that directory's own column, so no
-    partition pays a footer-inference job."""
-    import glob as _glob
-    import os as _os
-
-    part_dirs = sorted(
-        d for d in _glob.glob(f"{src_dir}/*=*") if _os.path.isdir(d)
-    )
-
-    def _one(d: str) -> dict:
-        name = _os.path.basename(d)
-        part_schema = _without(schema, name.split("=", 1)[0])
-        if merge_sub_partitions_into is None:
-            return compact_small_files(
-                spark,
-                d,
-                f"{out_dir}/{name}",
-                target_file_bytes=target_file_bytes,
-                sort_within_by=sort_within_by,
-                transform=transform,
-                schema=part_schema,
-            )
-        sub_col = merge_sub_partitions_into.split("=", 1)[0]
-        files_in = [
-            p
-            for p in _glob.glob(f"{d}/{sub_col}=*/part-*")
-            if _os.path.isfile(p)
-        ]
-        total = sum(_os.path.getsize(p) for p in files_in)
-        n_out = max(1, -(-total // target_file_bytes))
-        out = f"{out_dir}/{name}/{merge_sub_partitions_into}"
-        df = _read_parquet(spark, d, part_schema).drop(sub_col)
-        if transform is not None:
-            df = transform(df)
-        df = df.coalesce(n_out)
-        if sort_within_by:
-            df = df.sortWithinPartitions(*sort_within_by)
-        df.write.mode("overwrite").parquet(out)
-        files_out = len(
-            [p for p in _glob.glob(f"{out}/part-*") if _os.path.isfile(p)]
-        )
-        return {
-            "files_in": len(files_in),
-            "files_out": files_out,
-            "bytes": total,
-        }
-
-    # Submit per-partition jobs CONCURRENTLY (Spark's scheduler multiplexes
-    # them across executors): each job is tiny, so sequential submission —
-    # not execution — would dominate wall clock at thousands of partitions.
-    # A failed partition cancels the queued ones and its siblings' jobs.
-    return _sum_moves(
-        run_concurrently(
-            spark, *(lambda d=d: _one(d) for d in part_dirs), max_workers=8
-        )
-    )
-
-
 def _sum_moves(results: "Sequence[dict]") -> dict:
-    """Aggregate {files_in, files_out, bytes, partitions} of per-partition
-    compaction or merge results."""
+    """Aggregate {files_in, files_out, bytes, partitions} of
+    merge_sharded_layer's per-partition moves."""
     agg = {
         k: sum(r[k] for r in results)
         for k in ("files_in", "files_out", "bytes")
@@ -288,20 +144,26 @@ def merge_sharded_layer(
     target_file_bytes: int = 128 * 1024 * 1024,
     schema=None,
 ) -> dict:
-    """The generic shard-consolidation move shared by BOTH persisted
-    indexes (inverted_index.merge_indexes / ivf_index.merge_indexes;
-    the index-SPECIFIC integrity guards stay with their callers):
+    """The one layer-rewrite move of BOTH persisted indexes: a shard
+    merge (inverted_index.merge_indexes / ivf_index.merge_indexes, whose
+    index-SPECIFIC integrity guards stay with the callers) and a
+    compaction (compact_postings / compact_codes: a merge of ONE shard,
+    the layer's own live version).
 
-    rows move VERBATIM — union of the shards' same hive partition,
+    Rows move VERBATIM — union of the shards' same hive partition,
     each shard's frame first through its own `purge_fns[i]` (identity
-    or a broadcast anti-join of that shard's tombstones: the merge
+    or a broadcast anti-join of that shard's tombstones: the rewrite
     performs the owed physical purge), bin-packed by listed input
     bytes with a per-partition coalesce — ZERO shuffle at any corpus
-    size, exactly like compact_partitioned. The `ingest_batch` sub-
-    level collapses into ingest_batch=0 (the directory-derived column
-    is dropped before write). Partition jobs submit concurrently
-    through run_concurrently (a failed group cancels the rest), same
-    rationale as compact_partitioned.
+    size (coalesce only glues input splits together). The output file
+    count comes from the source listing, driver-side metadata with no
+    data pass; the listing is a local-FS glob, and an object-store
+    deployment swaps in its own listing of the same sizes. The
+    `ingest_batch` sub-level collapses into ingest_batch=0 (the
+    directory-derived column is dropped before write). Partition jobs
+    submit concurrently through run_concurrently (a failed group
+    cancels the rest): each job is tiny, so sequential submission would
+    dominate wall clock at thousands of partitions.
 
     `partitioned=False` is the flat-layer form (an index's doclens):
     one group, still byte-bin-packed — one row per doc is billions at
@@ -363,7 +225,7 @@ def merge_sharded_layer(
     # A shard with bare part-* files directly under the layer dir is
     # the legacy pre-ingest_batch layout index_ingest.py refuses at
     # stream start. BOTH grouping forms below would otherwise SILENTLY
-    # DROP its rows from the merged index (the flat form's file-less
+    # DROP its rows from the rewritten layer (the flat form's file-less
     # skip sees no ingest_batch dirs; the partitioned form's key=value
     # glob sees no partition dirs), so check before the branch split.
     for i in range(len(srcs)):
@@ -372,7 +234,7 @@ def merge_sharded_layer(
         ):
             raise ValueError(
                 f"{srcs[i]} holds unpartitioned leaf files (legacy "
-                "pre-ingest_batch layout); merging would silently "
+                "pre-ingest_batch layout); rewriting it would silently "
                 "drop its rows. Rebuild the shard (build writes "
                 "ingest_batch=0 now) or move the files under an "
                 "ingest_batch=0 subdirectory."

@@ -26,6 +26,9 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from migrate_cassandra_to_mysql_spark.functions.vectors import cosine
+from migrate_cassandra_to_mysql_spark.operators.lineage import (
+    checkpointed_rounds,
+)
 
 
 def _base(embeddings: DataFrame) -> DataFrame:
@@ -152,7 +155,10 @@ def mmr_rerank(
     mmr_expr = (
         f"round({MMR_LAMBDA_SQL} * rel - {MMR_COMPLEMENT_SQL} * maxsim, 6)"
     )
-    for step in range(2, k + 1):
+    steps = iter(range(2, k + 1))
+
+    def stage(sel: DataFrame) -> DataFrame:
+        step = next(steps)
         # The five stage joins plan as SORT-MERGE over the bounded
         # checkpoint-fed frames. That is DELIBERATE (r15, guide §1.1):
         # broadcasting the bounded sides here — the same §3.1 move
@@ -185,15 +191,18 @@ def mmr_rerank(
             .where(F.col("rn") == 1)
             .select("q_id", "n_id", "rel", F.lit(step).alias("step"))
         )
-        # per-round truncation, exactly like components.pagerank: sel is
-        # referenced three times per stage, so an uncheckpointed union
-        # still compounds the operator tree ~3^k. The LAST stage stays
-        # un-checkpointed so the returned plan (and its pinned feature
-        # vector) shows one representative greedy stage instead of a
-        # bare checkpoint scan.
-        sel = sel.unionByName(pick)
-        if step < k:
-            sel = sel.localCheckpoint(eager=True)
+        return sel.unionByName(pick)
+
+    # Per-round truncation on the shared round driver: sel is referenced
+    # three times per stage, so an uncheckpointed union still compounds
+    # the operator tree ~3^k, and each stage frees the one it replaces.
+    # The LAST stage stays un-checkpointed so the returned plan (and its
+    # pinned feature vector) shows one representative greedy stage
+    # instead of a bare checkpoint scan.
+    for sel, _ in checkpointed_rounds(sel, stage, k - 2):
+        pass
+    if k > 1:
+        sel = stage(sel)
     return sel.select(
         "q_id", "n_id", F.col("step").cast("long").alias("step"), "rel"
     )

@@ -45,12 +45,13 @@ checkpoint are all rejected with the drain-compact-mark migration
 recipe (_check_batch_id_offset_upgrade).
 
 Maintenance composes: compact_postings / compact_codes (the operators'
-own compactors) merge each partition's accumulated ingest_batch layers
-back into a single ingest_batch=0 (zero shuffle, rename-swap). Run them
-while ingest is quiescent — the same operational contract as any
-maintenance window: a replay of an uncommitted batch whose partitions
-were just merged would re-create them. compact_ingested_postings /
-compact_ingested_codes remain as aliases of those compactors.
+own compactors, both a one-shard layout.merge_sharded_layer) merge each
+partition's accumulated ingest_batch layers back into a single
+ingest_batch=0 (zero shuffle, rename-swap), for streamed and
+batch-appended indexes alike. Run them while ingest is quiescent — the
+same operational contract as any maintenance window: a replay of an
+uncommitted batch whose partitions were just merged would re-create
+them.
 """
 
 from __future__ import annotations
@@ -402,31 +403,3 @@ def stream_vectors_into_ivfpq_index(
                 "normally."
             )
     return processed
-
-
-def compact_ingested_codes(
-    spark: SparkSession,
-    index_dir: str,
-    target_file_bytes: int = 128 * 1024 * 1024,
-) -> dict:
-    """Alias of operators/ivf_index.compact_codes — with the uniform
-    ingest_batch layout, streamed and batch-appended indexes compact
-    through the same primitive (codes/cell=N/ingest_batch=* collapses
-    into cell=N/ingest_batch=0; zero shuffle, rename-swap,
-    quiescent-ingest contract)."""
-    from migrate_cassandra_to_mysql_spark.operators.ivf_index import (
-        compact_codes,
-    )
-
-    return compact_codes(spark, index_dir, target_file_bytes)
-
-
-def compact_ingested_postings(
-    spark: SparkSession,
-    index_dir: str,
-    target_file_bytes: int = 128 * 1024 * 1024,
-) -> dict:
-    """Alias of operators/inverted_index.compact_postings (see
-    compact_ingested_codes — one compactor per index since the layouts
-    unified)."""
-    return inv.compact_postings(spark, index_dir, target_file_bytes)

@@ -19,7 +19,6 @@ from migrate_cassandra_to_mysql_spark.plans.textplans import (
 )
 from migrate_cassandra_to_mysql_spark.sources.parquet import table as T
 from migrate_cassandra_to_mysql_spark.streaming.index_ingest import (
-    compact_ingested_postings,
     stream_docs_into_inverted_index,
 )
 
@@ -107,11 +106,11 @@ def test_crash_replay_is_idempotent(spark, sf_dir, streamed):
     assert before.equals(after)
 
 
-def test_compact_ingested_then_identical_answers(spark, streamed):
+def test_compact_streamed_then_identical_answers(spark, streamed):
     idx = streamed["idx"]
     before = _search(spark, idx)
     files_before = len(glob.glob(f"{idx}/postings/bucket=*/*/part-*"))
-    stats = compact_ingested_postings(spark, idx)
+    stats = inverted_index.compact_postings(spark, idx)
     files_after = len(glob.glob(f"{idx}/postings/bucket=*/*/part-*"))
     assert stats["files_in"] == files_before
     assert stats["files_out"] == files_after
@@ -246,9 +245,6 @@ class TestVectorIngest:
 
     def test_compact_then_identical(self, spark, sf_dir, vstreamed):
         from migrate_cassandra_to_mysql_spark.operators import ivf_index
-        from migrate_cassandra_to_mysql_spark.streaming.index_ingest import (
-            compact_ingested_codes,
-        )
 
         q = self._queries(spark, sf_dir)
         before = sorted(
@@ -262,7 +258,7 @@ class TestVectorIngest:
         n_before = len(
             glob.glob(f"{vstreamed['idx']}/codes/cell=*/*/part-*")
         )
-        stats = compact_ingested_codes(spark, vstreamed["idx"])
+        stats = ivf_index.compact_codes(spark, vstreamed["idx"])
         n_after = len(glob.glob(f"{vstreamed['idx']}/codes/cell=*/*/part-*"))
         assert stats["files_in"] == n_before and stats["files_out"] == n_after
         assert n_after < n_before

@@ -19,6 +19,7 @@ from migrate_cassandra_to_mysql_spark.functions.localframe import local_frame
 from migrate_cassandra_to_mysql_spark.operators import (
     inverted_index,
     ivf_index,
+    layout,
     tombstones,
 )
 from migrate_cassandra_to_mysql_spark.operators.similarity import (
@@ -120,8 +121,6 @@ def test_ivfadc_schemas_match_every_writer(spark, sf_dir, tmp_path):
 # The layout helpers that read a layer; each call must pass its schema.
 _SCHEMA_READERS = {
     "read_parquet_retry": 3,  # positional arity that includes the schema
-    "compact_small_files": None,
-    "compact_partitioned": None,
     "merge_sharded_layer": None,
 }
 # Modules that own the IVFADC, inverted-index and tombstone layers.
@@ -158,6 +157,8 @@ def test_no_package_module_reads_an_index_layer_without_its_schema():
     """Every layout read helper call in the package passes a schema, and
     the index modules never call `<session>.read.parquet` directly (a
     schema-bearing read goes through `read.schema(...)` or the helpers)."""
+    # a helper deleted from layout must leave this guard too
+    assert all(hasattr(layout, name) for name in _SCHEMA_READERS)
     root = pathlib.Path(migrate_cassandra_to_mysql_spark.__file__).parent
     missing = []
     for path in sorted(root.rglob("*.py")):

@@ -207,9 +207,10 @@ def test_incremental_append_equals_full_build(spark, sf_dir, tmp_path):
 
 def test_search_races_refresh_without_errors(spark, sf_dir, tmp_path):
     """VERDICT r7 ask #7: a serving search racing a concurrent derived-
-    layer refresh (atomic pointer flips of lexicon/ and stats/) must
-    never error AND always return the same (correct) answer — the flip
-    is atomic and each query pins the version it resolved."""
+    layer refresh (an atomic stats/ pointer flip, then one manifest
+    commit over postings/doclens/stats) must never error AND always
+    return the same (correct) answer — the flip is atomic and each
+    query pins the version it resolved."""
     import threading
 
     d = str(tmp_path / "raceidx")
@@ -406,7 +407,7 @@ def test_delete_promotes_new_tombstone_version(
     enlarged tombstone set in a NEW deletes version dir, never append
     into the live one — a reader whose manifest pinned the pre-delete
     version keeps reading EXACTLY the old tombstone set until the
-    deletion's own manifest commit flips deletes+lexicon+stats together.
+    deletion's own manifest commit flips deletes+stats together.
     Pinned: (a) the live deletes realpath changes across delete_docs,
     (b) the previously-pinned version dir still exists and still holds
     only the old set, (c) the manifest records the new version."""
@@ -572,8 +573,8 @@ def test_filtered_search_still_hides_tombstones(spark, sf_dir, tmp_path_factory)
 def test_merge_shards_equals_single_build(spark, sf_dir, tmp_path_factory):
     """Shard consolidation: two half-corpus shards merged == one
     single-pass build, at the query level (scores bit-equal) and at the
-    stats level — the merge moves postings and re-derives lexicon/stats,
-    never re-tokenizes."""
+    stats level — the merge moves postings and doclens, recomputes
+    stats and makes one manifest commit; it never re-tokenizes."""
     docs = T(spark, sf_dir, "documents")
     a = str(tmp_path_factory.mktemp("shard_a"))
     b = str(tmp_path_factory.mktemp("shard_b"))

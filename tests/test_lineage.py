@@ -8,10 +8,11 @@ import pytest
 from pyspark.sql import functions as F
 
 import migrate_cassandra_to_mysql_spark
-from migrate_cassandra_to_mysql_spark.operators import components
+from migrate_cassandra_to_mysql_spark.operators import components, similarity
 from migrate_cassandra_to_mysql_spark.operators.lineage import (
     checkpointed_rounds,
 )
+from migrate_cassandra_to_mysql_spark.sources.parquet import table as T
 
 
 def _count():
@@ -84,6 +85,18 @@ def test_label_propagation_frees_its_edge_checkpoint(spark):
     out = components.label_propagation(sym, rounds=3)
     assert len(out.collect()) == 6
     assert len(_block_rdd_ids(spark) - before) == 1
+
+
+def test_mmr_frees_each_greedy_stage_it_replaces(spark, sf_dir):
+    """A k=5 MMR call leaves three block-holding RDDs, the ones its
+    result reads: the candidate and pair checkpoints and the last
+    checkpointed greedy stage."""
+    before = _block_rdd_ids(spark)
+    out = similarity.mmr_rerank(
+        T(spark, sf_dir, "embeddings"), F.col("vec_id") % 100 == 0, k=5
+    )
+    assert len(out.collect()) > 0
+    assert len(_block_rdd_ids(spark) - before) == 3
 
 
 def test_lazy_checkpoints_live_only_in_the_round_driver():

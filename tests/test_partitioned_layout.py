@@ -72,6 +72,26 @@ def test_merge_sharded_layer_empty_shards_yield_empty_version(spark):
     assert os.path.islink(f"{parent}/postings")
 
 
+def test_compacting_a_zero_doc_index_keeps_serving_nothing(
+    spark, sf_dir, tmp_path
+):
+    """An index built from zero documents has no bucket dirs to
+    compact; compact_postings still promotes empty layers, returns a
+    zeroed aggregate, and the index serves no rows."""
+    from migrate_cassandra_to_mysql_spark.operators import inverted_index
+    from migrate_cassandra_to_mysql_spark.plans.textplans import _BM25_TERMS
+
+    d = str(tmp_path / "empty_idx")
+    docs = T(spark, sf_dir, "documents").where(F.lit(False))
+    inverted_index.build_inverted_index(docs, d)
+    zero = {"files_in": 0, "files_out": 0, "bytes": 0, "partitions": 0}
+    assert inverted_index.compact_postings(spark, d) == {
+        **zero,
+        "doclens": zero,
+    }
+    assert inverted_index.bm25_search(spark, d, _BM25_TERMS).collect() == []
+
+
 def test_merge_sharded_layer_flat_empty_and_mixed_shards(spark):
     """The FLAT (partitioned=False) form of the empty-shard contract
     (late r12): the r11 fix guarded only the partitioned path, so a

@@ -16,7 +16,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from migrate_cassandra_to_mysql_spark.operators.layout import (
-    compact_partitioned,
+    merge_sharded_layer,
     run_concurrently,
     write_zordered,
     zvalue,
@@ -121,19 +121,23 @@ def test_zorder_write_preserves_rows(spark, sf_dir, tmp_path):
     assert a == b
 
 
-def test_compact_small_files(spark, sf_dir, tmp_path):
-    from migrate_cassandra_to_mysql_spark.operators.layout import (
-        compact_small_files,
-    )
-
+def test_flat_layer_compaction_bin_packs_small_files(spark, sf_dir, tmp_path):
+    """The flat form of merge_sharded_layer over one shard bin-packs
+    micro-batch litter into fewer files with the same rows."""
     li = T(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_linenumber", "l_quantity"
     )
     frag = str(tmp_path / "fragmented")
     out = str(tmp_path / "compacted")
-    li.repartition(40).write.parquet(frag)  # simulate micro-batch litter
-    stats = compact_small_files(
-        spark, frag, out, target_file_bytes=512 * 1024
+    # simulate micro-batch litter
+    li.repartition(40).write.parquet(f"{frag}/ingest_batch=0")
+    stats = merge_sharded_layer(
+        spark,
+        [frag],
+        out,
+        [lambda df: df],
+        partitioned=False,
+        target_file_bytes=512 * 1024,
     )
     assert stats["files_in"] == 40
     assert 1 <= stats["files_out"] < 40
@@ -676,37 +680,40 @@ def test_run_concurrently_cancels_sibling_on_first_failure(spark):
 def test_compaction_partition_failure_cancels_queued_and_running(
     spark, tmp_path
 ):
-    """compact_partitioned runs its partitions through run_concurrently:
-    one partition whose transform raises, beside slow partitions, fails
-    the call well before the slow jobs could finish, the queued
-    partitions never start, and no job outlives the call."""
+    """merge_sharded_layer runs its partitions through run_concurrently:
+    one partition whose purge raises, beside slow partitions, fails the
+    call well before the slow jobs could finish, the queued partitions
+    never start, and no job outlives the call."""
     src = str(tmp_path / "src")
-    spark.range(0, 20, 1, 1).withColumn(
+    spark.range(0, 40, 1, 1).withColumn(
         "p", F.col("id").cast("int")
-    ).write.partitionBy("p").parquet(src)
+    ).withColumn("ingest_batch", F.lit(0)).write.partitionBy(
+        "p", "ingest_batch"
+    ).parquet(src)
     slow_s = 30
     nap = F.udf(lambda x: time.sleep(slow_s) or x, "long")
     calls, lock = itertools.count(), threading.Lock()
 
-    def transform(df):
+    def purge(df):
         with lock:
             n = next(calls)
         if n == 2:
             time.sleep(1.0)
-            raise ValueError("partition transform failed")
+            raise ValueError("partition purge failed")
         return df.select(nap("id").alias("id"))
 
     t0 = time.monotonic()
-    with pytest.raises(ValueError, match="partition transform failed"):
-        compact_partitioned(
+    with pytest.raises(ValueError, match="partition purge failed"):
+        merge_sharded_layer(
             spark,
-            src,
+            [src],
             str(tmp_path / "out"),
-            transform=transform,
-            schema="id bigint, p int",
+            [purge],
+            schema="id bigint, p int, ingest_batch int",
         )
     assert time.monotonic() - t0 < slow_s / 2
-    # 8 partitions started, plus at most the one the failed worker took
-    # up before the cancel; the other 11 never ran
-    assert next(calls) <= 9
+    # 32 partitions started (one-row groups submit 32 wide), plus at
+    # most the one the failed worker took up before the cancel; the
+    # other 7 never ran
+    assert next(calls) <= 33
     assert spark.sparkContext.statusTracker().getActiveJobsIds() == []
