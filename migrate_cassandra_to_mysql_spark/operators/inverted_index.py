@@ -10,6 +10,9 @@ only the few bucket partitions its terms hash to:
   postings/bucket=N/ingest_batch=B/  (tok, doc_id, tf, dl) — doc length
                        denormalized into every posting so scoring needs
                        NO doclens join
+  postings/bucket=-1/ingest_batch=0/  the SEGMENT: the postings of every
+                       append since the last compaction, unbucketed, one
+                       file per append task, sorted by (tok, doc_id)
   doclens/ingest_batch=B/  (doc_id, dl) for EVERY doc — incl. NULL/empty-
                        text docs that produce no postings; the n_docs source
   stats/               1 row (n_docs, sum_dl) — corpus-level BM25 constants
@@ -18,6 +21,15 @@ No layer stores df: a query reads every posting of its terms anyway and
 counts df over them, so an append touches only its own documents and df
 cannot drift from the postings. (A `lexicon/` dir left by older writers
 is never read.)
+
+The segment is the small-write half of a log-structured layout: a batch
+append writes ONE file set (not one file per bucket it touches — 32 files
+for an 8-document batch at 32 buckets, thousands at the design point),
+every query reads the segment beside its probed buckets (a token sits in
+both the segment and its hash bucket until compaction), and
+compact_postings folds the segment rows into their hash buckets, so no
+segment survives a compaction. Build, streaming ingest and shard merges
+of segment-free shards write hash buckets only.
 
 The ingest_batch level is UNIFORM across every writer — batch build and
 incremental append use ingest_batch=0, streaming ingestion
@@ -32,8 +44,10 @@ Buckets use the oracle-portable md5 bucket (functions/hashing.
 md5_token_bucket) so a Python-side literal term maps to its partition
 without touching the JVM; at 100 TB you would raise n_buckets to a few
 thousand so each partition stays file-sized, and the same pruning math
-holds. Query-time plan: the bucket set becomes parquet PartitionFilters
-(unprobed buckets' files never open), the term set is a pushed data
+holds. Query-time plan: the read lists only the probed bucket dirs and
+the segment (layout.read_parquet_retry's `partitions`), so planning cost
+is O(query terms), not O(n_buckets); the bucket set plus the segment's
+-1 becomes parquet PartitionFilters, the term set is a pushed data
 filter inside each bucket, the query terms' dfs are one row of counts over
 those postings, broadcast onto the per-doc conditional pivot — the only
 data shuffle, bounded by documents that contain at least one query term,
@@ -60,6 +74,11 @@ from migrate_cassandra_to_mysql_spark.functions.hashing import md5_token_bucket
 from migrate_cassandra_to_mysql_spark.operators import tombstones
 
 DEFAULT_BUCKETS = 32
+
+# The bucket value of the append segment (unbucketed postings awaiting
+# the compaction that folds them into their hash buckets).
+SEGMENT_BUCKET = -1
+SEGMENT = f"bucket={SEGMENT_BUCKET}"
 
 # The index's replaceable data layers, in the order maintenance touches
 # them; the set a cross-layer snapshot manifest must pin together.
@@ -127,21 +146,35 @@ def encode_postings(
     )
 
 
-def _batch_writes(toks, n_buckets, mode, postings_dir, doclens_dir):
-    """The postings and doclens writes of one tokenized batch, as
-    thunks for layout.run_concurrently."""
+def _doclens_write(toks, mode, doclens_dir):
+    """The doclens write of one tokenized batch, as a thunk for
+    layout.run_concurrently."""
     return (
-        lambda: _postings_from_tokenized(toks, n_buckets)
-        .withColumn("ingest_batch", F.lit(0))
-        .write.mode(mode)
-        .partitionBy("bucket", "ingest_batch")
-        .parquet(postings_dir),
         lambda: toks.select("doc_id", "dl")
         .withColumn("ingest_batch", F.lit(0))
         .write.mode(mode)
         .partitionBy("ingest_batch")
-        .parquet(doclens_dir),
+        .parquet(doclens_dir)
     )
+
+
+def _check_buckets(postings_dir: str, n_buckets: int) -> None:
+    """Fail loudly if the layer holds a bucket this n_buckets cannot
+    produce: the index was built with more buckets, so hashing the
+    segment's tokens with this count would file them where no query
+    probes. A driver-side listing, no Spark job."""
+    over = sorted(
+        b
+        for name in os.listdir(postings_dir)
+        if name.startswith("bucket=")
+        and (b := int(name.split("=", 1)[1])) >= n_buckets
+    )
+    if over:
+        raise ValueError(
+            f"{postings_dir} holds bucket(s) {over[:5]} >= n_buckets="
+            f"{n_buckets}: the index was built with more buckets. Pass "
+            "the n_buckets it was built with."
+        )
 
 
 def build_inverted_index(
@@ -181,13 +214,12 @@ def build_inverted_index(
     # BOTH swaps still happen only after BOTH writes committed.
     run_concurrently(
         docs.sparkSession,
-        *_batch_writes(
-            toks,
-            n_buckets,
-            "overwrite",
-            f"{index_dir}/postings.new",
-            f"{index_dir}/doclens.new",
-        ),
+        lambda: _postings_from_tokenized(toks, n_buckets)
+        .withColumn("ingest_batch", F.lit(0))
+        .write.mode("overwrite")
+        .partitionBy("bucket", "ingest_batch")
+        .parquet(f"{index_dir}/postings.new"),
+        _doclens_write(toks, "overwrite", f"{index_dir}/doclens.new"),
     )
     for part in ("postings", "doclens"):
         swap_live_dir(index_dir, part)
@@ -201,14 +233,24 @@ def append_to_inverted_index(
     text_col: str = "text",
 ) -> None:
     """Incremental index maintenance — the daily-ingest path, O(batch):
-    invert ONLY the new documents, append their postings and doclens,
-    and write the stats row as the manifest-resolved one plus the
-    batch's (count, sum(dl)); no existing posting or doclens file is
-    read. Postings are a pure function of their document, and old plus
-    batch stats equal a recompute (appended ids are never tombstoned: a
-    re-add purges first, below), so N appends serve exactly like one
-    build (pinned by test). Callers must ensure doc_ids in docs_new are
-    not already indexed (same contract as any append-only ingest).
+    invert ONLY the new documents, append their postings to the segment
+    and their doclens to the doclens layer, and write the stats row as
+    the manifest-resolved one plus the batch's (count, sum(dl)); no
+    existing posting or doclens file is read. Postings are a pure
+    function of their document, and old plus batch stats equal a
+    recompute (appended ids are never tombstoned: a re-add purges first,
+    below), so N appends serve exactly like one build (pinned by test).
+    Callers must ensure doc_ids in docs_new are not already indexed
+    (same contract as any append-only ingest).
+
+    The batch's postings go to the segment, `bucket=-1/ingest_batch=0`
+    of the live postings version: unbucketed, sorted by (tok, doc_id)
+    within each write task, one file per task — no repartition, so a
+    small batch (one task after AQE's shuffle coalescing) adds exactly
+    one postings file however many buckets its tokens hash to.
+    compact_postings later folds the segment into the hash buckets.
+    `n_buckets` is the count the index was built with; an index holding
+    a bucket at or above it fails loudly here, before any write.
 
     Appends write INTO the current live version dir (layout.ensure_live_dir
     resolves the versioned symlink; a legacy real-dir store is adopted as
@@ -232,7 +274,9 @@ def append_to_inverted_index(
     # tombstones anyway — O(index) rewrite, paid only when a re-add
     # actually hits, which resets the layer), then append cleanly.
     if tombstones.hits(spark, index_dir, docs_new, "doc_id"):
-        compact_postings(spark, index_dir)
+        compact_postings(spark, index_dir, n_buckets=n_buckets)
+    postings = ensure_live_dir(index_dir, "postings")
+    _check_buckets(postings, n_buckets)
     # Three tokenize passes, deliberately unpersisted — see
     # build_inverted_index (the cache A/B loss) — submitted together.
     toks = _tokenized(docs_new, text_col)
@@ -248,13 +292,12 @@ def append_to_inverted_index(
         )
     run_concurrently(
         spark,
-        *_batch_writes(
-            toks,
-            n_buckets,
-            "append",
-            ensure_live_dir(index_dir, "postings"),
-            ensure_live_dir(index_dir, "doclens"),
-        ),
+        lambda: _postings_from_tokenized(toks, n_buckets)
+        .select("doc_id", "dl", "tok", "tf")
+        .sortWithinPartitions("tok", "doc_id")
+        .write.mode("append")
+        .parquet(f"{postings}/{SEGMENT}/ingest_batch=0"),
+        _doclens_write(toks, "append", ensure_live_dir(index_dir, "doclens")),
         lambda: _stage_stats(stats, index_dir),
     )
     swap_live_dir(index_dir, "stats")
@@ -336,15 +379,22 @@ def compact_postings(
     spark: SparkSession,
     index_dir: str,
     target_file_bytes: int = 128 * 1024 * 1024,
+    n_buckets: int = DEFAULT_BUCKETS,
 ) -> dict:
     """Maintenance pass after N incremental appends and/or streamed
     batches: every postings/bucket=N's accumulated ingest_batch=*
     partitions merge back into a bin-packed bucket=N/ingest_batch=0
-    (append adds a file per batch per bucket and streaming adds a
-    partition per micro-batch; query cost then grows with file count,
-    not posting volume). Both layers go through
-    layout.merge_sharded_layer over one shard, the live version: a
-    per-partition coalesce — zero shuffle, bucket pruning untouched —
+    (streaming adds a partition per micro-batch; query cost then grows
+    with file count, not posting volume), and the append segment's rows
+    fold into their hash buckets in the same rewrite, so no bucket=-1
+    survives a compaction. `n_buckets` is the count the index was built
+    with; a bucket dir at or above it fails loudly before any write.
+
+    Both layers go through layout.merge_sharded_layer, the one
+    layer-rewrite primitive: the postings rewrite merges the live
+    version (its segment group excluded) with the segment re-bucketed
+    into a staging dir beside it (`postings.fold`, removed afterwards),
+    a per-bucket coalesce — zero shuffle, bucket pruning untouched —
     then rename-swap into place. The doclens layer (one row per
     document — billions of rows at the 100 TB design point) takes the
     flat form, bin-packed by listed bytes like the postings: forcing it
@@ -356,25 +406,64 @@ def compact_postings(
     zero documents compacts to empty layers. Quiescent-ingest contract
     for streamed indexes: run while no drain is in flight. Returns the
     compaction stats dict for the caller's audit log: top-level
-    files_in/files_out/bytes/partitions cover the postings layer; the
-    doclens rewrite's own counts ride under "doclens"."""
+    files_in/bytes count the live postings files read (the segment's
+    included), files_out/partitions the buckets written; the doclens
+    rewrite's own counts ride under "doclens"."""
+    import glob
+    import shutil
+
     from migrate_cassandra_to_mysql_spark.operators.layout import (
         merge_sharded_layer,
+        read_parquet_retry,
         swap_live_dir,
     )
 
+    live = os.path.realpath(f"{index_dir}/postings")
+    if os.path.isdir(live):
+        _check_buckets(live, n_buckets)
+    fold = f"{index_dir}/postings.fold"
     # the tombstone purge rides the rewrite compaction does anyway; the
     # emptied tombstone layer joins the same manifest commit
     with tombstones.compaction(spark, index_dir, "doc_id") as purge:
-        stats = merge_sharded_layer(
-            spark,
-            [os.path.realpath(f"{index_dir}/postings")],
-            f"{index_dir}/postings.new",
-            [purge],
-            sort_within_by=("tok", "doc_id"),
-            target_file_bytes=target_file_bytes,
-            schema=SCHEMAS["postings"],
-        )
+        srcs, purges = [live], [purge]
+        if os.path.isdir(f"{live}/{SEGMENT}"):
+            # the segment re-bucketed and purged: a second shard
+            purge(
+                read_parquet_retry(
+                    spark, live, SCHEMAS["postings"], partitions=[SEGMENT]
+                )
+            ).select(
+                "doc_id",
+                "dl",
+                "tok",
+                "tf",
+                md5_token_bucket(F.col("tok"), n_buckets)
+                .cast("int")
+                .alias("bucket"),
+                F.lit(0).alias("ingest_batch"),
+            ).write.mode("overwrite").partitionBy(
+                "bucket", "ingest_batch"
+            ).parquet(fold)
+            srcs.append(fold)
+            purges.append(lambda df: df)
+        try:
+            stats = merge_sharded_layer(
+                spark,
+                srcs,
+                f"{index_dir}/postings.new",
+                purges,
+                exclude=(SEGMENT,),
+                sort_within_by=("tok", "doc_id"),
+                target_file_bytes=target_file_bytes,
+                schema=SCHEMAS["postings"],
+            )
+        finally:
+            shutil.rmtree(fold, ignore_errors=True)
+        # the merge listed the re-bucketed staging files, not the
+        # segment files they came from
+        files_in = glob.glob(f"{live}/bucket=*/ingest_batch=*/part-*")
+        stats["files_in"] = len(files_in)
+        stats["bytes"] = sum(os.path.getsize(p) for p in files_in)
         swap_live_dir(index_dir, "postings")
         stats["doclens"] = merge_sharded_layer(
             spark,
@@ -409,6 +498,9 @@ def merge_indexes(
     from every shard belong together), bin-packed per bucket with a
     coalesce of input splits — ZERO shuffle, through the same
     layout.merge_sharded_layer move compact_postings makes.
+    The shards' append segments merge the same way into the merged
+    index's segment (bucket=-1), which serves as it did in the shards
+    until the merged index's compact_postings folds it.
     Stats recompute once over the merged doclens. Each shard's
     own tombstones are purged during the rewrite (the merge performs
     the owed compaction), so the merged index equals
@@ -442,11 +534,15 @@ def merge_indexes(
 
     # 1) bucket-hash compatibility: every shard must map each token to
     # the SAME bucket (a check over the shards' distinct (bucket, tok)).
+    # Segment rows are unbucketed: a token sits in the segment and in
+    # its hash bucket alike.
     toks_all = None
     for lay in layers:
-        one = read_parquet_retry(
-            spark, lay["postings"], SCHEMAS["postings"]
-        ).select("bucket", "tok")
+        one = (
+            read_parquet_retry(spark, lay["postings"], SCHEMAS["postings"])
+            .where(F.col("bucket") != SEGMENT_BUCKET)
+            .select("bucket", "tok")
+        )
         toks_all = one if toks_all is None else toks_all.unionByName(one)
 
     # 2) corpus disjointness (after each shard's own tombstone purge).
@@ -555,11 +651,14 @@ def bm25_search(
     fits (flipping to a shuffled semi-join when a 100 TB filter set
     outgrows that — correct either way).
 
-    Plan: probe-bucket PartitionFilters + term-IN pushed filter on the
-    postings scan; vocabulary never loads beyond the probed buckets'
-    query-term rows. The terms' dfs are one row of conditional counts
-    over those masked postings, taken BEFORE the `allowed` semi-join (so
-    they stay corpus-global) and broadcast onto the pivot; the counts
+    Plan: the read lists only the probed bucket dirs and the append
+    segment (bucket=-1) that exist, so planning lists O(terms) dirs
+    however many buckets the index has; probe-bucket PartitionFilters +
+    term-IN pushed filter on the postings scan; vocabulary never loads
+    beyond the probed buckets' and the segment's query-term rows. The
+    terms' dfs are one row of conditional counts over those masked
+    postings, taken BEFORE the `allowed` semi-join (so they stay
+    corpus-global) and broadcast onto the pivot; the counts
     aggregate partially per task (a Window by tok would pull a whole
     posting list into one task), and since the pivot does not wait for
     them, both aggregations run as concurrent stages. The per-doc pivot
@@ -584,12 +683,22 @@ def bm25_search(
         )
 
         score_sql = _bm25_score_sql(len(terms))
-    buckets = sorted({term_bucket(t, n_buckets) for t in terms})
+    # the terms' hash buckets plus the append segment, which may hold
+    # any term
+    buckets = [
+        *sorted({term_bucket(t, n_buckets) for t in terms}),
+        SEGMENT_BUCKET,
+    ]
     layer = tombstones.resolve(index_dir, LAYERS)
     # tombstoned docs are invisible to serving the moment the delete
     # commits; the physical purge rides the next compaction
     postings = (
-        read_parquet_retry(spark, layer["postings"], SCHEMAS["postings"])
+        read_parquet_retry(
+            spark,
+            layer["postings"],
+            SCHEMAS["postings"],
+            partitions=[f"bucket={b}" for b in buckets],
+        )
         .where(F.col("bucket").isin(buckets))
         .where(F.col("tok").isin(terms))
         .select("doc_id", "dl", "tok", "tf")

@@ -553,10 +553,12 @@ def ivfpq_search(
     and adc_query_side (same fold order, same 6-dp rounding, so
     bit-identical). The (q_id, q_cell, lut) rows enter the plan as a
     local frame, so planning runs no Spark job and the plan carries no
-    literal codebook. The probed set becomes a literal IN filter that
-    reaches the codes scan as a parquet PartitionFilter — unprobed
-    cells' files are never opened, and the rows that ARE read carry m
-    code bytes, not d-dim vectors. Scoring is a broadcast equi-join on
+    literal codebook. The read lists only the probed cell dirs
+    (layout.read_parquet_retry's `partitions`), so planning lists
+    O(n_probe) dirs however many cells the index has, and the probed
+    set becomes a literal IN filter that reaches the codes scan as a
+    parquet PartitionFilter — unprobed cells' files are never opened,
+    and the rows that ARE read carry m code bytes, not d-dim vectors. Scoring is a broadcast equi-join on
     cell + m table lookups per candidate; the broadcast row carries m *
     n_centers doubles (1 KB at m=8, 16 centers; n_probe rows per query).
     The only shuffle is the per-query top-k window. Same conventions as
@@ -595,9 +597,9 @@ def _probes_and_tables(
     rows: list, cell_centroids: list, centers: list, residual: bool,
     n_probe: int,
 ) -> list:
-    """(q_id, q_cell, lut) per (query, probed cell): the probe explode
-    of ranked_cells_expr followed by adc_query_side, computed on the
-    driver by their bit-identical twins in operators/similarity."""
+    """(q_id, q_cell, lut, qv) per (query, probed cell): the probe
+    explode of ranked_cells_expr followed by adc_query_side, computed on
+    the driver by their bit-identical twins in operators/similarity."""
     from migrate_cassandra_to_mysql_spark.operators import similarity as sim
 
     if not rows:
@@ -615,7 +617,9 @@ def _probes_and_tables(
     else:
         per_query = sim.adc_tables(qv, centers)
         luts = [per_query[i] for i, _ in pairs]
-    return [(rows[i][0], c, lut) for (i, c), lut in zip(pairs, luts)]
+    return [
+        (rows[i][0], c, lut, rows[i][1]) for (i, c), lut in zip(pairs, luts)
+    ]
 
 
 def _adc_topk(
@@ -626,8 +630,10 @@ def _adc_topk(
     k: int,
     n_probe: int,
     allowed: DataFrame | None,
+    with_qv: bool = False,
 ) -> DataFrame:
-    """ivfpq_search over already-collected query rows."""
+    """ivfpq_search over already-collected query rows; `with_qv` carries
+    each query's vector on its rows (the re-rank's query side)."""
     from migrate_cassandra_to_mysql_spark.operators import similarity as sim
 
     cell_centroids, centers = load_ivfpq_codebooks(spark, index_dir)
@@ -635,13 +641,21 @@ def _adc_topk(
     probes = _probes_and_tables(
         rows, cell_centroids, centers, residual, n_probe
     )
-    q_lut = local_frame(
-        spark, probes, f"q_id {q_type}, q_cell long, lut array<array<double>>"
-    )
-    probed = sorted({c for _, c, _ in probes})
+    ddl = f"q_id {q_type}, q_cell long, lut array<array<double>>"
+    if with_qv:
+        ddl += ", qv array<double>"
+    else:
+        probes = [p[:3] for p in probes]
+    q_lut = local_frame(spark, probes, ddl)
+    probed = sorted({p[1] for p in probes})
     layer = tombstones.resolve(index_dir, LAYERS)
     codes = (
-        read_parquet_retry(spark, layer["codes"], SCHEMAS["codes"])
+        read_parquet_retry(
+            spark,
+            layer["codes"],
+            SCHEMAS["codes"],
+            partitions=[f"cell={c}" for c in probed],
+        )
         .where(F.col("cell").isin(probed))
         .select("vec_id", "codes", F.col("cell").cast("long").alias("cell"))
     )
@@ -661,6 +675,7 @@ def _adc_topk(
             F.col("vec_id").alias("n_id"),
             "cell",
             sim.adc_lookup_expr(len(centers)).alias("approx_dist"),
+            *(["qv"] if with_qv else []),
         )
     )
     w = Window.partitionBy("q_id").orderBy(F.asc("approx_dist"), F.asc("n_id"))
@@ -751,25 +766,28 @@ def ivfpq_search_rerank(
     discard — and a selective filter still yields k results.
 
     The queries are collected once (see ivfpq_search): the same rows
-    feed the driver-side ADC query side and, as a local frame, the
-    exact re-rank's query side, so with a local-frame `queries` the
-    whole plan is built without a Spark job."""
-    from migrate_cassandra_to_mysql_spark.functions.vectors import cosine as _cos
+    feed the driver-side ADC query side and, carried as `qv` on the
+    probe rows through the shortlist, the exact re-rank's query side, so
+    with a local-frame `queries` the whole plan is built without a Spark
+    job. The exact cosine is one SQL expression (similarity.cosine_sql,
+    the fold order of functions/vectors.cosine), rounded to 6 dp."""
+    from migrate_cassandra_to_mysql_spark.operators.similarity import (
+        cosine_sql,
+    )
 
     rows, q_type = _collect_queries(queries)
     short = _adc_topk(
-        spark, index_dir, rows, q_type, shortlist, n_probe, allowed
-    ).select("q_id", "n_id")
+        spark, index_dir, rows, q_type, shortlist, n_probe, allowed,
+        with_qv=True,
+    ).select("q_id", "n_id", "qv")
     vecs = corpus.select(
         F.col("vec_id").alias("n_id"),
         F.col(embedding_col).cast("array<double>").alias("nv"),
     )
-    fetched = F.broadcast(short).join(vecs, "n_id")
-    q = local_frame(spark, rows, f"q_id {q_type}, qv array<double>")
-    scored = fetched.join(F.broadcast(q), "q_id").select(
+    scored = F.broadcast(short).join(vecs, "n_id").select(
         "q_id",
         "n_id",
-        F.round(_cos(F.col("qv"), F.col("nv")), 6).alias("cos_sim"),
+        F.expr(f"round({cosine_sql('qv', 'nv')}, 6)").alias("cos_sim"),
     )
     w = Window.partitionBy("q_id").orderBy(F.desc("cos_sim"), F.asc("n_id"))
     return scored.withColumn(

@@ -140,6 +140,7 @@ def merge_sharded_layer(
     purge_fns: "Sequence",
     *,
     partitioned: bool = True,
+    exclude: "Sequence[str]" = (),
     sort_within_by: "Sequence[str] | None" = None,
     target_file_bytes: int = 128 * 1024 * 1024,
     schema=None,
@@ -167,7 +168,9 @@ def merge_sharded_layer(
 
     `partitioned=False` is the flat-layer form (an index's doclens):
     one group, still byte-bin-packed — one row per doc is billions at
-    the design point, never force a single file.
+    the design point, never force a single file. `exclude` names
+    partition dirs (e.g. "bucket=-1") no shard contributes: a caller
+    that re-partitions those rows itself stages them as one more shard.
 
     Writes land under `dst_new_dir` (a `.new` staging name) — the
     caller promotes via swap_live_dir and commits its snapshot
@@ -244,10 +247,13 @@ def merge_sharded_layer(
         by_part: dict[str, list[int]] = {}
         for i, src in enumerate(srcs):
             for d in _glob.glob(f"{src}/*=*"):
-                if _os.path.isdir(d) and not _os.path.basename(
-                    d
-                ).startswith("ingest_batch="):
-                    by_part.setdefault(_os.path.basename(d), []).append(i)
+                name = _os.path.basename(d)
+                if (
+                    _os.path.isdir(d)
+                    and not name.startswith("ingest_batch=")
+                    and name not in exclude
+                ):
+                    by_part.setdefault(name, []).append(i)
         groups = [(name, by_part[name]) for name in sorted(by_part)]
     else:
         # Flat form: a shard whose layer holds zero data files (a
@@ -351,13 +357,16 @@ def _without(schema, column: str):
     return StructType([f for f in st.fields if f.name != column])
 
 
-def _read_parquet(spark, path: str, schema=None):
+def _read_parquet(spark, path, schema=None, base_path=None):
     """spark.read.parquet with the layer's declared schema. Without one,
     Spark infers the schema from parquet footers, and that inference is
     a Spark job of its own on every read (schema=None keeps it, for
-    directories whose layout nobody declared)."""
+    directories whose layout nobody declared). `path` may be a list of
+    partition dirs under `base_path`."""
     reader = spark.read if schema is None else spark.read.schema(schema)
-    return reader.parquet(path)
+    if base_path is not None:
+        reader = reader.option("basePath", base_path)
+    return reader.parquet(*([path] if isinstance(path, str) else path))
 
 
 def read_parquet_retry(
@@ -366,6 +375,7 @@ def read_parquet_retry(
     schema=None,
     attempts: int = 8,
     initial_delay: float = 0.05,
+    partitions: "Sequence[str] | None" = None,
 ):
     """spark.read.parquet pinned to the CURRENT live version and with a
     bounded retry on missing-path errors — the reader side of
@@ -390,7 +400,16 @@ def read_parquet_retry(
     the schema from parquet footers at the cost of one Spark job per
     read. The missing-path check and retry hold either way.
     tests/test_index_schemas.py fails if a package read of an index
-    layer leaves it out."""
+    layer leaves it out.
+
+    `partitions` (partition dir names such as "bucket=3") restricts the
+    read to those of them that exist in the resolved version, read with
+    basePath set to it, so partition columns keep their values and a
+    caller's partition filter still shows as PartitionFilters. Planning
+    then lists O(len(partitions)) dirs, not the whole layer: listing
+    more than spark.sql.sources.parallelPartitionDiscovery.threshold
+    (32) sibling dirs is a Spark job of its own. None of them existing
+    reads nothing (an empty frame of the declared schema)."""
     import os as _os
     import time as _time
 
@@ -399,7 +418,18 @@ def read_parquet_retry(
             resolved = (
                 _os.path.realpath(path) if _os.path.islink(path) else path
             )
-            return _read_parquet(spark, resolved, schema)
+            if partitions is None:
+                return _read_parquet(spark, resolved, schema)
+            return _read_parquet(
+                spark,
+                [
+                    f"{resolved}/{p}"
+                    for p in partitions
+                    if _os.path.isdir(f"{resolved}/{p}")
+                ],
+                schema,
+                base_path=resolved,
+            )
         except Exception as e:  # AnalysisException: PATH_NOT_FOUND
             msg = str(e)
             missing = "PATH_NOT_FOUND" in msg or "does not exist" in msg

@@ -429,16 +429,23 @@ def _sql_dot(a: str, b: str) -> str:
     )
 
 
-def _sql_cos_lit(col_expr: str, vec: list) -> str:
-    """cosine(col, literal) with the exact operation sequence of
-    functions/vectors.cosine: dot / (sqrt(dot(a,a)) * sqrt(dot(b,b))).
-    The literal-side norm stays in SQL so constant folding computes it
-    with the same JVM arithmetic the Column form used."""
-    arr = _sql_vec(vec)
+def cosine_sql(a: str, b: str) -> str:
+    """cosine(a, b) of two array expressions as one SQL string, with the
+    exact operation sequence of functions/vectors.cosine: dot /
+    (sqrt(dot(a,a)) * sqrt(dot(b,b))). The Column form builds the same
+    tree through Python-lambda higher-order functions, several py4j
+    calls per node on every plan build."""
     return (
-        f"({_sql_dot(col_expr, arr)} / (sqrt({_sql_dot(col_expr, col_expr)})"
-        f" * sqrt({_sql_dot(arr, arr)})))"
+        f"({_sql_dot(a, b)} / (sqrt({_sql_dot(a, a)})"
+        f" * sqrt({_sql_dot(b, b)})))"
     )
+
+
+def _sql_cos_lit(col_expr: str, vec: list) -> str:
+    """cosine(col, literal). The literal-side norm stays in SQL so
+    constant folding computes it with the same JVM arithmetic the
+    Column form used."""
+    return cosine_sql(col_expr, _sql_vec(vec))
 
 
 def _first_k_pq_centers(e: DataFrame, m: int, n_centers: int) -> list:

@@ -48,7 +48,9 @@ Maintenance composes: compact_postings / compact_codes (the operators'
 own compactors, both a one-shard layout.merge_sharded_layer) merge each
 partition's accumulated ingest_batch layers back into a single
 ingest_batch=0 (zero shuffle, rename-swap), for streamed and
-batch-appended indexes alike. Run them while ingest is quiescent — the
+batch-appended indexes alike; compact_postings also folds the batch
+appends' unbucketed segment (bucket=-1) into the hash buckets. A
+micro-batch here still writes one postings file per bucket it touches. Run them while ingest is quiescent — the
 same operational contract as any maintenance window: a replay of an
 uncommitted batch whose partitions were just merged would re-create
 them.
