@@ -23,6 +23,12 @@ own instead of defaulting to sort-merge.
 
 Any type the arrow mapper cannot express falls back to the original
 pickled-row path — correctness first, the fast path is an optimization.
+
+Operators that finish small inputs on the driver (connected components,
+LSH banding) size that choice with ``driver_row_bound`` and fetch through
+``collect_within_bound``, so every driver finish obeys one bound: the
+session's ``spark.sql.autoBroadcastJoinThreshold`` over the caller's
+bytes per row, the size Spark itself would ship to every executor.
 """
 
 from __future__ import annotations
@@ -30,6 +36,8 @@ from __future__ import annotations
 from collections.abc import Iterable
 
 from pyspark.sql import DataFrame, SparkSession
+
+from migrate_cassandra_to_mysql_spark.sources.parquet import _parse_bytes
 
 try:  # pyarrow ships with the pyspark[sql] extra; guard anyway
     import pyarrow as pa
@@ -146,3 +154,34 @@ def local_frame(
                 stacklevel=2,
             )
         return spark.createDataFrame(rows, ddl)
+
+
+def driver_row_bound(spark: SparkSession, row_bytes: int) -> int:
+    """How many rows of `row_bytes` each a driver finish may take:
+    spark.sql.autoBroadcastJoinThreshold // row_bytes, and 0 when the
+    threshold is <= 0 (broadcast off) or unparseable."""
+    threshold = _parse_bytes(
+        spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10MB")
+    )
+    return max(threshold or 0, 0) // row_bytes
+
+
+def collect_within_bound(df: DataFrame, row_bytes: int) -> list | None:
+    """All rows of `df` when there are at most
+    ``driver_row_bound(spark, row_bytes)`` of them, else None (always None
+    when the bound is 0). One job: a single task reads at most bound + 1
+    rows, so a frame above the bound costs one row more than the bound,
+    never a full collect."""
+    bound = driver_row_bound(df.sparkSession, row_bytes)
+    if bound == 0:
+        return None
+    rows = df.coalesce(1).limit(bound + 1).collect()
+    return rows if len(rows) <= bound else None
+
+
+def is_local(df: DataFrame) -> bool:
+    """True when Catalyst folds `df` into a LocalRelation, i.e. its rows
+    already sit on the driver. ``Dataset.isLocal`` checks the analyzed
+    plan, which is false for a projection over a local frame."""
+    plan = df._jdf.queryExecution().optimizedPlan()
+    return plan.getClass().getSimpleName() == "LocalRelation"

@@ -54,15 +54,18 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import IntegralType, StringType
 from pyspark.storagelevel import StorageLevel
 
-from migrate_cassandra_to_mysql_spark.functions.localframe import local_frame
-from migrate_cassandra_to_mysql_spark.sources.parquet import _parse_bytes
+from migrate_cassandra_to_mysql_spark.functions.localframe import (
+    collect_within_bound,
+    is_local,
+    local_frame,
+)
 
 from .lineage import checkpointed_rounds, free_local_checkpoint
 
 
 # Bytes per (long, long) edge when sizing the driver-side finish against
-# spark.sql.autoBroadcastJoinThreshold.
-_EDGE_BYTES = 16
+# spark.sql.autoBroadcastJoinThreshold (localframe.driver_row_bound).
+EDGE_BYTES = 16
 
 
 def _ddl_type(df: DataFrame, col: str) -> str:
@@ -72,26 +75,17 @@ def _ddl_type(df: DataFrame, col: str) -> str:
 
 
 def _small_edge_list(ek: DataFrame) -> list | None:
-    """The (s, d) rows of the checkpointed edge frame when the driver can
-    finish them: at most spark.sql.autoBroadcastJoinThreshold / 16 edges
-    (none when broadcast is off), with non-null ids of one integral or
-    string type. None otherwise."""
-    threshold = _parse_bytes(
-        ek.sparkSession.conf.get(
-            "spark.sql.autoBroadcastJoinThreshold", "10MB"
-        )
-    )
-    bound = max(threshold or 0, 0) // _EDGE_BYTES
+    """The (s, d) rows of the edge frame when the driver can finish them:
+    at most driver_row_bound(spark, EDGE_BYTES) edges (none when
+    broadcast is off), with non-null ids of one integral or string type.
+    None otherwise."""
     id_type = ek.schema["s"].dataType
-    if (
-        bound == 0
-        or id_type != ek.schema["d"].dataType
-        or not isinstance(id_type, (IntegralType, StringType))
+    if id_type != ek.schema["d"].dataType or not isinstance(
+        id_type, (IntegralType, StringType)
     ):
         return None
-    # coalesce(1): one task reads at most bound + 1 rows, in one job.
-    rows = ek.coalesce(1).limit(bound + 1).collect()
-    if len(rows) > bound or any(s is None or d is None for s, d in rows):
+    rows = collect_within_bound(ek, EDGE_BYTES)
+    if rows is None or any(s is None or d is None for s, d in rows):
         return None
     return rows
 
@@ -152,14 +146,16 @@ def connected_components(
         relation and nothing stays persisted;
       - otherwise (and always when the threshold is <= 0): distributed
         min-label propagation on `lineage.checkpointed_rounds`.
+    Any input that is not already a local relation (lsh_candidates'
+    driver finish returns one) is eagerly checkpointed first, so the
+    caller's pipeline runs exactly once although the distributed path
+    references it twice (forward + reversed) and the driver path
+    fetches from it. A local relation has no pipeline to protect and is
+    used as it is on either path.
     """
-    # Eagerly checkpoint the edge input first: the caller's pipeline
-    # (dedup_clusters feeds the full LSH candidate chain) then runs
-    # exactly once, although the distributed path references it twice
-    # (forward + reversed) and the driver path fetches from it.
-    ek = edges.select(
-        F.col(src).alias("s"), F.col(dst).alias("d")
-    ).localCheckpoint(eager=True)
+    ek = edges.select(F.col(src).alias("s"), F.col(dst).alias("d"))
+    if not is_local(ek):
+        ek = ek.localCheckpoint(eager=True)
     rows = _small_edge_list(ek)
     if rows is not None:
         free_local_checkpoint(ek)

@@ -8,19 +8,36 @@ level dedup family a training-data pipeline needs.
 Scale design (100 TB):
   - Shingle sets are made DISTINCT per document *before* exploding, so the
     shingle->doc inverted index carries no within-doc duplicates.
-  - MinHash signatures are computed map-side per row (higher-order
-    functions, no shuffle); only (band_key, doc_id) pairs — 4 small rows
-    per doc — are shuffled. Candidate pairs come from an equi-join on
-    band_key, which Catalyst executes as a shuffled hash join keyed on a
-    high-cardinality key (no skew for natural text).
+  - MinHash signatures (Broder, "On the resemblance and containment of
+    documents", 1997) hash every shingle occurrence map-side and take the
+    per-lane minimum in ONE groupBy(doc_id) shuffle, partially aggregated
+    before the exchange, so n_hashes longs per document cross the wire,
+    never the text.
+  - LSH candidate pairs come from bucket-and-unfold: group the band rows
+    by (band, band_key) and unfold each bucket's sorted doc list into
+    ordered pairs. No stage is all-pairs over the corpus; the pairs per
+    bucket are quadratic in the bucket, which is near-dup-clique-sized.
+    Signature sets within the broadcast bound finish that step on the
+    driver (lsh_candidates).
   - The O(pairs) Jaccard verification join only sees candidate pairs, not
     the full corpus cross product.
 """
 
 from __future__ import annotations
 
+from collections import Counter
+
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegralType, StringType
+
+from migrate_cassandra_to_mysql_spark.functions.localframe import (
+    collect_within_bound,
+    driver_row_bound,
+    local_frame,
+)
+
+from .components import EDGE_BYTES
 
 # Catalyst's InferFiltersFromGenerate adds a pre-Generate filter like
 # `size(G) > 0 AND isnotnull(G)` where G is the generator input. When G is a
@@ -76,19 +93,25 @@ def shingle_sets(docs: DataFrame, text_col: str = "text", k: int = 3) -> DataFra
 
 
 def _raw_shingles(docs: DataFrame, text_col: str, k: int) -> DataFrame:
-    """(doc_id, shingle) — one row per shingle occurrence (multiset)."""
+    """(doc_id, shingle) — one row per shingle occurrence (multiset).
+
+    No lambda: posexplode the shingle start tokens (the first
+    size - (k - 1) tokens; none for a null or shorter-than-k doc), then
+    join each start with its k - 1 successors by 0-based `get` (ANSI
+    rejects out-of-range brackets). Same rows as
+    transform(sequence(0, size - k), i -> concat_ws(' ', slice(toks,
+    i + 1, k))), without an interpreted lambda call per shingle.
+    """
     toks = docs.select(
         "doc_id", F.split(F.trim(F.col(text_col)), r"\s+").alias("toks")
     )
+    starts = F.expr(f"slice(toks, 1, greatest(size(toks) - {k - 1}, 0))")
     return toks.select(
+        "doc_id", "toks", F.posexplode(starts).alias("i", "t0")
+    ).select(
         "doc_id",
-        F.explode(
-            F.expr(
-                f"CASE WHEN size(toks) >= {k} THEN "
-                f"transform(sequence(0, size(toks) - {k}),"
-                f" i -> concat_ws(' ', slice(toks, i + 1, {k})))"
-                f" ELSE CAST(array() AS ARRAY<STRING>) END"
-            )
+        F.concat_ws(
+            " ", "t0", *[F.expr(f"get(toks, i + {j})") for j in range(1, k)]
         ).alias("shingle"),
     )
 
@@ -282,7 +305,7 @@ def minhash_signatures(
     The n_hashes hash family is n disjoint 4-hex-char slices of ONE md5 per
     shingle — 8x less hashing than seeding md5 per hash function, and the
     min-aggregation happens map-side (partial min before shuffle), so only
-    n_hashes short strings per document cross the wire. md5 keeps it
+    n_hashes bigint lanes per document cross the wire. md5 keeps it
     bit-portable to the DuckDB oracle; swap substring-of-md5 for xxhash64
     variants when oracle parity isn't needed.
 
@@ -322,28 +345,77 @@ def _signatures_from_shingles(sh: DataFrame, n_hashes: int) -> DataFrame:
             for g in range(1, n_groups)
         ],
     )
-    # Parse hex in 8-char (32-bit) words, one conv per PAIR of lanes, and
+    # Parse hex in 16-char (64-bit) words, one conv per FOUR lanes, and
     # split each word with shift/mask: conv's string parse is the per-row
-    # hot spot (measured ~2x on the signature aggregation vs 4-char-slice
-    # conv per lane), and int bit ops are free inside codegen. Lane values
-    # are bit-identical to the 4-hex-char definition the oracle uses:
-    # word = chars [w*8+1 .. w*8+8] => lane(2w) = word >> 16,
-    # lane(2w+1) = word & 0xFFFF.
-    words = {
-        w: F.conv(F.substring(f"m{w // 4}", (w % 4) * 8 + 1, 8), 16, 10).cast(
-            "long"
-        )
-        for w in range((n_hashes + 1) // 2)
-    }
+    # hot spot and long bit ops are free inside codegen. A negative
+    # to_base makes conv print the word as a signed decimal, so all 64
+    # bits fit a long. Lane values are bit-identical to the 4-hex-char
+    # definition the oracle uses: word w = chars [16w+1 .. 16w+16] of the
+    # md5 stream, lane h = (word[h // 4] >>> (48 - 16 * (h % 4))) & 0xFFFF.
+    # The words are their own projection: each feeds up to four lanes,
+    # so Catalyst keeps one conv per word instead of inlining it per lane.
+    words = m.select(
+        "doc_id",
+        *[
+            F.conv(F.substring(f"m{w // 2}", (w % 2) * 16 + 1, 16), 16, -10)
+            .cast("long")
+            .alias(f"w{w}")
+            for w in range((n_hashes + 3) // 4)
+        ],
+    )
 
     def lane(h: int):
-        word = words[h // 2]
-        return (
-            F.shiftright(word, 16) if h % 2 == 0 else word.bitwiseAND(F.lit(65535))
-        )
+        return F.shiftrightunsigned(
+            F.col(f"w{h // 4}"), 48 - 16 * (h % 4)
+        ).bitwiseAND(F.lit(0xFFFF))
 
-    return m.groupBy("doc_id").agg(
+    return words.groupBy("doc_id").agg(
         *[F.min(lane(h)).alias(f"mh{h}") for h in range(n_hashes)]
+    )
+
+
+def _lsh_on_driver(sig: DataFrame, n_bands: int, band_size: int) -> DataFrame | None:
+    """lsh_candidates' driver finish over the persisted signatures: the
+    (doc_a, doc_b, n_bands) rows as a local relation with the signatures'
+    id type, or None when the ids are not integral or string, the
+    signatures exceed driver_row_bound at (n_hashes + 1) * 8 bytes per
+    row, or the buckets would unfold more than driver_row_bound(spark,
+    EDGE_BYTES) pairs (the sum of C(|bucket|, 2), counted before any
+    pair is built)."""
+    spark = sig.sparkSession
+    id_type = sig.schema["doc_id"].dataType
+    if not isinstance(id_type, (IntegralType, StringType)):
+        return None
+    # 8 bytes for the id and for each of the n_hashes lanes
+    rows = collect_within_bound(sig, len(sig.columns) * 8)
+    if rows is None:
+        return None
+    buckets: dict = {}
+    for doc_id, *lanes in rows:
+        if doc_id is None:  # collect_set drops nulls
+            continue
+        for b in range(n_bands):
+            # concat_ws('|', ...) of the band's lanes, nulls skipped
+            key = "|".join(
+                str(v)
+                for v in lanes[b * band_size : (b + 1) * band_size]
+                if v is not None
+            )
+            buckets.setdefault((b, key), set()).add(doc_id)
+    groups = [sorted(ds) for ds in buckets.values() if len(ds) >= 2]
+    n_pairs = sum(len(ds) * (len(ds) - 1) // 2 for ds in groups)
+    if n_pairs > driver_row_bound(spark, EDGE_BYTES):
+        return None
+    counts: Counter = Counter()
+    for ds in groups:
+        for i, a in enumerate(ds):
+            for b in ds[i + 1 :]:
+                counts[a, b] += 1
+    t = id_type.simpleString()
+    return local_frame(
+        spark,
+        [(a, b, n) for (a, b), n in counts.items()],
+        f"doc_a {t}, doc_b {t}, n_bands bigint",
     )
 
 
@@ -356,35 +428,49 @@ def lsh_candidates(
 ) -> DataFrame:
     """LSH candidate pairs: band the signature, group same-band buckets.
 
-    Returns (doc_a, doc_b, n_bands) — pairs agreeing on >= 1 band. A pair's
+    Returns (doc_a, doc_b, n_bands) — pairs agreeing on >= 1 band, doc_a
+    < doc_b, n_bands the number of bands they share. A pair's
     probability of surfacing is 1-(1-s^band_size)^n_bands for Jaccard s,
-    the standard LSH S-curve. Only (doc_id, band, band_key) rows shuffle —
-    n_bands small rows per document regardless of text size.
+    the standard LSH S-curve (Leskovec, Rajaraman & Ullman, *Mining of
+    Massive Datasets* ch. 3).
 
-    Bucket-and-unfold, not a bands-to-bands self-join: grouping by
-    (band, band_key) and unfolding ordered pairs from each bucket's
-    sorted doc list is ONE single-consumer chain — no second join side to
-    recompute (the previous self-join form needed the band relation
-    persisted to avoid running the signature aggregation twice), one
-    exchange on the bucket key, and the pair count needs no DISTINCT: a
-    document has exactly one band_key per band, so a pair meets at most
-    once per band and count(*) IS the distinct-band count. Bucket arrays
-    are near-dup-clique-sized (docs agreeing on a band), orders of
-    magnitude smaller than a shingle posting list; genuinely adversarial
-    corpora (millions of identical docs) should exact-dedup by
-    fingerprint before LSH anyway.
+    EAGER: the signature job runs at call time. The signature table is
+    persisted (n_hashes longs per document, ~1e-4 of corpus size; every
+    consumer of the identical signature plan hits one materialization)
+    and then takes one of two paths, with the same rows on both:
+      - driver: when the signatures fit
+        localframe.driver_row_bound(spark, (n_hashes + 1) * 8) rows, the
+        ids are integral or string, and the buckets unfold at most
+        driver_row_bound(spark, components.EDGE_BYTES) pairs (the edge
+        bound of the connected-components driver finish these pairs
+        feed), one job fetches them and the buckets and pairs are built
+        in Python. The result is a local relation with the input's id
+        type.
+      - distributed (above either bound, and always when
+        spark.sql.autoBroadcastJoinThreshold <= 0): the chain below runs
+        over the persisted signatures, so the signature map stage still
+        runs once.
+
+    The distributed chain is bucket-and-unfold, not a bands-to-bands
+    self-join: grouping by (band, band_key) and unfolding ordered pairs
+    from each bucket's sorted doc list is ONE single-consumer chain with
+    three exchanges (doc_id for the signatures, the bucket key, the
+    pair), and the pair count needs no DISTINCT: a document has exactly
+    one band_key per band, so a pair meets at most once per band and
+    count(*) IS the distinct-band count. Bucket arrays are
+    near-dup-clique-sized; corpora with giant identical-content cliques
+    should exact-dedup by fingerprint before LSH anyway.
     """
-    n_bands = n_hashes // band_size
-    sig = minhash_signatures(docs, text_col, k, n_hashes)
-    # The signature table is the reusable dedup artifact — n_hashes longs
-    # per document, ~1e-4 of corpus size — and several catalog consumers
-    # derive from the identical signature plan (candidate pairs, cluster
-    # resolution, band retuning). Spark's cache manager keys on the
-    # canonicalized plan, so persisting here lets every such consumer hit
-    # one materialization instead of re-running corpus->shingle->md5->min.
     from pyspark.storagelevel import StorageLevel
 
-    sig = sig.persist(StorageLevel.MEMORY_AND_DISK)
+    n_bands = n_hashes // band_size
+    sig = minhash_signatures(docs, text_col, k, n_hashes).persist(
+        StorageLevel.MEMORY_AND_DISK
+    )
+    local = _lsh_on_driver(sig, n_bands, band_size)
+    if local is not None:
+        return local
+
     band_keys = [
         F.concat_ws(
             "|", *[F.col(f"mh{b * band_size + i}") for i in range(band_size)]

@@ -2025,9 +2025,10 @@ GROUP BY 1, 2
 )
 def minhash_lsh_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash (8 hashes) + LSH (4 bands x 2 rows) candidate pairs.
-    Signatures are computed map-side; only 4 band rows per doc shuffle,
-    then bucket-grouped pair unfolding (single chain, no self-join, no
-    persist — see operators/dedup.lsh_candidates).
+    Signatures are partially aggregated map-side and persisted; within
+    the broadcast bound the buckets and pairs are built on the driver
+    (a local relation), above it by bucket-grouped pair unfolding
+    (single chain, no self-join — see operators/dedup.lsh_candidates).
 
     spread=True kept here ONLY: the r4→r5 bench A/B showed minhash is the
     one catalog query whose CPU-bound shingle+hash map stage wins from the
@@ -2464,7 +2465,7 @@ def dedup_canonical_keep(spark: SparkSession, sf_dir: str) -> DataFrame:
     (operators/components.canonical_keep).
 
     Scale shape: everything up to clusters is the pinned LSH chain
-    (band equi-join, nothing all-pairs); the pick adds ONE id equi-join
+    (band buckets, nothing all-pairs); the pick adds ONE id equi-join
     (quality attaches) and ONE component-keyed window exchange with
     first_value over bounded near-dup clusters — no second join back,
     no re-shuffle of the corpus."""

@@ -105,9 +105,10 @@ def test_stats_match_corpus(spark, sf_dir, index_dir):
 
 
 def test_append_then_compact_lifecycle(spark, sf_dir, tmp_path):
-    """The daily-ingest loop at 100 TB: build + N appends accrete one
-    file per batch per bucket; compact_postings bin-packs them back
-    (zero shuffle, bucket layout preserved) and the index must answer
+    """The daily-ingest loop at 100 TB: the build writes the hash
+    buckets and each append adds one segment file (bucket=-1);
+    compact_postings folds the segment back into the buckets and
+    bin-packs them (bucket layout preserved) and the index must answer
     queries identically to a single-pass build — pinned row-for-row,
     plus the file-count audit (VERDICT r6 ask #5)."""
     import glob
