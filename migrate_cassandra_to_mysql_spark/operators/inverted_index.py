@@ -16,11 +16,11 @@ only the few bucket partitions its terms hash to:
   doclens/ingest_batch=B/  (doc_id, dl) for EVERY doc — incl. NULL/empty-
                        text docs that produce no postings; the n_docs source
   stats/               1 row (n_docs, sum_dl) — corpus-level BM25 constants
+  _layout.json         {"n_buckets": N} — the bucket count, chosen once
 
 No layer stores df: a query reads every posting of its terms anyway and
 counts df over them, so an append touches only its own documents and df
-cannot drift from the postings. (A `lexicon/` dir left by older writers
-is never read.)
+cannot drift from the postings.
 
 The segment is the small-write half of a log-structured layout: a batch
 append writes ONE file set (not one file per bucket it touches — 32 files
@@ -44,8 +44,13 @@ Buckets use the oracle-portable md5 bucket (functions/hashing.
 md5_token_bucket) so a Python-side literal term maps to its partition
 without touching the JVM; at 100 TB you would raise n_buckets to a few
 thousand so each partition stays file-sized, and the same pruning math
-holds. Query-time plan: the read lists only the probed bucket dirs and
-the segment (layout.read_parquet_retry's `partitions`), so planning cost
+holds. The count is a property of the index: build_inverted_index
+chooses it and records it in `_layout.json`, and every later writer
+and reader hashes with the recorded count (bucket_count), so no two
+calls can disagree on it.
+
+Query-time plan: the read lists only the probed bucket dirs and the
+segment (layout.read_parquet_retry's `partitions`), so planning cost
 is O(query terms), not O(n_buckets); the bucket set plus the segment's
 -1 becomes parquet PartitionFilters, the term set is a pushed data
 filter inside each bucket, the query terms' dfs are one row of counts over
@@ -63,6 +68,7 @@ path must equal the inline oracle-checked path row for row.
 from __future__ import annotations
 
 import hashlib
+import json
 import os
 from collections.abc import Sequence
 
@@ -74,6 +80,10 @@ from migrate_cassandra_to_mysql_spark.functions.hashing import md5_token_bucket
 from migrate_cassandra_to_mysql_spark.operators import tombstones
 
 DEFAULT_BUCKETS = 32
+
+# Beside the snapshot manifest: the index's bucket count, written once
+# by the build (or a shard merge) and read by every other entry point.
+_LAYOUT = "_layout.json"
 
 # The bucket value of the append segment (unbucketed postings awaiting
 # the compaction that folds them into their hash buckets).
@@ -103,6 +113,26 @@ def term_bucket(term: str, n_buckets: int = DEFAULT_BUCKETS) -> int:
     return int(hashlib.md5(term.encode()).hexdigest()[:4], 16) % n_buckets
 
 
+def bucket_count(index_dir: str) -> int:
+    """The bucket count recorded for the index at index_dir — a
+    driver-side file read, no Spark job. An index with no record (its
+    first writer was a stream) hashes with DEFAULT_BUCKETS."""
+    try:
+        with open(os.path.join(index_dir, _LAYOUT)) as f:
+            return int(json.load(f)["n_buckets"])
+    except FileNotFoundError:
+        return DEFAULT_BUCKETS
+
+
+def _record_bucket_count(index_dir: str, n_buckets: int) -> None:
+    """Write `_layout.json` atomically (temp file + os.replace, like the
+    snapshot manifest)."""
+    tmp = os.path.join(index_dir, _LAYOUT + ".tmp")
+    with open(tmp, "w") as f:
+        json.dump({"n_buckets": n_buckets}, f)
+    os.replace(tmp, os.path.join(index_dir, _LAYOUT))
+
+
 def _tokenized(docs: DataFrame, text_col: str = "text") -> DataFrame:
     """(doc_id, dl, toks) — the one tokenization pass every inversion
     derives from. dl matches the inline bm25_topk_search semantics
@@ -118,15 +148,19 @@ def _tokenized(docs: DataFrame, text_col: str = "text") -> DataFrame:
 
 
 def _postings_from_tokenized(
-    toks: DataFrame, n_buckets: int = DEFAULT_BUCKETS
+    toks: DataFrame, n_buckets: int | None
 ) -> DataFrame:
-    return (
+    """(doc_id, dl, tok, tf), plus the tok's hash bucket unless
+    n_buckets is None (the append segment is unbucketed)."""
+    postings = (
         toks.select("doc_id", "dl", F.explode("toks").alias("tok"))
         .groupBy("doc_id", "dl", "tok")
         .agg(F.count(F.lit(1)).cast("long").alias("tf"))
-        .withColumn(
-            "bucket", md5_token_bucket(F.col("tok"), n_buckets).cast("int")
-        )
+    )
+    if n_buckets is None:
+        return postings
+    return postings.withColumn(
+        "bucket", md5_token_bucket(F.col("tok"), n_buckets).cast("int")
     )
 
 
@@ -158,25 +192,6 @@ def _doclens_write(toks, mode, doclens_dir):
     )
 
 
-def _check_buckets(postings_dir: str, n_buckets: int) -> None:
-    """Fail loudly if the layer holds a bucket this n_buckets cannot
-    produce: the index was built with more buckets, so hashing the
-    segment's tokens with this count would file them where no query
-    probes. A driver-side listing, no Spark job."""
-    over = sorted(
-        b
-        for name in os.listdir(postings_dir)
-        if name.startswith("bucket=")
-        and (b := int(name.split("=", 1)[1])) >= n_buckets
-    )
-    if over:
-        raise ValueError(
-            f"{postings_dir} holds bucket(s) {over[:5]} >= n_buckets="
-            f"{n_buckets}: the index was built with more buckets. Pass "
-            "the n_buckets it was built with."
-        )
-
-
 def build_inverted_index(
     docs: DataFrame,
     index_dir: str,
@@ -186,7 +201,9 @@ def build_inverted_index(
     """Invert the corpus into the on-disk layout above. One corpus-scan
     job (tokenize → explode → partial-agg tf) plus a doclens pass over
     the same tokenized frame, then stats is a one-row aggregation over
-    the persisted doclens.
+    the persisted doclens. The one place the bucket count is chosen:
+    `n_buckets` is recorded in `_layout.json`, and every later append,
+    stream, compaction and search of the index reads it from there.
 
     Both data layers are written to `.new` and promoted through
     layout.swap_live_dir, so the live names are VERSIONED SYMLINKS from
@@ -223,13 +240,13 @@ def build_inverted_index(
     )
     for part in ("postings", "doclens"):
         swap_live_dir(index_dir, part)
+    _record_bucket_count(index_dir, n_buckets)
     _refresh_derived(docs.sparkSession, index_dir)
 
 
 def append_to_inverted_index(
     docs_new: DataFrame,
     index_dir: str,
-    n_buckets: int = DEFAULT_BUCKETS,
     text_col: str = "text",
 ) -> None:
     """Incremental index maintenance — the daily-ingest path, O(batch):
@@ -248,9 +265,8 @@ def append_to_inverted_index(
     within each write task, one file per task — no repartition, so a
     small batch (one task after AQE's shuffle coalescing) adds exactly
     one postings file however many buckets its tokens hash to.
-    compact_postings later folds the segment into the hash buckets.
-    `n_buckets` is the count the index was built with; an index holding
-    a bucket at or above it fails loudly here, before any write.
+    compact_postings later folds the segment into the hash buckets with
+    the index's recorded bucket count, so the append never hashes.
 
     Appends write INTO the current live version dir (layout.ensure_live_dir
     resolves the versioned symlink; a legacy real-dir store is adopted as
@@ -274,9 +290,8 @@ def append_to_inverted_index(
     # tombstones anyway — O(index) rewrite, paid only when a re-add
     # actually hits, which resets the layer), then append cleanly.
     if tombstones.hits(spark, index_dir, docs_new, "doc_id"):
-        compact_postings(spark, index_dir, n_buckets=n_buckets)
+        compact_postings(spark, index_dir)
     postings = ensure_live_dir(index_dir, "postings")
-    _check_buckets(postings, n_buckets)
     # Three tokenize passes, deliberately unpersisted — see
     # build_inverted_index (the cache A/B loss) — submitted together.
     toks = _tokenized(docs_new, text_col)
@@ -292,8 +307,7 @@ def append_to_inverted_index(
         )
     run_concurrently(
         spark,
-        lambda: _postings_from_tokenized(toks, n_buckets)
-        .select("doc_id", "dl", "tok", "tf")
+        lambda: _postings_from_tokenized(toks, None)
         .sortWithinPartitions("tok", "doc_id")
         .write.mode("append")
         .parquet(f"{postings}/{SEGMENT}/ingest_batch=0"),
@@ -379,16 +393,15 @@ def compact_postings(
     spark: SparkSession,
     index_dir: str,
     target_file_bytes: int = 128 * 1024 * 1024,
-    n_buckets: int = DEFAULT_BUCKETS,
 ) -> dict:
     """Maintenance pass after N incremental appends and/or streamed
     batches: every postings/bucket=N's accumulated ingest_batch=*
     partitions merge back into a bin-packed bucket=N/ingest_batch=0
     (streaming adds a partition per micro-batch; query cost then grows
     with file count, not posting volume), and the append segment's rows
-    fold into their hash buckets in the same rewrite, so no bucket=-1
-    survives a compaction. `n_buckets` is the count the index was built
-    with; a bucket dir at or above it fails loudly before any write.
+    fold into their hash buckets (hashed with the index's recorded
+    bucket count) in the same rewrite, so no bucket=-1 survives a
+    compaction.
 
     Both layers go through layout.merge_sharded_layer, the one
     layer-rewrite primitive: the postings rewrite merges the live
@@ -419,8 +432,6 @@ def compact_postings(
     )
 
     live = os.path.realpath(f"{index_dir}/postings")
-    if os.path.isdir(live):
-        _check_buckets(live, n_buckets)
     fold = f"{index_dir}/postings.fold"
     # the tombstone purge rides the rewrite compaction does anyway; the
     # emptied tombstone layer joins the same manifest commit
@@ -437,7 +448,7 @@ def compact_postings(
                 "dl",
                 "tok",
                 "tf",
-                md5_token_bucket(F.col("tok"), n_buckets)
+                md5_token_bucket(F.col("tok"), bucket_count(index_dir))
                 .cast("int")
                 .alias("bucket"),
                 F.lit(0).alias("ingest_batch"),
@@ -508,44 +519,38 @@ def merge_indexes(
     pinned at the query level in tests and by the sharded-merge
     catalog row's plain-BM25 oracle.
 
-    Loud rejections (each reads one or two narrow columns into
-    vocabulary- or doc-count-sized output, cheap next to the posting
-    move):
-    - a token living in DIFFERENT buckets across shards (shards built
-      with different n_buckets — merged probes would miss rows);
+    Loud rejections, before any posting moves:
+    - shards that record different bucket counts (they hash a token to
+      different buckets — merged probes would miss rows): a driver-side
+      comparison of their `_layout.json`, no Spark job;
     - a doc_id present in more than one shard after purges (shards
       must partition the corpus; a doc indexed twice would
-      double-count df/tf).
+      double-count df/tf): one doc-count-sized probe job.
 
-    Operational contract: shards quiescent during the merge (same as
-    compaction); dst_dir is a fresh index directory."""
+    The merged index records the shards' bucket count. Operational
+    contract: shards quiescent during the merge (same as compaction);
+    dst_dir is a fresh index directory."""
     from migrate_cassandra_to_mysql_spark.operators.layout import (
         merge_sharded_layer,
         read_parquet_retry,
-        run_concurrently,
         swap_live_dir,
     )
 
     src_dirs = list(src_dirs)
     if not src_dirs:
         raise ValueError("merge_indexes needs at least one source index")
+    counts = {d: bucket_count(d) for d in src_dirs}
+    if len(set(counts.values())) > 1:
+        raise ValueError(
+            f"shards record different bucket counts ({counts}), so they "
+            "hash the same token to different buckets. Rebuild the "
+            "divergent shard(s) with a uniform bucket count before "
+            "merging."
+        )
     layers = [tombstones.resolve(d, LAYERS) for d in src_dirs]
     purges = [tombstones.mask(spark, lay, "doc_id") for lay in layers]
 
-    # 1) bucket-hash compatibility: every shard must map each token to
-    # the SAME bucket (a check over the shards' distinct (bucket, tok)).
-    # Segment rows are unbucketed: a token sits in the segment and in
-    # its hash bucket alike.
-    toks_all = None
-    for lay in layers:
-        one = (
-            read_parquet_retry(spark, lay["postings"], SCHEMAS["postings"])
-            .where(F.col("bucket") != SEGMENT_BUCKET)
-            .select("bucket", "tok")
-        )
-        toks_all = one if toks_all is None else toks_all.unionByName(one)
-
-    # 2) corpus disjointness (after each shard's own tombstone purge).
+    # corpus disjointness (after each shard's own tombstone purge)
     dl_frames = [
         purge(
             read_parquet_retry(spark, lay["doclens"], SCHEMAS["doclens"])
@@ -556,31 +561,13 @@ def merge_indexes(
     for f in dl_frames[1:]:
         dl_all = dl_all.unionByName(f)
 
-    # The two integrity probes read different layers and are
-    # independent — submit both collects concurrently (guide §2.6) and
-    # evaluate the results in the documented order so error precedence
-    # is unchanged.
-    split_toks, dups = run_concurrently(
-        spark,
-        lambda: toks_all.distinct()
-        .groupBy("tok")
-        .agg(F.countDistinct("bucket").alias("nb"))
-        .where(F.col("nb") > 1)
-        .limit(5)
-        .collect(),
-        lambda: dl_all.groupBy("doc_id")
+    dups = (
+        dl_all.groupBy("doc_id")
         .agg(F.count(F.lit(1)).alias("n"))
         .where(F.col("n") > 1)
         .limit(5)
-        .collect(),
+        .collect()
     )
-    if split_toks:
-        raise ValueError(
-            "shards hash the same token to different buckets (e.g. "
-            f"{sorted(r['tok'] for r in split_toks)}) — they were built "
-            "with different n_buckets. Rebuild the divergent shard(s) "
-            "with a uniform bucket count before merging."
-        )
     if dups:
         raise ValueError(
             "doc_id(s) present in more than one shard (e.g. "
@@ -590,7 +577,7 @@ def merge_indexes(
             "want) and re-run."
         )
 
-    # 3) posting + doclens moves: the generic zero-shuffle shard move
+    # posting + doclens moves: the generic zero-shuffle shard move
     # (layout.merge_sharded_layer): per-bucket union purged per shard,
     # bin-packed by listed bytes; doclens is the flat form (one row per
     # doc — billions at the design point; never force a single file).
@@ -620,6 +607,7 @@ def merge_indexes(
     )
     for part in ("postings", "doclens"):
         swap_live_dir(dst_dir, part)
+    _record_bucket_count(dst_dir, counts[src_dirs[0]])
     # stats recompute over the merged doclens + ONE manifest commit
     # (the same refresh path build and delete use).
     _refresh_derived(spark, dst_dir)
@@ -632,7 +620,6 @@ def bm25_search(
     terms: Sequence[str],
     k: int = 20,
     score_sql: str | None = None,
-    n_buckets: int = DEFAULT_BUCKETS,
     allowed: DataFrame | None = None,
 ) -> DataFrame:
     """Top-k BM25 over the persisted index. `score_sql` is the scoring
@@ -651,9 +638,10 @@ def bm25_search(
     fits (flipping to a shuffled semi-join when a 100 TB filter set
     outgrows that — correct either way).
 
-    Plan: the read lists only the probed bucket dirs and the append
-    segment (bucket=-1) that exist, so planning lists O(terms) dirs
-    however many buckets the index has; probe-bucket PartitionFilters +
+    Plan: the terms hash with the index's recorded bucket count
+    (bucket_count), and the read lists only the probed bucket dirs and
+    the append segment (bucket=-1) that exist, so planning lists
+    O(terms) dirs however many buckets the index has; probe-bucket PartitionFilters +
     term-IN pushed filter on the postings scan; vocabulary never loads
     beyond the probed buckets' and the segment's query-term rows. The
     terms' dfs are one row of conditional counts over those masked
@@ -683,6 +671,7 @@ def bm25_search(
         )
 
         score_sql = _bm25_score_sql(len(terms))
+    n_buckets = bucket_count(index_dir)
     # the terms' hash buckets plus the append segment, which may hold
     # any term
     buckets = [

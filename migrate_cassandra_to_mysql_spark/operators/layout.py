@@ -524,6 +524,19 @@ def _maintainer_lock(parent_dir: str, part: str, lock_stale_seconds: float):
     return _held()
 
 
+def _flip_live(parent, part: str, target: str) -> None:
+    """Point the live name `parent/part` at the sibling `target`
+    atomically: a temp symlink `.{part}.ptr.tmp` (a leftover one is
+    replaced), renamed over the live name by os.replace."""
+    import os as _os
+
+    tmp = parent / f".{part}.ptr.tmp"
+    if tmp.is_symlink() or tmp.exists():
+        tmp.unlink()
+    _os.symlink(target, tmp)
+    _os.replace(tmp, parent / part)
+
+
 def ensure_live_dir(
     parent_dir: str,
     part: str,
@@ -582,11 +595,7 @@ def ensure_live_dir(
             live.rename(vdir)  # legacy adoption (one-time alias window)
         else:
             vdir.mkdir()
-        tmp = parent / f".{part}.ptr.tmp"
-        if tmp.is_symlink() or tmp.exists():
-            tmp.unlink()
-        _os.symlink(vdir.name, tmp)
-        _os.replace(tmp, live)  # atomic flip
+        _flip_live(parent, part, vdir.name)
         return str(vdir)
 
 
@@ -740,11 +749,7 @@ def swap_live_dir(
         vdir = parent / f"{part}.v{n}"
         new.rename(vdir)
         versions[n] = vdir
-        tmp = parent / f".{part}.ptr.tmp"
-        if tmp.is_symlink() or tmp.exists():
-            tmp.unlink()
-        _os.symlink(vdir.name, tmp)
-        _os.replace(tmp, live)  # atomic flip
+        _flip_live(parent, part, vdir.name)
         if prev_target is not None:
             # Start the GC grace clock at SUPERSESSION, not build time:
             # without this, a version that stayed live longer than the
@@ -900,15 +905,11 @@ def doctor_live_store(
             if not (parent / target).exists():
                 if part_versions:
                     best = part_versions[max(part_versions)]
-
-                    def repoint(b=best, lv=live):
-                        tmp = parent / f".{lv.name}.ptr.tmp"
-                        if tmp.is_symlink() or tmp.exists():
-                            tmp.unlink()
-                        _os.symlink(b.name, tmp)
-                        _os.replace(tmp, lv)
-
-                    fix("broken_symlink", live, repoint)
+                    fix(
+                        "broken_symlink",
+                        live,
+                        lambda b=best: _flip_live(parent, part, b.name),
+                    )
                 else:
                     note(part, "broken_symlink", live, False)
         elif live.exists() and part_versions:
@@ -919,15 +920,11 @@ def doctor_live_store(
             # versions with no live pointer at all (manually deleted):
             # repoint to the highest surviving version
             best = part_versions[max(part_versions)]
-
-            def relink(b=best, lv=live):
-                tmp = parent / f".{lv.name}.ptr.tmp"
-                if tmp.is_symlink() or tmp.exists():
-                    tmp.unlink()
-                _os.symlink(b.name, tmp)
-                _os.replace(tmp, lv)
-
-            fix("missing_live", live, relink)
+            fix(
+                "missing_live",
+                live,
+                lambda b=best: _flip_live(parent, part, b.name),
+            )
         # orphan versions: re-read the pointer (repairs above may have
         # changed it)
         current = (

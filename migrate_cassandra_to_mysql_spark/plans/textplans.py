@@ -1563,8 +1563,8 @@ def bm25_sharded_merge_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: the merge is the index-maintenance workflow at 100 TB
     (build shards where the data lands, consolidate for serving); its
     cost is one posting-volume rewrite with driver-side file listing —
-    no corpus scan, no wide exchange — plus the bucket-consistency guard
-    over the postings' (bucket, tok) and the doc-count-sized
+    no corpus scan, no wide exchange — plus a driver-side comparison of
+    the shards' recorded bucket counts and the doc-count-sized
     disjointness guard. Serving
     on the merged index is byte-identical to bm25_persisted_topk's
     plan: term-bucket PartitionFilters + pushed term set. Build+merge

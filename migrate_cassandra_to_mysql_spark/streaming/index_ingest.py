@@ -49,11 +49,15 @@ own compactors, both a one-shard layout.merge_sharded_layer) merge each
 partition's accumulated ingest_batch layers back into a single
 ingest_batch=0 (zero shuffle, rename-swap), for streamed and
 batch-appended indexes alike; compact_postings also folds the batch
-appends' unbucketed segment (bucket=-1) into the hash buckets. A
-micro-batch here still writes one postings file per bucket it touches. Run them while ingest is quiescent — the
-same operational contract as any maintenance window: a replay of an
-uncommitted batch whose partitions were just merged would re-create
-them.
+appends' unbucketed segment (bucket=-1) into the hash buckets. Run
+them while ingest is quiescent — the same operational contract as any
+maintenance window: a replay of an uncommitted batch whose partitions
+were just merged would re-create them.
+
+A micro-batch here still writes one postings file per bucket it
+touches, hashing with the bucket count the index recorded at build
+(inverted_index.bucket_count; DEFAULT_BUCKETS for an index the stream
+creates).
 """
 
 from __future__ import annotations
@@ -256,7 +260,6 @@ def stream_docs_into_inverted_index(
     source_dir: str,
     checkpoint_dir: str,
     index_dir: str,
-    n_buckets: int = inv.DEFAULT_BUCKETS,
     text_col: str = "text",
 ) -> list[int]:
     """Drain all available document files from source_dir into the
@@ -265,8 +268,9 @@ def stream_docs_into_inverted_index(
     no-new-data restart — the derived layers are then left untouched).
 
     Per micro-batch: one inversion job (the same encode_postings the
-    batch paths use, so rows are bit-identical), one dynamic-overwrite
-    partitioned write per layer. Batch id B writes ingest_batch=B+1 —
+    batch paths use, so rows are bit-identical, hashed with the index's
+    recorded bucket count — inverted_index.bucket_count, read once on
+    the driver), one dynamic-overwrite partitioned write per layer. Batch id B writes ingest_batch=B+1 —
     0 is the batch build/append/compaction layer, which micro-batch 0's
     dynamic overwrite must never clobber. The stats row is recomputed
     ONCE after the drain, from the doclens layer (a replayed batch
@@ -275,6 +279,7 @@ def stream_docs_into_inverted_index(
     for layer in ("postings", "doclens"):
         _validate_ingest_layout(f"{index_dir}/{layer}")
     _check_batch_id_offset_upgrade(checkpoint_dir, index_dir)
+    n_buckets = inv.bucket_count(index_dir)
     processed: list[int] = []
 
     def handle(df: DataFrame, batch_id: int) -> None:

@@ -12,6 +12,8 @@ import glob
 import pytest
 from pyspark.sql import functions as F
 
+from migrate_cassandra_to_mysql_spark.functions.hashing import md5_token_bucket
+from migrate_cassandra_to_mysql_spark.functions.localframe import local_frame
 from migrate_cassandra_to_mysql_spark.operators import inverted_index
 from migrate_cassandra_to_mysql_spark.plans.textplans import (
     _BM25_TERMS,
@@ -167,6 +169,55 @@ def test_stream_rejects_legacy_mixed_depth_layout(spark, sf_dir, tmp_path):
     docs.coalesce(1).write.mode("append").parquet(src)
     with pytest.raises(ValueError, match="legacy"):
         stream_docs_into_inverted_index(spark, src, ckpt, idx)
+
+
+def test_stream_into_a_64_bucket_index_hashes_with_its_count(spark, tmp_path):
+    """The stream hashes with the bucket count the index recorded at
+    build: terms whose 32- and 64-bucket hashes differ are found by
+    every search, with a single 64-bucket build's scores, before and
+    after compaction."""
+    src, ckpt = str(tmp_path / "src"), str(tmp_path / "ckpt")
+    idx, ref = str(tmp_path / "idx"), str(tmp_path / "ref")
+    schema = "doc_id long, text string"
+    terms = ("zeta", "sigma", "theta")
+    assert all(
+        inverted_index.term_bucket(t, 32) != inverted_index.term_bucket(t, 64)
+        for t in terms
+    )
+    built = [
+        (i, f"alpha w{i % 5}" + (" zeta" if i % 4 == 0 else ""))
+        for i in range(20)
+    ]
+    streamed = [(100, "zeta sigma"), (101, "theta zeta theta")]
+    inverted_index.build_inverted_index(
+        local_frame(spark, built, schema), idx, n_buckets=64
+    )
+    local_frame(spark, streamed, schema).coalesce(1).write.parquet(src)
+    assert len(stream_docs_into_inverted_index(spark, src, ckpt, idx)) == 1
+    misfiled = (
+        spark.read.parquet(f"{idx}/postings")
+        .where(F.col("bucket") != md5_token_bucket(F.col("tok"), 64))
+        .count()
+    )
+    assert misfiled == 0
+    inverted_index.build_inverted_index(
+        local_frame(spark, built + streamed, schema), ref, n_buckets=64
+    )
+
+    def served(d):
+        return {
+            t: [
+                (r["doc_id"], r["n_hits"], r["bm25"])
+                for r in inverted_index.bm25_search(spark, d, [t]).collect()
+            ]
+            for t in terms
+        }
+
+    want = served(ref)
+    assert all({100, 101} & {doc for doc, _, _ in want[t]} for t in terms)
+    assert served(idx) == want
+    inverted_index.compact_postings(spark, idx)
+    assert served(idx) == want
 
 
 class TestVectorIngest:

@@ -12,6 +12,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from migrate_cassandra_to_mysql_spark.functions.hashing import md5_token_bucket
+from migrate_cassandra_to_mysql_spark.functions.localframe import local_frame
 from migrate_cassandra_to_mysql_spark.operators import inverted_index
 from migrate_cassandra_to_mysql_spark.plans.textplans import (
     _BM25_TERMS,
@@ -135,8 +136,9 @@ def test_append_then_compact_lifecycle(spark, sf_dir, tmp_path):
     after = n_files(inc_dir)
     assert stats["files_in"] == before
     assert stats["files_out"] == after
-    # 4 write batches -> ~4 files per bucket; compaction packs each
-    # bucket back to 1 (tiny partitions, one target bin)
+    # the build's files per bucket plus one segment file per append;
+    # compaction folds the segment and packs each bucket back to 1
+    # (tiny partitions, one target bin)
     assert after < before
     assert after == stats["partitions"]
 
@@ -664,6 +666,59 @@ def test_merge_rejects_bucket_count_mismatch(spark, sf_dir, tmp_path_factory):
         inverted_index.merge_indexes(
             spark, [a, b], str(tmp_path_factory.mktemp("merged"))
         )
+
+
+def test_merge_rejects_recorded_count_mismatch_before_any_job(spark, tmp_path):
+    """Shards that record different bucket counts are rejected by a
+    driver-side comparison, before any Spark job runs."""
+    a, b, m = (str(tmp_path / n) for n in ("a", "b", "m"))
+    schema = "doc_id long, text string"
+    inverted_index.build_inverted_index(
+        local_frame(spark, [(1, "zeta sigma")], schema), a
+    )
+    inverted_index.build_inverted_index(
+        local_frame(spark, [(2, "zeta theta")], schema), b, n_buckets=64
+    )
+    sc = spark.sparkContext
+    sc.setJobGroup("merge.count_mismatch", "merge.count_mismatch")
+    try:
+        with pytest.raises(ValueError, match="different buckets"):
+            inverted_index.merge_indexes(spark, [a, b], m)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup("merge.count_mismatch") == []
+    assert not os.path.exists(m)
+
+
+def test_merge_of_64_bucket_shards_serves_like_one_64_bucket_build(
+    spark, sf_dir, tmp_path
+):
+    docs = T(spark, sf_dir, "documents")
+    a, b, m, ref = (str(tmp_path / n) for n in ("a", "b", "m", "ref"))
+    inverted_index.build_inverted_index(
+        docs.where(F.col("doc_id") % 2 == 0), a, n_buckets=64
+    )
+    inverted_index.build_inverted_index(
+        docs.where(F.col("doc_id") % 2 == 1), b, n_buckets=64
+    )
+    inverted_index.build_inverted_index(docs, ref, n_buckets=64)
+    inverted_index.merge_indexes(spark, [a, b], m)
+    assert inverted_index.bucket_count(m) == 64
+    assert max(
+        r["bucket"]
+        for r in spark.read.parquet(f"{m}/postings").select("bucket").collect()
+    ) >= 32
+
+    def serve(idx, terms):
+        return [
+            (r["doc_id"], r["n_hits"], r["bm25"])
+            for r in inverted_index.bm25_search(spark, idx, terms).collect()
+        ]
+
+    for terms in (_BM25_TERMS, ["spark", "join"], ["window"]):
+        want = serve(ref, terms)
+        assert want
+        assert serve(m, terms) == want
 
 
 def test_merge_three_random_shards_equals_single_build(

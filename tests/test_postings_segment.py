@@ -4,15 +4,14 @@ batch append writes its postings as one unbucketed file set under
 compact_postings folds it into the hash buckets. Pinned here: the file
 count of a small append, job-free search planning on layers with more
 partition dirs than Spark lists without a job, row-identical serving
-before and after the fold, deletes and re-adds across it, shard merges
-that carry it, and the loud n_buckets check."""
+before and after the fold, deletes and re-adds across it, and shard
+merges that carry it."""
 
 from __future__ import annotations
 
 import glob
 import os
 
-import pytest
 from pyspark.sql import functions as F
 
 from migrate_cassandra_to_mysql_spark.functions.hashing import md5_token_bucket
@@ -115,14 +114,13 @@ def test_search_planning_lists_only_probed_partitions(spark, sf_dir, tmp_path):
     inverted_index.append_to_inverted_index(
         local_frame(spark, [(1000, "t1 t2 zz")], "doc_id long, text string"),
         inv,
-        n_buckets=64,
     )
     assert len(glob.glob(f"{inv}/postings/bucket=*")) > 33
     bm25, n_bm25 = _jobs(
         spark,
         "segment.bm25_plan_64",
         lambda: inverted_index.bm25_search(
-            spark, inv, ["t1", "t2", "zz"], k=5, n_buckets=64
+            spark, inv, ["t1", "t2", "zz"], k=5
         ),
     )
     plan = bm25._jdf.queryExecution().executedPlan().toString()
@@ -258,11 +256,9 @@ def test_tombstoned_readd_compacts_through_the_segment(spark, sf_dir, tmp_path):
 
 
 def test_merge_keeps_shard_segments_searchable(spark, sf_dir, tmp_path):
-    """Shards with appends merge: the bucket-consistency probe skips
-    segment rows (a token legitimately sits in bucket=-1 and in its hash
-    bucket), the merged index keeps the union of the segments as its
-    own segment, and serves like one build before and after its
-    compaction folds it."""
+    """Shards with appends merge: the merged index keeps the union of
+    the segments as its own segment, and serves like one build before
+    and after its compaction folds it."""
     docs = T(spark, sf_dir, "documents")
     a, b, m, ref = (str(tmp_path / n) for n in ("a", "b", "m", "ref"))
     part = F.col("doc_id") % 4
@@ -287,21 +283,3 @@ def test_merge_keeps_shard_segments_searchable(spark, sf_dir, tmp_path):
     assert not _has_segment(m)
     assert _all_served(spark, m) == want
 
-
-def test_fewer_buckets_than_the_index_fails_loudly(spark, tmp_path):
-    d = str(tmp_path / "idx")
-    text = " ".join(f"w{i}" for i in range(200))
-    inverted_index.build_inverted_index(
-        local_frame(spark, [(1, text)], "doc_id long, text string"), d
-    )
-    inverted_index.append_to_inverted_index(
-        local_frame(spark, [(2, "w1 w2")], "doc_id long, text string"), d
-    )
-    before = sorted(_postings_files(d))
-    batch = local_frame(spark, [(3, "w3")], "doc_id long, text string")
-    with pytest.raises(ValueError, match="n_buckets=16"):
-        inverted_index.append_to_inverted_index(batch, d, n_buckets=16)
-    with pytest.raises(ValueError, match="n_buckets=16"):
-        inverted_index.compact_postings(spark, d, n_buckets=16)
-    assert sorted(_postings_files(d)) == before
-    assert _has_segment(d)
